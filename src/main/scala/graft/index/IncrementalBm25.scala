@@ -46,7 +46,7 @@ import graft.search.Bm25
   * (Lucene's exact deleted-doc behavior). Replacing a document is
   * delete + append under the document's next version id.
   */
-object IncrementalBm25 {
+object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
 
   // v2: commit protocol change (stats versions publish via the atomic
   // _COMMITTED marker) — v1 artifacts carry no marker and must not be
@@ -71,33 +71,13 @@ object IncrementalBm25 {
     (dfreq, corpus)
   }
 
-  private def statsBase(root: String) = s"$root/stats"
+  // the commit base `stats/` CARRIES the merged stats parquet in each
+  // version dir (the directory appears as soon as the write starts, so
+  // only the marker commits); after the first [[tailFold]] the manifest
+  // rides the same dir and the stats payload keeps riding every version
   private def statsDir(root: String, v: Int) =
-    SegmentStore.versionDir(statsBase(root), v)
+    SegmentStore.versionDir(commitBase(root), v)
   private def segDir(root: String, k: Int) = s"$root/seg/$k"
-
-  /** Committed version — [[SegmentStore]] protocol over `stats/` (here
-    * the version dirs CARRY the merged stats parquet: the directory
-    * appears as soon as the write starts, so only the marker commits). */
-  def version(root: String): Int = SegmentStore.version(statsBase(root))
-
-  // ---- Manifest-addressed segment resolution (tail-fold support) ----
-  // Same design as [[IncrementalIvf]]'s (see the [[SegmentStore]]
-  // manifest section): positional `seg/0..v-1` until the first
-  // [[tailFold]] publishes a manifest inside the stats version dir; the
-  // manifest then IS the postings-segment list, and the stats payload
-  // keeps riding every version as before.
-
-  private def entryList(root: String): Seq[SegmentStore.ManifestEntry] =
-    SegmentStore.currentManifest(statsBase(root)) match {
-      case Some(m) => m.entries
-      case None => (0 until version(root))
-        .map(k => SegmentStore.ManifestEntry(s"seg/$k", k.toLong))
-    }
-
-  /** Read fan-in — the read-amplification dial ([[tailFoldIfNeeded]]'s
-    * trigger); the version clock stops reflecting it after folds. */
-  def fanIn(root: String): Int = entryList(root).size
 
   /** Operational health of a mutable BM25 root — the gauge that makes
     * the family's STALE-STATS contract operable: deletes/upserts/partial
@@ -114,19 +94,17 @@ object IncrementalBm25 {
     * serving-path one. */
   def stats(spark: SparkSession, root: String,
             idCol: String): Map[String, Long] = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
+    val v = requireInit(root)
     val statsNDocs = spark.read.parquet(s"${statsDir(root, v)}/corpus")
       .select(col("n_docs")).head().getLong(0)
     val liveNDocs = filterTombs(spark, root,
-        readSegsTagged(spark, root, v).select(col(idCol), col("__seg")),
-        idCol)
+        readSegsTagged(spark, root).select(col(idCol), col("__seg")),
+        Seq(idCol))
       .select(col(idCol)).distinct().count()
-    val nTombs = SegmentStore.tombIds(spark, s"$root/tombs", tombRebase(root))
-      .map(_.count()).getOrElse(0L)
+    val nTombs = tombs(spark, root).map(_.count()).getOrElse(0L)
     Map(
       "index_version" -> v.toLong,
-      "tombstone_ledger_version" -> SegmentStore.tombVersion(s"$root/tombs").toLong,
+      "tombstone_ledger_version" -> SegmentStore.tombVersion(tombsBase(root)).toLong,
       "read_fan_in" -> fanIn(root).toLong,
       "n_tombstoned_ids" -> nTombs,
       "stats_n_docs" -> statsNDocs,
@@ -134,50 +112,36 @@ object IncrementalBm25 {
       "stats_drift_docs" -> (statsNDocs - liveNDocs))
   }
 
-  private def tombRebase(root: String): Int =
-    SegmentStore.currentManifest(statsBase(root)).map(_.tombRebase)
-      .getOrElse(0)
-
-  /** Logical number of the NEXT segment — the horizon a delete committed
-    * now carries (strictly above every live posting's tag; see
-    * [[IncrementalIvf.logicalNext]] for the fold-sparing argument). */
-  private def logicalNext(root: String): Long =
-    SegmentStore.currentManifest(statsBase(root)).map(_.nextLogical)
-      .getOrElse(version(root).toLong)
-
   /** Build segment 0 + stats v=1. `tag` is an optional idempotence tag
     * committed atomically with the version (see [[committedHasTag]]). */
   def init(docs: DataFrame, idCol: String, textCol: String, root: String,
            numFiles: Int = 8, tag: Option[String] = None): Unit =
-    writeVersion(docs, idCol, textCol, root, seg = 0, numFiles, tag)
+    writeVersion(docs, idCol, textCol, root, init = true, numFiles, tag)
 
   /** Append a delta as the next segment and publish merged stats. Doc ids
     * must be new (append-only semantics — see scaladoc). */
   def append(delta: DataFrame, idCol: String, textCol: String, root: String,
              numFiles: Int = 8, tag: Option[String] = None): Unit = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized — call init first")
-    writeVersion(delta, idCol, textCol, root, seg = v, numFiles, tag)
+    requireInit(root)
+    writeVersion(delta, idCol, textCol, root, init = false, numFiles, tag)
   }
 
   private def writeVersion(docs: DataFrame, idCol: String, textCol: String,
-                           root: String, seg: Int, numFiles: Int,
+                           root: String, init: Boolean, numFiles: Int,
                            tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "bm25-append") { // single-writer,
     val spark = docs.sparkSession                       // checked
-    val v = if (seg == 0) 0 else version(root)
-    val manifest = SegmentStore.currentManifest(statsBase(root))
-    // manifest roots decouple physical dir from the version clock
-    val phys = manifest.map(_.nextPhysical).getOrElse(seg)
+    val at = committedAt(root, if (init) 0 else version(root))
+    val v = at.v
     val postings = postingsOf(docs, idCol, textCol)
     // segment first — invisible until the matching stats version lands
-    Store.optimizeLayout(postings, segDir(root, phys), Seq("term", idCol),
+    Store.optimizeLayout(postings, segDir(root, at.nextPhysical), Seq("term", idCol),
       numFiles, bloomCols = Seq("term"))
     // re-read what was written: one source of truth for the merge
-    val written = spark.read.parquet(segDir(root, phys))
+    val written = spark.read.parquet(segDir(root, at.nextPhysical))
     val (dfreq, corpus) = statsOf(written, docs, textCol)
     val (mergedDf, mergedCorpus) =
-      if (seg == 0) (dfreq, corpus)
+      if (init) (dfreq, corpus)
       else {
         val oldDf = spark.read.parquet(s"${statsDir(root, v)}/termstats")
         val oldCorpus = spark.read.parquet(s"${statsDir(root, v)}/corpus")
@@ -190,19 +154,7 @@ object IncrementalBm25 {
       Seq("term"), 1, bloomCols = Seq("term"))
     mergedCorpus.coalesce(1).write.mode("overwrite")
       .parquet(s"${statsDir(root, v + 1)}/corpus")
-    // publish: tag first, then the atomic commit marker — the version (and
-    // its tag) become visible in one namespace op, after every artifact
-    // is fully on disk. Manifest roots publish the appended entry in the
-    // SAME atomic step.
-    manifest match {
-      case None => SegmentStore.publish(statsBase(root), v + 1, tag)
-      case Some(m) => SegmentStore.publishManifest(statsBase(root), v + 1, tag,
-        m.copy(
-          entries = m.entries :+ SegmentStore.ManifestEntry(
-            s"seg/${m.nextPhysical}", m.nextLogical),
-          nextLogical = m.nextLogical + 1,
-          nextPhysical = m.nextPhysical + 1))
-    }
+    publishAppend(root, at, tag) // after every artifact is on disk
     }
 
   /** Mark documents DELETED — Lucene's exact deleted-doc semantics: the
@@ -217,16 +169,7 @@ object IncrementalBm25 {
     * via `tag`. */
   def delete(ids: DataFrame, idCol: String, root: String,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-delete") {
-      val v = version(root)
-      require(v > 0, s"index at $root not initialized")
-      // horizon = current logical segment number: existing postings die, a
-      // later re-insert of the same id serves (Lucene delete-then-add).
-      // Under the lease a delete never interleaves a fold, so its horizon
-      // can never equal a folded segment's logical number.
-      SegmentStore.tombWrite(ids, idCol, s"$root/tombs", tag,
-        beforeSeg = logicalNext(root))
-    }
+    commitDelete(ids, idCol, root, "bm25-delete", tag)
 
   /** UPSERT — update a document IN PLACE by id: Lucene's update IS
     * delete + add, and this is exactly that under one idempotence tag —
@@ -240,35 +183,14 @@ object IncrementalBm25 {
     * where the stats catch up. */
   def upsert(delta: DataFrame, idCol: String, textCol: String, root: String,
              numFiles: Int = 8, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-upsert") { // nested append
-      val v = version(root)                             // re-enters
-      require(v > 0, s"index at $root not initialized")
-      SegmentStore.tombWrite(delta.select(col(idCol)), idCol,
-        s"$root/tombs", tag.map(t => s"${t}_t"), beforeSeg = logicalNext(root))
-      if (!tag.exists(t => committedHasTag(root, t)))
-        append(delta, idCol, textCol, root, numFiles, tag)
-    }
+    commitUpsert(delta, idCol, root, "bm25-upsert", tag)(
+      append(delta, idCol, textCol, root, numFiles, tag))
 
   /** Union of committed postings segments with per-row LOGICAL segment
     * provenance (`__seg`) — the horizon the versioned tombstones cut
-    * against. Manifest-aware (the `v` parameter is ignored on manifest
-    * roots — the committed entry list is authoritative there). */
-  private def readSegsTagged(spark: SparkSession, root: String,
-                             v: Int): DataFrame =
-    entryList(root).map(e => spark.read.parquet(s"$root/${e.dir}")
-        .withColumn("__seg", lit(e.logicalSeg)))
-      .reduce(_ unionByName _)
-
-  /** Exclude dead postings: id tombstoned AND the row's segment predates
-    * the tombstone's horizon. `df` must carry `__seg`. Ledger segments a
-    * full fold absorbed are skipped. */
-  private def filterTombs(spark: SparkSession, root: String, df: DataFrame,
-                          idCol: String): DataFrame =
-    SegmentStore.tombIds(spark, s"$root/tombs", tombRebase(root)).fold(df)(t =>
-      df.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-          col("before_seg"))),
-        df(idCol) === col("__dd") && df("__seg") < col("before_seg"),
-        "left_anti"))
+    * against. */
+  private def readSegsTagged(spark: SparkSession, root: String): DataFrame =
+    readTagged(committed(root).entries)(k => spark.read.parquet(segDir(root, k.toInt)))
 
   /** BM25 top-k across all committed segments, idf/length-norm applied at
     * query time from the merged stats — hash-exact the full-rebuild
@@ -276,17 +198,16 @@ object IncrementalBm25 {
     * [[delete]]). */
   def topK(spark: SparkSession, root: String, idCol: String,
            terms: Seq[String], k: Int): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
+    val v = requireInit(root)
     val stats = spark.read.parquet(s"${statsDir(root, v)}/corpus")
       .select(col("n_docs"),
         (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
     val dfreq = spark.read.parquet(s"${statsDir(root, v)}/termstats")
       .where(col("term").isin(terms: _*)) // |terms| rows
     filterTombs(spark, root,
-        readSegsTagged(spark, root, v)
+        readSegsTagged(spark, root)
           .where(col("term").isin(terms: _*)), // pushed: In(term, ...) + bloom
-        idCol)
+        Seq(idCol))
       .drop("__seg")
       .join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))
@@ -300,19 +221,6 @@ object IncrementalBm25 {
       .agg(round(sum(col("w")), 6).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-  }
-
-  /** Idempotence check for at-least-once writers (streaming foreachBatch
-    * replays the last uncommitted micro-batch after a failure): a writer
-    * passes its batch id as the `tag` of [[init]]/[[append]] — written
-    * inside the stats dir just before the commit marker, so it is
-    * committed atomically with the version — and skips a redelivered
-    * batch whose tag is already visible. A crash before the marker leaves
-    * no committed tag, and the retried append overwrites the orphan
-    * segment at the same number: exactly-once in effect. */
-  def committedHasTag(root: String, tag: String): Boolean = {
-    val v = version(root)
-    v > 0 && SegmentStore.hasTag(statsBase(root), v, tag)
   }
 
   /** Compact all committed segments into a single fresh one. Queries pay
@@ -331,15 +239,14 @@ object IncrementalBm25 {
               idCol: String, numFiles: Int = 8,
               tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "bm25-compact") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    val tombs = SegmentStore.tombIds(spark, s"$root/tombs")
+    val v = requireInit(root)
+    val hasTombs = SegmentStore.tombIds(spark, tombsBase(root)).nonEmpty
     val survivors = filterTombs(spark, root,
-      readSegsTagged(spark, root, v), idCol).drop("__seg")
+      readSegsTagged(spark, root), Seq(idCol)).drop("__seg")
     Store.optimizeLayout(survivors,
       segDir(newRoot, 0), Seq("term", idCol), numFiles,
       bloomCols = Seq("term"))
-    if (tombs.isEmpty) {
+    if (!hasTombs) {
       // stats carry no per-segment state — republish as-is
       spark.read.parquet(s"${statsDir(root, v)}/termstats")
         .coalesce(1).write.mode("overwrite")
@@ -348,24 +255,29 @@ object IncrementalBm25 {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${statsDir(newRoot, 1)}/corpus")
     } else {
-      // deletes applied: recompute stats from the surviving postings —
-      // the Lucene-merge moment where stale df/n_docs/avgdl catch up;
-      // the fresh root serves scores hash-exact a rebuild without the
-      // deleted docs, and starts with a clear ledger. Postings are
-      // distinct on (term, id) so count(1) == countDistinct(id), and
-      // (id, dl) pairs are unique per doc.
-      val written = spark.read.parquet(segDir(newRoot, 0))
-      Store.optimizeLayout(
-        written.groupBy(col("term")).agg(count(lit(1)).as("df")),
-        s"${statsDir(newRoot, 1)}/termstats", Seq("term"), 1,
-        bloomCols = Seq("term"))
-      written.select(col(idCol), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl").cast("long")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/corpus")
+      // deletes applied: the fresh root serves scores hash-exact a
+      // rebuild without the deleted docs, and starts with a clear ledger
+      recomputeStats(spark, segDir(newRoot, 0), idCol, statsDir(newRoot, 1))
     }
-    SegmentStore.publish(statsBase(newRoot), 1, tag)
+    SegmentStore.publish(commitBase(newRoot), 1, tag)
     }
+
+  /** Stats of the postings segment at `postings` written as the version
+    * dir `out` — the Lucene-merge moment where stale df/n_docs/avgdl
+    * catch up with the survivors. Postings are distinct on (term, id) so
+    * count(1) == countDistinct(id), and (id, dl) pairs are unique per
+    * doc. */
+  private def recomputeStats(spark: SparkSession, postings: String,
+                             idCol: String, out: String): Unit = {
+    val written = spark.read.parquet(postings)
+    Store.optimizeLayout(
+      written.groupBy(col("term")).agg(count(lit(1)).as("df")),
+      s"$out/termstats", Seq("term"), 1, bloomCols = Seq("term"))
+    written.select(col(idCol), col("dl")).distinct()
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl").cast("long")).as("sum_dl"))
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$out/corpus")
+  }
 
   /** Size-tiered auto-compaction trigger — the policy half of the LSM
     * story: reads fan in over every committed segment, so segment count
@@ -379,32 +291,10 @@ object IncrementalBm25 {
     SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
       compact(spark, root, _, idCol, tag = tag))
 
-  /** Segment list at committed version `w` — see
-    * [[IncrementalIvf.entryListAt]] (same retain-one-generation GC). */
-  private def entryListAt(root: String, w: Int): Seq[SegmentStore.ManifestEntry] =
-    if (w <= 0) Seq.empty
-    else SegmentStore.manifestAt(statsBase(root), w).map(_.entries)
-      .getOrElse((0 until w).map(k =>
-        SegmentStore.ManifestEntry(s"seg/$k", k.toLong)))
-
-  /** Sweep dirs neither of the LAST TWO committed manifests references —
-    * [[IncrementalIvf.gcUnreferencedSegs]]'s sparse twin: folded-away
-    * tails get a one-generation grace for in-flight readers; crashed
-    * appends' orphans go at the first fold after them. Runs under the
-    * writer lease. */
-  private def gcUnreferencedSegs(root: String): Unit = {
-    val v = version(root)
-    val retained = (entryListAt(root, v) ++ entryListAt(root, v - 1))
-      .map(_.dir.stripPrefix("seg/")).toSet
-    SegmentStore.listChildDirs(s"$root/seg").filterNot(retained)
-      .foreach(c => SegmentStore.deleteTree(s"$root/seg/$c"))
-  }
-
   /** TAIL-FOLD: fold every postings segment past the first `keep` into
-    * ONE fresh segment IN THIS ROOT — the sparse twin of
-    * [[IncrementalIvf.tailFold]] (same manifest protocol, same horizon
-    * algebra, same O(tail)-not-O(corpus) write cost; see that scaladoc
-    * and docs/PLANS.md). The fold keeps the seek layout (term-sorted +
+    * ONE fresh segment IN THIS ROOT — O(tail), not O(corpus), write cost;
+    * the manifest, horizon algebra and GC are [[SegmentedRoot]]'s fold
+    * (see docs/PLANS.md). The fold keeps the seek layout (term-sorted +
     * bloom), so pushed `term IN (...)` pruning survives folds.
     *
     * Stats semantics follow the family's delete contract: a PARTIAL fold
@@ -420,66 +310,28 @@ object IncrementalBm25 {
                keep: Int = 1, numFiles: Int = 8,
                tag: Option[String] = None): Unit = {
     require(keep >= 0, s"keep must be >= 0, got $keep")
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "bm25-tail-fold") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
-    gcUnreferencedSegs(root)
-    val entries = entryList(root)
-    if (entries.size <= keep) return // empty tail — nothing to fold
-    val cur = SegmentStore.currentManifest(statsBase(root))
-    val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-    val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-    val rebase = cur.map(_.tombRebase).getOrElse(0)
-    // ledger clock captured BEFORE the reads it stamps as absorbed —
-    // see [[IncrementalIvf.tailFold]] (same soundness argument)
-    val tombV = SegmentStore.tombVersion(s"$root/tombs")
-    val (prefix, tail) = entries.splitAt(keep)
-    val tailRows = tail.map(e => spark.read.parquet(s"$root/${e.dir}")
-        .withColumn("__seg", lit(e.logicalSeg)))
-      .reduce(_ unionByName _)
-    val live = SegmentStore.tombIds(spark, s"$root/tombs", rebase)
-      .fold(tailRows)(t =>
-        tailRows.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-            col("before_seg"))),
-          tailRows(idCol) === col("__dd") &&
-            tailRows("__seg") < col("before_seg"),
-          "left_anti"))
-      .drop("__seg")
-    Store.optimizeLayout(live, segDir(root, nextPhys), Seq("term", idCol),
-      numFiles, bloomCols = Seq("term"))
-    if (keep == 0) {
-      // the merge moment: stats catch up from the surviving postings
-      val written = spark.read.parquet(segDir(root, nextPhys))
+    commitFold(root, keep, tag, "bm25-tail-fold") { slot =>
+      val v = slot.at.v
+      val folded = s"$root/seg/${slot.phys}"
       Store.optimizeLayout(
-        written.groupBy(col("term")).agg(count(lit(1)).as("df")),
-        s"${statsDir(root, v + 1)}/termstats", Seq("term"), 1,
-        bloomCols = Seq("term"))
-      written.select(col(idCol), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("dl").cast("long")).as("sum_dl"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(root, v + 1)}/corpus")
-    } else {
-      // partial fold: stats stay stale by contract — republish verbatim
-      // (through optimizeLayout so the termstats seek layout survives)
-      Store.optimizeLayout(
-        spark.read.parquet(s"${statsDir(root, v)}/termstats"),
-        s"${statsDir(root, v + 1)}/termstats", Seq("term"), 1,
-        bloomCols = Seq("term"))
-      spark.read.parquet(s"${statsDir(root, v)}/corpus")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(root, v + 1)}/corpus")
-    }
-    val newRebase = if (keep == 0) tombV else rebase
-    SegmentStore.publishManifest(statsBase(root), v + 1, tag,
-      SegmentStore.Manifest(
-        prefix :+ SegmentStore.ManifestEntry(s"seg/$nextPhys", nextLog),
-        nextLogical = nextLog + 1,
-        nextPhysical = nextPhys + 1,
-        tombRebase = newRebase))
-    // no post-publish sweep: folded-away dirs get a one-generation
-    // grace for in-flight readers (gcUnreferencedSegs retain-one rule)
+        filterTombs(spark, root,
+          readTagged(slot.tail)(k => spark.read.parquet(segDir(root, k.toInt))),
+          Seq(idCol)).drop("__seg"),
+        folded, Seq("term", idCol), numFiles, bloomCols = Seq("term"))
+      if (keep == 0) // the merge moment: stats catch up
+        recomputeStats(spark, folded, idCol, statsDir(root, v + 1))
+      else {
+        // partial fold: stats stay stale by contract — republish verbatim
+        // (through optimizeLayout so the termstats seek layout survives)
+        Store.optimizeLayout(
+          spark.read.parquet(s"${statsDir(root, v)}/termstats"),
+          s"${statsDir(root, v + 1)}/termstats", Seq("term"), 1,
+          bloomCols = Seq("term"))
+        spark.read.parquet(s"${statsDir(root, v)}/corpus")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"${statsDir(root, v + 1)}/corpus")
+      }
+      slot.folded()
     }
   }
 
@@ -487,7 +339,7 @@ object IncrementalBm25 {
     * suffix chosen by [[SegmentStore.tieredFoldStart]] (longest
     * trailing run of similar-size segments; see that scaladoc).
     * `keep < maxSegments` required and the ladder-fit warning returned —
-    * see [[IncrementalIvf.tailFoldIfNeeded]].
+    * see [[SegmentedRoot.foldOnFanIn]].
     *
     * `driftFoldShare` closes the loop from the [[stats]] gauge to an
     * ACTION (r13 verdict: "stale stats are visible but nothing acts on
@@ -504,40 +356,31 @@ object IncrementalBm25 {
                        maxSegments: Int, keep: Int = 1,
                        tag: Option[String] = None,
                        driftFoldShare: Double = 1.0): Option[String] = {
-    require(keep < maxSegments,
-      s"keep ($keep) must be < maxSegments ($maxSegments): the trigger " +
-        "would fold one segment per trigger forever, never reducing fan-in")
     require(driftFoldShare > 0.0 && driftFoldShare <= 1.0,
       s"driftFoldShare must be in (0, 1], got $driftFoldShare " +
         "(1.0 disables the drift check)")
-    val driftTripped = driftFoldShare < 1.0 && {
+    foldOnFanIn(root, maxSegments, keep, fullFold = driftFoldShare < 1.0 && {
       val st = stats(spark, root, idCol)
       st("stats_n_docs") > 0 &&
         st("stats_drift_docs").toDouble / st("stats_n_docs") > driftFoldShare
-    }
-    if (driftTripped) {
-      tailFold(spark, root, idCol, keep = 0, tag = tag)
-      None
-    } else {
-      val entries = entryList(root)
-      if (entries.size > maxSegments) {
-        val sizes = entries.map(e => SegmentStore.treeBytes(s"$root/${e.dir}"))
-        tailFold(spark, root, idCol,
-          SegmentStore.tieredFoldStart(sizes, keep, maxSegments), tag = tag)
-        SegmentStore.ladderCheck(sizes, maxSegments)
-      } else None
-    }
+    })(tailFold(spark, root, idCol, _, tag = tag))
   }
 
   /** Ensure an incrementally-GROWN documents index for `dataDir`: half the
     * corpus at init, the rest appended — exercising the real maintenance
     * path while staying oracle-checkable against whole-corpus SQL. */
   def ensure(spark: SparkSession, dataDir: String): String =
-    IndexCatalog.ensure(spark, dataDir, Name) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
-    }
+    IndexCatalog.ensure(spark, dataDir, Name)(grownHalves(spark, dataDir, _))
+
+  /** The oracle fixtures' grown index at `p` (even doc ids at init, odd
+    * appended); returns the documents. */
+  private def grownHalves(spark: SparkSession, dataDir: String,
+                          p: String): DataFrame = {
+    val all = graft.tables.Tables.documents(spark, dataDir)
+    init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
+    append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
+    all
+  }
 
   val UpsertName = "bm25_upsert_v1"
 
@@ -548,9 +391,7 @@ object IncrementalBm25 {
     * (both versions counted until compaction). */
   def ensureUpserted(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
+      val all = grownHalves(spark, dataDir, p)
       val updated = all.as("a")
         .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
           col("a.doc_id") + 1 === col("nid"))
@@ -571,9 +412,7 @@ object IncrementalBm25 {
     * docs. Delete and upsert sets are disjoint so the oracle composes. */
   def ensureTailFolded(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
+      val all = grownHalves(spark, dataDir, p)
       delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id")), "doc_id", p, tag = Some("demo_tf_delete"))
       val updated = all.as("a")
@@ -594,9 +433,7 @@ object IncrementalBm25 {
     * plain corpus BM25 SQL plus a tombstone WHERE on the result. */
   def ensureTombstoned(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
-      val all = graft.tables.Tables.documents(spark, dataDir)
-      init(all.where(col("doc_id") % 2 === 0), "doc_id", "text", p)
-      append(all.where(col("doc_id") % 2 === 1), "doc_id", "text", p)
+      val all = grownHalves(spark, dataDir, p)
       delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
         .select(col("doc_id")), "doc_id", p, tag = Some("demo_delete"))
     }

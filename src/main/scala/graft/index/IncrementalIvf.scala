@@ -40,72 +40,22 @@ import graft.tables.Tables
   * [[compact]] mechanics with new centroids), swapped behind the same
   * publish-last discipline.
   */
-object IncrementalIvf {
+object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
 
   val Name = "ivf_inc_v1"
 
   private def segDir(root: String, k: Int) = s"$root/seg/$k"
-  private def commitBase(root: String) = s"$root/commit"
-
-  /** Committed version — [[SegmentStore]] protocol over `commit/` (empty
-    * version dirs: the marker IS the state). */
-  def version(root: String): Int = SegmentStore.version(commitBase(root))
-
-  /** Idempotence check for at-least-once writers (streaming foreachBatch
-    * replays the last uncommitted micro-batch after a failure) — same
-    * contract as [[IncrementalBm25.committedHasTag]]: the tag lands just
-    * before the commit marker, so it is committed atomically with the
-    * version, and a redelivered batch whose tag is visible is skipped. */
-  def committedHasTag(root: String, tag: String): Boolean =
-    SegmentStore.anyCommittedHasTag(commitBase(root), tag)
-
-  private def publish(root: String, v: Int, tag: Option[String]): Unit =
-    SegmentStore.publish(commitBase(root), v, tag)
-
-  // ---- Manifest-addressed segment resolution (tail-fold support) ----
-  // A root reads positionally (`seg/0..v-1`, logical == position) until
-  // its first [[tailFold]] publishes a manifest; from then on the
-  // committed manifest IS the segment list. See the design note in
-  // [[SegmentStore]] (manifest section) and docs/PLANS.md.
-
-  /** Committed segment list as root-relative manifest entries —
-    * synthesized for positional roots so fold/append logic has one
-    * shape. */
-  private def entryList(root: String): Seq[SegmentStore.ManifestEntry] =
-    SegmentStore.currentManifest(commitBase(root)) match {
-      case Some(m) => m.entries
-      case None => (0 until version(root))
-        .map(k => SegmentStore.ManifestEntry(s"seg/$k", k.toLong))
-    }
-
-  /** Read fan-in — the read-amplification dial ([[tailFoldIfNeeded]]'s
-    * trigger). Equals `version(root)` until the first fold; after folds
-    * it counts the LIVE segment list, which the version clock (one bump
-    * per mutation, forever) no longer reflects. */
-  def fanIn(root: String): Int = entryList(root).size
-
-  /** Ledger version absorbed by the last full fold — readers skip
-    * ledger segments at or below it (their kills are physically gone). */
-  private def tombRebase(root: String): Int =
-    SegmentStore.currentManifest(commitBase(root)).map(_.tombRebase)
-      .getOrElse(0)
-
-  /** Logical number of the NEXT segment — the horizon a delete committed
-    * now carries. Strictly above every live row's `__seg` tag, including
-    * folded segments (a fold assigns its output the `nextLogical` at
-    * fold time precisely so pre-fold horizons spare it — the kills they
-    * state are baked into the folded rows). */
-  private def logicalNext(root: String): Long =
-    SegmentStore.currentManifest(commitBase(root)).map(_.nextLogical)
-      .getOrElse(version(root).toLong)
+  /** Assigned (vec_id, embedding, cid) rows as one cid-partitioned
+    * segment dir. */
+  private def writeAssigned(rows: DataFrame, path: String): Unit =
+    rows.write.mode(SaveMode.Overwrite)
+      .option("compression", "zstd")
+      .partitionBy("cid")
+      .parquet(path)
 
   private def writeSegment(vectors: DataFrame, centroids: DataFrame,
                            root: String, seg: Int): Unit =
-    Ann.ivfAssign(vectors, centroids)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("cid")
-      .parquet(segDir(root, seg))
+    writeAssigned(Ann.ivfAssign(vectors, centroids), segDir(root, seg))
 
   /** Freeze `centroids` (cid, cvec) and write segment 0 from `vectors`
     * (vec_id, embedding). `tag` is an optional idempotence tag committed
@@ -118,7 +68,7 @@ object IncrementalIvf {
       centroids.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$root/centroids")
       writeSegment(vectors, readCentroids(vectors.sparkSession, root), root, 0)
-      publish(root, 1, tag)
+      SegmentStore.publish(commitBase(root), 1, tag)
     }
 
   /** Append a delta of new vectors as the next segment, assigned against
@@ -128,31 +78,16 @@ object IncrementalIvf {
   def append(delta: DataFrame, root: String,
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "ivf-append") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized — call init first")
-    SegmentStore.currentManifest(commitBase(root)) match {
-      case None => // positional root: physical dir index == version
-        writeSegment(delta, readCentroids(delta.sparkSession, root), root, v)
-        publish(root, v + 1, tag)
-      case Some(m) => // manifest root: next physical id, entry + marker
-        // publish in ONE atomic step (the manifest rides the version dir)
-        writeSegment(delta, readCentroids(delta.sparkSession, root), root,
-          m.nextPhysical)
-        SegmentStore.publishManifest(commitBase(root), v + 1, tag,
-          m.copy(
-            entries = m.entries :+ SegmentStore.ManifestEntry(
-              s"seg/${m.nextPhysical}", m.nextLogical),
-            nextLogical = m.nextLogical + 1,
-            nextPhysical = m.nextPhysical + 1))
-    }
+      requireInit(root)
+      val at = committed(root)
+      writeSegment(delta, readCentroids(delta.sparkSession, root), root,
+        at.nextPhysical)
+      publishAppend(root, at, tag)
     }
 
   def readCentroids(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/centroids")
 
-  /** Union of all committed segments — schema (cid, vec_id, embedding),
-    * each segment's probed lists pruned at scan time by the caller's cid
-    * predicate (partition dirs). */
   /** Explicit segment schema: partition-value inference would type the
     * cid dirs as INT, and the resulting cast(cid as bigint) under the
     * probe join lands on the SCAN side — killing dynamic partition
@@ -178,15 +113,7 @@ object IncrementalIvf {
     * filter, so they physically reclaim the rows and their fresh roots
     * start with a clear ledger. Idempotent via `tag`. */
   def delete(ids: DataFrame, root: String, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "ivf-delete") {
-      val v = version(root)
-      require(v > 0, s"index at $root not initialized")
-      // under the lease: a delete can never interleave with a fold, so
-      // its horizon can never equal a folded segment's logical number
-      // (the silent-resurrection window)
-      SegmentStore.tombWrite(ids, "vec_id", s"$root/tombs", tag,
-        beforeSeg = logicalNext(root))
-    }
+    commitDelete(ids, "vec_id", root, "ivf-delete", tag)
 
   /** UPSERT — update vectors IN PLACE by id (Qdrant's point overwrite):
     * a versioned tombstone kills the old rows at their horizon, the
@@ -197,18 +124,13 @@ object IncrementalIvf {
     * in SQL). Idempotent via `tag`. */
   def upsert(delta: DataFrame, root: String,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "ivf-upsert") { // reentrant: the
-      val v = version(root)                            // nested append
-      require(v > 0, s"index at $root not initialized") // re-enters
-      SegmentStore.tombWrite(delta.select(col("vec_id")), "vec_id",
-        s"$root/tombs", tag.map(t => s"${t}_t"), beforeSeg = logicalNext(root))
-      if (!tag.exists(t => committedHasTag(root, t)))
-        append(delta, root, tag)
-    }
+    commitUpsert(delta, "vec_id", root, "ivf-upsert", tag)(append(delta, root, tag))
 
+  /** Union of all committed segments — schema (cid, vec_id, embedding),
+    * each segment's probed lists pruned at scan time by the caller's cid
+    * predicate (partition dirs). */
   def readAssigned(spark: SparkSession, root: String): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
+    requireInit(root)
     // one read per segment root (each is its own cid-partitioned table —
     // a single multi-path read would refuse to infer the partitioning),
     // unioned with per-row LOGICAL segment provenance: the cid probe
@@ -216,18 +138,16 @@ object IncrementalIvf {
     // segment still prunes to its probed list dirs. The segment list
     // comes from the committed manifest when one exists (post-fold
     // roots); ledger segments a full fold absorbed are skipped.
-    val all = entryList(root).map { e =>
-      val p = s"$root/${e.dir}"
-      spark.read.option("basePath", p).schema(segSchema)
-        .parquet(p).withColumn("__seg", lit(e.logicalSeg))
-    }.reduce(_ unionByName _)
-    SegmentStore.tombIds(spark, s"$root/tombs", tombRebase(root)).fold(all)(t =>
-        all.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-            col("before_seg"))),
-          all("vec_id") === col("__dd") && all("__seg") < col("before_seg"),
-          "left_anti"))
-      .drop("__seg")
+    filterTombs(spark, root, readSegs(spark, root, committed(root).entries),
+      Seq("vec_id")).drop("__seg")
   }
+
+  private def readSegs(spark: SparkSession, root: String,
+                       entries: Seq[SegmentStore.ManifestEntry]): DataFrame =
+    readTagged(entries) { k =>
+      val p = segDir(root, k.toInt)
+      spark.read.option("basePath", p).schema(segSchema).parquet(p)
+    }
 
   /** IVF top-k across all committed segments — the same
     * [[Ann.ivfTopKAssigned]] plan as the monolithic index, so results are
@@ -247,16 +167,12 @@ object IncrementalIvf {
   def compact(spark: SparkSession, root: String, newRoot: String,
               tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "ivf-compact") { // quiesce the
-      val v = version(root)       // source: a delete committed mid-read
-      require(v > 0, s"index at $root not initialized") // would vanish
+      requireInit(root) // source: a delete committed mid-read would vanish
       readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$newRoot/centroids")                 // from the fresh
-      readAssigned(spark, root)                         // clear-ledger root
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("cid")
-        .parquet(segDir(newRoot, 0))
-      publish(newRoot, 1, tag)
+      writeAssigned(readAssigned(spark, root), segDir(newRoot, 0)) // clear-
+      // ledger root
+      SegmentStore.publish(commitBase(newRoot), 1, tag)
     }
 
   /** Size-tiered auto-compaction trigger (see
@@ -268,33 +184,6 @@ object IncrementalIvf {
     SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
       compact(spark, root, _, tag = tag))
 
-  /** Segment list at committed version `w` — the current manifest's
-    * predecessor view for the GC's retain-one-generation rule. Versions
-    * before the first fold read positionally. */
-  private def entryListAt(root: String, w: Int): Seq[SegmentStore.ManifestEntry] =
-    if (w <= 0) Seq.empty
-    else SegmentStore.manifestAt(commitBase(root), w).map(_.entries)
-      .getOrElse((0 until w).map(k =>
-        SegmentStore.ManifestEntry(s"seg/$k", k.toLong)))
-
-  /** Sweep physical segment dirs neither of the LAST TWO committed
-    * manifests references — folded-away tails past their one-generation
-    * grace, and orphans of crashed appends. Retaining the previous
-    * manifest's segments closes the long-running-reader window: a frame
-    * planned against manifest N keeps reading after fold N+1 publishes
-    * (tail-fold deletes nothing post-publish anymore) and is reclaimed
-    * only by the fold AFTER that — by which point the mutation clock has
-    * long invalidated any serving cache of it. Runs at the start of
-    * every [[tailFold]], under the writer lease (an append can no longer
-    * be in flight concurrently — the lease refuses it loudly). */
-  private def gcUnreferencedSegs(root: String): Unit = {
-    val v = version(root)
-    val retained = (entryListAt(root, v) ++ entryListAt(root, v - 1))
-      .map(_.dir.stripPrefix("seg/")).toSet
-    SegmentStore.listChildDirs(s"$root/seg").filterNot(retained)
-      .foreach(c => SegmentStore.deleteTree(s"$root/seg/$c"))
-  }
-
   /** TAIL-FOLD: fold every segment past the first `keep` into ONE fresh
     * physical segment IN THIS ROOT, leaving the prefix untouched — the
     * bounded-write-amplification compaction docs/PLANS.md designed
@@ -303,111 +192,29 @@ object IncrementalIvf {
     * cost is O(tail bytes); [[compact]]'s full fold — still the deep
     * clean that reclaims prefix tombstones and resets storage into a
     * fresh root — stays O(corpus), which is exactly why a steady-state
-    * 100 TB ingest runs THIS between rare deep cleans.
-    *
-    * Soundness (the horizon algebra):
-    *   - all tombstones visible at fold time are APPLIED to the folded
-    *     rows (they are physically reclaimed from the tail);
-    *   - the folded segment takes logical number `nextLogical` —
-    *     strictly ABOVE every horizon committed so far — so existing
-    *     ledger entries spare the folded rows without any ledger
-    *     rewrite, while still killing prefix rows exactly as before;
-    *   - a delete committed AFTER the fold carries a yet-higher horizon
-    *     and kills folded rows normally;
-    *   - a FULL fold (`keep = 0`) leaves no live target for any existing
-    *     ledger entry, so the manifest records the absorbed ledger
-    *     version (`tombRebase`) and readers skip those ledger segments —
-    *     the anti-join input stays bounded by the churn since the last
-    *     full fold, without resetting the ledger's version clock.
-    *
-    * Publishes manifest + version + `tag` in ONE atomic marker (the
-    * manifest rides the commit version dir). Crash windows: before the
-    * marker — orphan folded dir, swept by the next fold's GC pass, old
-    * state served. The folded-away tail dirs are NOT swept here: they
-    * stay on disk one fold generation (retain-one rule in
-    * [[gcUnreferencedSegs]]) so a reader planned against the previous
-    * manifest finishes cleanly — no drain requirement, the next-next
-    * fold reclaims. Idempotent via `tag`; runs under the root's writer
-    * lease. */
+    * 100 TB ingest runs THIS between rare deep cleans. All tombstones
+    * visible at fold time are APPLIED to the folded rows; the horizon
+    * algebra that keeps that sound without a ledger rewrite, the commit,
+    * the crash windows and the retain-one-generation GC are
+    * [[SegmentedRoot]]'s fold. Idempotent via `tag`; runs under the
+    * root's writer lease. */
   def tailFold(spark: SparkSession, root: String, keep: Int = 1,
                tag: Option[String] = None): Unit = {
     require(keep >= 0, s"keep must be >= 0, got $keep")
-    if (!tag.exists(t => committedHasTag(root, t)))
-      SegmentStore.withWriterLease(root, "ivf-tail-fold") {
-        val v = version(root)
-        require(v > 0, s"index at $root not initialized")
-        gcUnreferencedSegs(root)
-        val entries = entryList(root)
-        if (entries.size > keep) { // else: empty tail — nothing to fold
-          val cur = SegmentStore.currentManifest(commitBase(root))
-          val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-          val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-          val rebase = cur.map(_.tombRebase).getOrElse(0)
-          // capture the ledger clock BEFORE reading it: a full fold's
-          // rebase must name a version at or below what actually baked
-          // in (the lease already serializes deletes; this keeps the
-          // read-then-stamp order sound even against a lease-broken
-          // straggler — over-conservative rebase, never resurrection)
-          val tombV = SegmentStore.tombVersion(s"$root/tombs")
-          val (prefix, tail) = entries.splitAt(keep)
-          val tailRows = tail.map { e =>
-            val p = s"$root/${e.dir}"
-            spark.read.option("basePath", p).schema(segSchema)
-              .parquet(p).withColumn("__seg", lit(e.logicalSeg))
-          }.reduce(_ unionByName _)
-          val live = SegmentStore.tombIds(spark, s"$root/tombs", rebase)
-            .fold(tailRows)(t =>
-              tailRows.join(broadcast(t.select(col(t.columns.head).as("__dd"),
-                  col("before_seg"))),
-                tailRows("vec_id") === col("__dd") &&
-                  tailRows("__seg") < col("before_seg"),
-                "left_anti"))
-          live.select(col("vec_id"), col("embedding"), col("cid"))
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", "zstd")
-            .partitionBy("cid")
-            .parquet(segDir(root, nextPhys))
-          val newRebase = if (keep == 0) tombV else rebase
-          SegmentStore.publishManifest(commitBase(root), v + 1, tag,
-            SegmentStore.Manifest(
-              prefix :+ SegmentStore.ManifestEntry(s"seg/$nextPhys", nextLog),
-              nextLogical = nextLog + 1,
-              nextPhysical = nextPhys + 1,
-              tombRebase = newRebase))
-          // no post-publish sweep: the folded-away tail keeps serving
-          // in-flight readers for one fold generation (GC note above)
-        }
-      }
+    commitFold(root, keep, tag, "ivf-tail-fold") { slot =>
+      writeAssigned(filterTombs(spark, root, readSegs(spark, root, slot.tail),
+          Seq("vec_id")).select(col("vec_id"), col("embedding"), col("cid")),
+        segDir(root, slot.at.nextPhysical))
+      slot.folded()
+    }
   }
 
-  /** Size-tiered trigger for [[tailFold]]: when the READ fan-in (live
-    * segment count — not the ever-growing version clock) exceeds
-    * `maxSegments`, fold the suffix [[SegmentStore.tieredFoldStart]]
-    * selects — the longest trailing run of similar-size segments, so
-    * fresh batches fold together cheaply and a dominant older segment
-    * is only absorbed once the tail grows into its size class (the
-    * logarithmic merge ladder; see that scaladoc for the fan-in
-    * trade-off). `keep` floors the fold start (entries below it are
-    * never folded by this trigger) and must sit BELOW `maxSegments` —
-    * at or above it every trigger would re-fold a single segment into a
-    * fresh copy forever without ever reducing fan-in (the degenerate
-    * loop the require refuses). Returns [[SegmentStore.ladderCheck]]'s
-    * warning when the configured fan-in bound is too tight for the
-    * observed size-tier ladder (None = fits, or no fold ran). */
+  /** Size-tiered trigger for [[tailFold]] — [[SegmentedRoot.foldOnFanIn]]
+    * over the live segment sizes. */
   def tailFoldIfNeeded(spark: SparkSession, root: String, maxSegments: Int,
                        keep: Int = 1,
-                       tag: Option[String] = None): Option[String] = {
-    require(keep < maxSegments,
-      s"keep ($keep) must be < maxSegments ($maxSegments): the trigger " +
-        "would fold one segment per trigger forever, never reducing fan-in")
-    val entries = entryList(root)
-    if (entries.size > maxSegments) {
-      val sizes = entries.map(e => SegmentStore.treeBytes(s"$root/${e.dir}"))
-      tailFold(spark, root,
-        SegmentStore.tieredFoldStart(sizes, keep, maxSegments), tag)
-      SegmentStore.ladderCheck(sizes, maxSegments)
-    } else None
-  }
+                       tag: Option[String] = None): Option[String] =
+    foldOnFanIn(root, maxSegments, keep)(tailFold(spark, root, _, tag))
 
   /** Centroid RETRAIN — the production answer to the frozen-centroid
     * drift caveat in the object doc: re-fit kmeans centroids on the
@@ -421,21 +228,16 @@ object IncrementalIvf {
     * IndexSpec pins retrained ≡ rebuilt). */
   def retrain(spark: SparkSession, root: String, newRoot: String,
               k: Int): Unit = SegmentStore.withWriterLease(root, "ivf-retrain") {
-    val v = version(root)
-    require(v > 0, s"index at $root not initialized")
+    requireInit(root)
     val corpus = readAssigned(spark, root)
       .select(col("vec_id"), col("embedding"))
     val assembled = corpus.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
     val model = MlIndex.fitIvfCentroids(assembled, k)
-    val centroidRows = model.clusterCenters.zipWithIndex.map {
-      case (c, i) => (i.toLong, c.toArray.map(_.toFloat))
-    }
     import spark.implicits._
-    centroidRows.toSeq.toDF("cid", "cvec").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$newRoot/centroids")
-    writeSegment(corpus, readCentroids(spark, newRoot), newRoot, 0)
-    publish(newRoot, 1, None)
+    init(corpus, model.clusterCenters.zipWithIndex.map {
+      case (c, i) => (i.toLong, c.toArray.map(_.toFloat))
+    }.toSeq.toDF("cid", "cvec"), newRoot)
   }
 
   /** Drift-triggered retrain — wires the a22 list-balance monitor to
@@ -470,13 +272,18 @@ object IncrementalIvf {
     * whole-corpus IVF SQL as a1 (centroids = stored vectors 0..9, the
     * engine-independent choice the DuckDB oracle can replay). */
   def ensure(spark: SparkSession, dataDir: String): String =
-    IndexCatalog.ensure(spark, dataDir, Name) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 2 === 0), centroids, p)
-      append(emb.where(col("vec_id") % 2 === 1), p)
-    }
+    IndexCatalog.ensure(spark, dataDir, Name)(grown(spark, dataDir, _, parts = 2))
+
+  /** The oracle fixtures' grown index at `p` (centroids = stored vectors
+    * 0..9; init + appends by vec_id % `parts`); returns the embeddings. */
+  private def grown(spark: SparkSession, dataDir: String, p: String,
+                    parts: Int): DataFrame = {
+    val emb = Tables.embeddings(spark, dataDir)
+    init(emb.where(col("vec_id") % parts === 0), emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")), p)
+    (1 until parts).foreach(i => append(emb.where(col("vec_id") % parts === i), p))
+    emb
+  }
 
   val UpsertName = "ivf_upsert_v1"
 
@@ -487,11 +294,7 @@ object IncrementalIvf {
     * original centroids). */
   def ensureUpserted(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 2 === 0), centroids, p)
-      append(emb.where(col("vec_id") % 2 === 1), p)
+      val emb = grown(spark, dataDir, p, parts = 2)
       val updated = emb.as("a")
         .join(emb.select(col("vec_id").as("nid"),
           col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
@@ -510,12 +313,7 @@ object IncrementalIvf {
     * non-overlapping sets so the oracle composes the two WHEREs). */
   def ensureTailFolded(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p)
-      append(emb.where(col("vec_id") % 3 === 1), p)
-      append(emb.where(col("vec_id") % 3 === 2), p)
+      val emb = grown(spark, dataDir, p, parts = 3)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_tf_delete"))
       val updated = emb.as("a")
@@ -537,11 +335,7 @@ object IncrementalIvf {
     * assignment. */
   def ensureTombstoned(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 2 === 0), centroids, p)
-      append(emb.where(col("vec_id") % 2 === 1), p)
+      val emb = grown(spark, dataDir, p, parts = 2)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
     }

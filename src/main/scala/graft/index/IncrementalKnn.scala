@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.search.Ann
 import graft.tables.Tables
+import SegmentedRoot.filterTombsWith
 
 /** Incrementally-maintainable corpus kNN graph — the graph twin of
   * [[IncrementalIvf]] (reference analogue: Qdrant inserts points into its
@@ -34,8 +35,8 @@ import graft.tables.Tables
   * whole-corpus rebuild. IndexSpec pins grown ≡ rebuilt; the a20 oracle
   * is a18's whole-corpus kNN SQL verbatim.
   *
-  * Layout under `root` (all publishes behind [[IncrementalIvf]]-style
-  * atomic `_COMMITTED` markers, segment written first, marker last):
+  * Layout under `root` (all publishes behind [[SegmentedRoot]]'s atomic
+  * `_COMMITTED` markers, segment written first, marker last):
   *
   *   - `centroids/`   frozen at init (same drift caveat as IncrementalIvf).
   *   - `assign/<k>/`  batch k's (vec_id, cid, embedding), cid-partitioned.
@@ -57,7 +58,7 @@ import graft.tables.Tables
   *                    construction (each append writes its own sorted
   *                    segment) and compaction re-sorts the fold
   *                    (StreamingSpec pins both).
-  *   - `commit/v=<k>/` atomic version markers (shared helper).
+  *   - `commit/v=<k>/` atomic version markers ([[SegmentedRoot]]).
   *
   * Append cost at scale: arm 1 is delta-probes × probed lists (the same
   * shape as a batched ANN query — delta-sized, not corpus-sized); arm 2
@@ -66,7 +67,8 @@ import graft.tables.Tables
   * delta touched, with partition pruning on the slim probe table's cid
   * column. Nothing ever re-scores corpus × corpus.
   */
-object IncrementalKnn {
+object IncrementalKnn extends SegmentedRoot(
+    "commit", "", Seq("assign", "probes", "edges", "vecs", "coarse")) {
 
   // v2: edge segments adopted the src-sorted `_srt` seek layout
   // v3: + per-segment `vecs/` (vec_id-sorted seek twin of the one-shot
@@ -84,13 +86,8 @@ object IncrementalKnn {
   private def assignDir(root: String, k: Int) = s"$root/assign/$k"
   private def probesDir(root: String, k: Int) = s"$root/probes/$k"
   private def edgesDir(root: String, k: Int) = s"$root/edges/$k"
-  private def vecsDir(root: String, k: Int) = s"$root/vecs/$k"
-  private def coarseDir(root: String, k: Int) = s"$root/coarse/$k"
-  private def tombsBase(root: String) = s"$root/tombs"
   private def repairDir(root: String, k: Int) = s"$root/repairs/seg/$k"
   private def repairBase(root: String) = s"$root/repairs/commit"
-
-  def version(root: String): Int = IncrementalIvf.version(root)
 
   /** The root's full mutation clock — (index segments, tombstone-ledger
     * version, repair-ledger version). Any serving-side cache of resolved
@@ -117,104 +114,30 @@ object IncrementalKnn {
     val (v, tv, rv) = stateVersions(root)
     // backlog = ledger entries past the last reclaiming fold's rebase
     // (entries at or below it are physically baked in — not a backlog)
-    val nTombs = SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root))
-      .map(_.count()).getOrElse(0L)
+    val nTombs = tombs(spark, root).map(_.count()).getOrElse(0L)
     val nStale = // rv==0 counts too: holes with no repairs are still holes
       if (tv == 0 || repairsCurrent(spark, root)) 0L
       else staleSrcs(spark, root, v).map(_.count()).getOrElse(0L)
     Map("index_version" -> v.toLong, "tombstone_ledger_version" -> tv.toLong,
       "repair_ledger_version" -> rv.toLong, "n_tombstoned_ids" -> nTombs,
-      "n_stale_srcs" -> nStale, "tomb_rebase" -> tombRebase(root).toLong,
-      "repair_rebase" -> repairRebase(root).toLong,
+      "n_stale_srcs" -> nStale, "tomb_rebase" -> committed(root).tombRebase.toLong,
+      "repair_rebase" -> committed(root).repairRebase.toLong,
       // READ fan-in (live segment count): after tail-folds the version
       // clock keeps counting mutations while fan-in shrinks — this is
       // the number the compaction trigger and a capacity planner watch
       "read_fan_in" -> fanIn(root).toLong)
   }
 
-  /** Idempotence check for at-least-once writers — same contract as
-    * [[IncrementalIvf.committedHasTag]] (identical commit layout). */
-  def committedHasTag(root: String, tag: String): Boolean =
-    IncrementalIvf.committedHasTag(root, tag)
+  /** Committed segments of one artifact `kind`, rows tagged with `__seg`
+    * (manifest entries name the bare physical number the five kinds
+    * share; [[tailFold]]ed segments store `__seg` as a column). */
+  private def readKind(spark: SparkSession, root: String, kind: String): DataFrame =
+    readTagged(committed(root).entries)(p => spark.read.parquet(s"$root/$kind/$p"))
 
-  private def publish(root: String, v: Int,
-                      tag: Option[String] = None): Unit =
-    SegmentStore.publish(s"$root/commit", v, tag)
-
-  // ---- Manifest-addressed segment resolution (tail-fold support) ----
-  // Same commit-dir manifest protocol as [[IncrementalIvf]] (see the
-  // [[SegmentStore]] manifest section), with TWO family-specific rules:
-  //
-  //  - a manifest entry's `dir` is the segment's PHYSICAL NUMBER (this
-  //    family has five per-segment artifact kinds — assign/probes/
-  //    edges/vecs/coarse — all sharing the number);
-  //  - a FOLDED segment stores each row's original logical `__seg` as a
-  //    COLUMN (entry `logicalSeg == -1` marks it): the fold is PURE
-  //    reorganization — same rows, same horizons, fewer directories —
-  //    so tombstone filters, repair-coverage clocks, and the stale-src
-  //    visible-holes semantics are identical by construction, with no
-  //    gating on repair state and no interaction with the upsert
-  //    horizon algebra. Dead-row reclamation stays with [[compact]]
-  //    (the deep clean), exactly like Lucene's partial merges vs full.
-
-  private def segEntries(root: String): Seq[SegmentStore.ManifestEntry] =
-    SegmentStore.currentManifest(s"$root/commit") match {
-      case Some(m) => m.entries
-      case None => (0 until version(root))
-        .map(k => SegmentStore.ManifestEntry(k.toString, k.toLong))
-    }
-
-  /** Read fan-in (live segment count) — [[tailFoldIfNeeded]]'s trigger;
-    * the version clock stops reflecting it after the first fold. */
-  def fanIn(root: String): Int = segEntries(root).size
-
-  /** Logical number of the NEXT segment — the horizon a delete or
-    * upsert committed now carries (strictly above every live row's
-    * `__seg`). Equals `version(root)` until the first fold. */
-  private def logicalNext(root: String): Long =
-    SegmentStore.currentManifest(s"$root/commit").map(_.nextLogical)
-      .getOrElse(version(root).toLong)
-
-  /** Ledger version the last [[reclaimFold]] physically absorbed —
-    * readers skip ledger segments at or below it (their kills are baked
-    * into the folded rows; same manifest field as the IVF/BM25 full
-    * folds). 0 until the first reclaiming fold: the plain [[tailFold]]
-    * is pure reorganization and never advances it. */
-  private def tombRebase(root: String): Int =
-    SegmentStore.currentManifest(s"$root/commit").map(_.tombRebase)
-      .getOrElse(0)
-
-  /** Repair-ledger version the last [[reclaimFold]] absorbed — readers
-    * skip repair segments at or below it. NOT hygiene: those segments'
-    * stale rows (superseded by later upserts) were suppressed by exactly
-    * the tombstone entries the fold rebased away, so merging them back
-    * would resurrect pre-upsert scores; the covered refills they DID
-    * contribute are baked into the folded edges. */
-  private def repairRebase(root: String): Int =
-    SegmentStore.currentManifest(s"$root/commit").map(_.repairRebase)
-      .getOrElse(0)
-
-  /** Union of committed segments of one artifact KIND, each row tagged
-    * with its logical `__seg` — from the manifest entry for plain
-    * segments, from the stored column for folded ones. `dir` maps a
-    * physical number to the kind's path. */
-  private def readEntriesTagged(spark: SparkSession, root: String)
-                               (dir: String => String): DataFrame =
-    segEntries(root).map { e =>
-      val df = spark.read.parquet(dir(e.dir))
-      if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-      else df // folded mixed-horizon segment: __seg is a stored column
-    }.reduce(_ unionByName _)
-
-  /** [[readEntriesTagged]] over per-segment FRAMES (vecs/coarse, which
-    * need the pre-v3 fallback probe per physical segment). */
-  private def readFramesEntriesTagged(root: String)
-                                     (seg: String => DataFrame): DataFrame =
-    segEntries(root).map { e =>
-      val df = seg(e.dir)
-      if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-      else df
-    }.reduce(_ unionByName _)
+  /** [[readKind]] without the rows a tombstone killed on `idCol`. */
+  private def liveKind(spark: SparkSession, root: String, kind: String,
+                       idCol: String): DataFrame =
+    filterTombs(spark, root, readKind(spark, root, kind), Seq(idCol)).drop("__seg")
 
   private def readCentroids(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/centroids")
@@ -255,9 +178,10 @@ object IncrementalKnn {
     * entry selection reads the whole merged vector set —
     * [[graft.search.Ann.hierEntriesFrom]] scaladoc). Both are delta-sized
     * writes; the embedding copy is the same build-once serving trade the
-    * one-shot artifacts make. */
-  private def writeVecs(vectors: DataFrame, root: String, seg: String): Unit = {
-    val slim = vectors.select(col("vec_id"), col("embedding"))
+    * one-shot artifacts make. A [[tailFold]] keeps `__seg` in `cols`. */
+  private def writeVecs(vectors: DataFrame, root: String, seg: String,
+                        cols: Seq[String] = Seq("vec_id", "embedding")): Unit = {
+    val slim = vectors.select(cols.map(col): _*)
     slim.repartitionByRange(8, col("vec_id"))
       .sortWithinPartitions(col("vec_id"))
       .write.mode(SaveMode.Overwrite)
@@ -269,6 +193,10 @@ object IncrementalKnn {
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/coarse/$seg")
   }
+
+  private def writeAssign(rows: DataFrame, path: String): Unit =
+    rows.write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .partitionBy("cid").parquet(path)
 
   /** Per-src top-k reduction of a candidate edge set — the safe partial
     * form of the read-side merge. */
@@ -289,15 +217,13 @@ object IncrementalKnn {
     centroids.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$root/centroids")
     val cent = readCentroids(spark, root)
-    Ann.ivfAssign(vectors, cent)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(root, 0))
+    writeAssign(Ann.ivfAssign(vectors, cent), assignDir(root, 0))
     probeLists(vectors, cent, nprobe)
       .write.mode(SaveMode.Overwrite).parquet(probesDir(root, 0))
     writeEdges(Ann.knnGraph(vectors, cent, nprobe, k)
       .select(col("src"), col("dst"), col("score")), edgesDir(root, 0))
     writeVecs(vectors, root, "0")
-    publish(root, 1)
+    SegmentStore.publish(commitBase(root), 1, None)
     }
 
   /** Append a delta of new vectors: one new assignment/probes/edges
@@ -307,16 +233,13 @@ object IncrementalKnn {
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-append") {
     val spark = delta.sparkSession
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized — call init first")
+    requireInit(root)
+    val at = committed(root)
     val cent = readCentroids(spark, root)
-    val cur = SegmentStore.currentManifest(s"$root/commit")
-    val phys = cur.map(_.nextPhysical.toString).getOrElse(v.toString)
-    val logical = cur.map(_.nextLogical).getOrElse(v.toLong)
+    val phys = at.nextPhysical.toString
+    val logical = at.nextLogical
 
-    val newAssign = Ann.ivfAssign(delta, cent)
-    newAssign.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(s"$root/assign/$phys")
+    writeAssign(Ann.ivfAssign(delta, cent), s"$root/assign/$phys")
     probeLists(delta, cent, nprobe)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$phys")
 
@@ -328,7 +251,7 @@ object IncrementalKnn {
     // tombstone-free roots (the grown ≡ rebuilt pins are unaffected).
     val newSeg = spark.read.parquet(s"$root/assign/$phys")
     val assignAll = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p")
+      readKind(spark, root, "assign")
         .unionByName(newSeg.withColumn("__seg", lit(logical))),
       Seq("vec_id"))
       .drop("__seg") // old + this batch
@@ -351,50 +274,29 @@ object IncrementalKnn {
     // arm 2 — every PRIOR vector whose probe lists intersect the delta's
     // assigned lists gains the delta's vectors as candidates. Probes are
     // slim; the src embedding joins back from the prior assign segments.
-    val oldProbes = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
-      .drop("__seg")
-    val cand2 = oldProbes.join(newSeg.select(col("cid"), col("vec_id").as("dst"),
+    val cand2 = liveKind(spark, root, "probes", "src").join(newSeg.select(col("cid"), col("vec_id").as("dst"),
         col("embedding").as("dvec")), Seq("cid"))
       .select(col("src"), col("dst"), col("dvec"))
     // horizon-filtered too: an upserted src must contribute its CURRENT
     // embedding exactly once (the stale row would both mis-score and
     // duplicate the pair)
-    val oldAssign = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
-      .drop("__seg")
-    val arm2 = cand2.join(oldAssign.select(col("vec_id").as("src"),
+    val arm2 = cand2.join(liveKind(spark, root, "assign", "vec_id").select(col("vec_id").as("src"),
         col("embedding").as("svec")), Seq("src"))
       .select(col("src"), col("dst"),
         round(VectorOps.cosineSim(col("svec"), col("dvec")), 6).as("score"))
 
     writeEdges(topKPerSrc(arm1.unionByName(arm2), k), s"$root/edges/$phys")
     writeVecs(delta, root, phys)
-    cur match {
-      case None => publish(root, v + 1, tag)
-      case Some(m) => SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-        m.copy(
-          entries = m.entries :+ SegmentStore.ManifestEntry(phys, logical),
-          nextLogical = logical + 1,
-          nextPhysical = m.nextPhysical + 1))
-    }
+    publishAppend(root, at, tag)
     }
 
-  /** The merged graph: union of all committed edge segments, one window
-    * top-k per src — hash-exact the whole-corpus [[Ann.knnGraph]] rebuild
-    * against the same centroids. Schema (src, dst, score, rank). With
-    * tombstones present, edges touching a deleted vector are excluded
-    * AFTER the rank window (see [[delete]]): survivors keep their
-    * original ranks — holes mark the degraded degree — so the result is
-    * exactly the rebuild SQL plus a final tombstone WHERE (the a28
-    * oracle). */
   /** Committed repair rows with their index horizon as `__seg` and the
     * observed-ledger stamp `tomb_v` (0 for segments written before the
     * stamp existed — treated as "observed nothing", so one re-repair
     * covers them). None when no repair segment is committed. */
   private def repairRows(spark: SparkSession, root: String): Option[DataFrame] = {
     val rv = SegmentStore.version(repairBase(root))
-    val from = repairRebase(root) // absorbed by the last reclaiming fold
+    val from = committed(root).repairRebase // absorbed by the last reclaiming fold
     if (rv <= from) None
     else {
       val raw = (from until rv)
@@ -426,7 +328,7 @@ object IncrementalKnn {
   private def latestRepairStamp(spark: SparkSession, root: String): Long = {
     val rb = repairBase(root)
     val rv = SegmentStore.version(rb)
-    if (rv <= repairRebase(root)) -1L
+    if (rv <= committed(root).repairRebase) -1L
     else SegmentStore.versionMeta(rb, rv, "tombv").map(_.toLong).getOrElse {
       val df = spark.read.parquet(repairDir(root, rv - 1))
       if (!df.columns.contains("tomb_v")) 0L
@@ -465,9 +367,9 @@ object IncrementalKnn {
     * bounded by the un-repaired backlog's reverse degree. */
   private def staleSrcs(spark: SparkSession, root: String,
                         v: Int): Option[DataFrame] =
-    SegmentStore.tombIdsVersioned(spark, tombsBase(root), tombRebase(root))
+    SegmentStore.tombIdsVersioned(spark, tombsBase(root), committed(root).tombRebase)
       .map { tombs =>
-      val baseRows = readEntriesTagged(spark, root)(p => s"$root/edges/$p")
+      val baseRows = readKind(spark, root, "edges")
         .withColumn("tomb_v", lit(0L)) // stored rows carry no stamp
       val rows = repairRows(spark, root).fold(baseRows)(baseRows.unionByName(_))
       val idc = tombs.columns.head
@@ -484,25 +386,31 @@ object IncrementalKnn {
       // live-src filter (see scaladoc): one slim tombstone-filtered scan
       // of the per-segment id column — maintenance/detection cost only
       val liveIds = filterTombs(spark, root,
-          readFramesEntriesTagged(root)(vecsSegment(spark, root, _))
+          readTagged(committed(root).entries)(servingSegment(spark, root, "vecs"))
             .select(col("vec_id"), col("__seg")), Seq("vec_id"))
         .select(col("vec_id").as("src")).distinct()
       covered.where(col("covT") < col("needT")).select(col("src"))
         .join(liveIds, Seq("src"), "left_semi")
     }
 
+  /** The merged graph: union of all committed edge segments, one window
+    * top-k per src — hash-exact the whole-corpus [[Ann.knnGraph]] rebuild
+    * against the same centroids. Schema (src, dst, score, rank). With
+    * tombstones present, edges touching a deleted vector are excluded
+    * AFTER the rank window (see [[delete]]): survivors keep their
+    * original ranks — holes mark the degraded degree — so the result is
+    * exactly the rebuild SQL plus a final tombstone WHERE (the a28
+    * oracle). */
   def edges(spark: SparkSession, root: String, k: Int): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    val base = readEntriesTagged(spark, root)(p => s"$root/edges/$p")
+    val v = requireInit(root)
+    val base = readKind(spark, root, "edges")
     // tombstone set materialized ONCE per read (tiny — bounded by
     // compaction cadence): the optimizer pushes the (src, dst)
     // anti-joins below the segment UNION, so an inline ledger aggregate
     // re-plans per union arm (2 joins × segments broadcast builds, each
     // with its own ledger shuffle — 8 in the r16 a29 before-plan);
     // pinned to in-memory blocks, every arm shares one trivial build.
-    val tombs = SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root))
-      .map(_.localCheckpoint())
+    val dead = tombs(spark, root).map(_.localCheckpoint())
     // repair segments refill post-delete/post-upsert rank holes (see
     // [[repair]]); their rows carry their OWN write horizon (`at_seg` —
     // the index version the repair scored against), so a later upsert of
@@ -526,7 +434,7 @@ object IncrementalKnn {
       .orderBy(col("score").desc, col("dst").asc)
     val out = rep match {
       case None =>
-        filterTombsWith(tombs,
+        filterTombsWith(dead,
           base.withColumn("rank", row_number().over(w))
             .where(col("rank") <= k), Seq("src", "dst"))
           .drop("__seg")
@@ -558,7 +466,7 @@ object IncrementalKnn {
         // ONE exchange for dedup + rank: hashing by src satisfies both
         // the (src, dst) aggregate's clustering and the rank window's —
         // the default plan paid two shuffles ((src,dst), then src)
-        val covered = filterTombsWith(tombs, coveredRows, Seq("src", "dst"))
+        val covered = filterTombsWith(dead, coveredRows, Seq("src", "dst"))
           .repartition(col("src"))
           .groupBy(col("src"), col("dst")).agg(max(col("score")).as("score"))
           .withColumn("rank", row_number().over(w))
@@ -573,7 +481,7 @@ object IncrementalKnn {
               .withColumn("rank", row_number().over(w))
               .where(col("rank") <= k)
             covered.unionByName(
-              filterTombsWith(tombs, staleRanked, Seq("src", "dst"))
+              filterTombsWith(dead, staleRanked, Seq("src", "dst"))
                 .drop("__seg"))
         }
     }
@@ -602,11 +510,9 @@ object IncrementalKnn {
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-repair") {
     val rb = repairBase(root)
-    if (tag.exists(t => (1 to SegmentStore.version(rb))
-          .exists(rv => SegmentStore.hasTag(rb, rv, t)))) return
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    if (SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root)).isEmpty)
+    if (tag.exists(SegmentStore.anyCommittedHasTag(rb, _))) return
+    val v = requireInit(root)
+    if (tombs(spark, root).isEmpty)
       return // no backlog past the last reclaiming fold — nothing to heal
     if (repairsCurrent(spark, root))
       return // every ledger entry already observed by the newest repair
@@ -631,14 +537,8 @@ object IncrementalKnn {
     // full CURRENT candidate set for exactly those srcs: stored probe
     // lists ∩ horizon-filtered assignment (an upserted id participates
     // through its current row only)
-    val probes = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
-      .drop("__seg")
-    val assignLive = filterTombs(spark, root,
-      readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
-      .drop("__seg")
-    val cand = holed.join(probes, Seq("src"))
-      .join(assignLive.select(col("cid"), col("vec_id").as("dst"),
+    val cand = holed.join(liveKind(spark, root, "probes", "src"), Seq("src"))
+      .join(liveKind(spark, root, "assign", "vec_id").select(col("cid"), col("vec_id").as("dst"),
         col("embedding").as("dvec")), Seq("cid"))
       .where(col("dst") =!= col("src"))
       .select(col("src"), col("dst"),
@@ -654,7 +554,7 @@ object IncrementalKnn {
     // detected as uncovered on the next pass.
     val observedTombV = SegmentStore.tombVersion(tombsBase(root)).toLong
     writeEdges(topKPerSrc(cand, k)
-      .withColumn("at_seg", lit(logicalNext(root) - 1L))
+      .withColumn("at_seg", lit(committed(root).nextLogical - 1L))
       .withColumn("tomb_v", lit(observedTombV)),
       repairDir(root, rv))
     holed.unpersist()
@@ -683,18 +583,7 @@ object IncrementalKnn {
     * Idempotent via `tag` like [[append]] (at-least-once deleters replay
     * safely). */
   def delete(ids: DataFrame, root: String, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-delete") {
-      val v = version(root)
-      require(v > 0, s"knn graph at $root not initialized")
-      // horizon = the current NEXT logical number: every EXISTING row of
-      // the id dies, and a future re-insert of the same id (a new
-      // document, or [[upsert]]'s new version) serves from its own segment
-      // on — the Lucene delete-then-add semantics. Under the lease a
-      // delete never interleaves a fold, so its horizon can never equal
-      // a folding segment's logical number.
-      SegmentStore.tombWrite(ids, "vec_id", tombsBase(root), tag,
-        beforeSeg = logicalNext(root))
-    }
+    commitDelete(ids, "vec_id", root, "knn-delete", tag)
 
   /** UPSERT — update points IN PLACE by id (the reference's Qdrant
     * upsert overwrites a point; until now this family required
@@ -710,44 +599,32 @@ object IncrementalKnn {
     * and every prior src gains them as candidates (arm 2). */
   def upsert(delta: DataFrame, root: String, nprobe: Int, k: Int,
              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-upsert") { // nested append
-      val v = version(root)                            // re-enters
-      require(v > 0, s"knn graph at $root not initialized")
-      SegmentStore.tombWrite(delta.select(col("vec_id")), "vec_id",
-        tombsBase(root), tag.map(t => s"${t}_t"), beforeSeg = logicalNext(root))
-      if (!tag.exists(t => committedHasTag(root, t)))
-        append(delta, root, nprobe, k, tag)
-    }
+    commitUpsert(delta, "vec_id", root, "knn-upsert", tag)(
+      append(delta, root, nprobe, k, tag))
 
-  /** Union of per-segment reads with each row tagged by its segment
-    * index (`__seg`) — the provenance the versioned tombstones cut
-    * against. */
-  /** Exclude dead rows from `df` on `cols` (broadcast anti-joins — the
-    * tombstone set is bounded by compaction cadence, never
-    * corpus-sized). A row is dead when its id is tombstoned AND the row's
-    * segment predates the tombstone's horizon (`__seg < before_seg`) —
-    * plain deletes carry horizon Long.MaxValue, so every version dies;
-    * an upsert's bounded horizon spares the re-inserted segment. `df`
-    * must carry `__seg` ([[readEntriesTagged]]). */
-  private def filterTombs(spark: SparkSession, root: String, df: DataFrame,
-                          cols: Seq[String]): DataFrame =
-    filterTombsWith(
-      SegmentStore.tombIds(spark, tombsBase(root), tombRebase(root)), df, cols)
-
-  /** [[filterTombs]] against a caller-materialized tombstone set —
-    * multi-consumer reads ([[edges]]) resolve the ledger once and share
-    * it. The per-join build uses FIXED aliases so every anti-join's
-    * broadcast subtree is canonically identical and the exchange is
-    * built once and reused, instead of once per pushed-down union arm. */
-  private def filterTombsWith(tombs: Option[DataFrame], df: DataFrame,
-                              cols: Seq[String]): DataFrame =
-    tombs.fold(df) { t =>
-      cols.foldLeft(df) { (d, c) =>
-        val tt = broadcast(t.select(col(t.columns.head).as("__tomb_id"),
-          col("before_seg").as("__tomb_bs")))
-        d.join(tt, d(c) === tt("__tomb_id") && d("__seg") < tt("__tomb_bs"),
-          "left_anti")
-      }
+  /** Merged serving vectors (vec_id, embedding): union of the per-segment
+    * vec_id-sorted `vecs/` artifacts — every file keeps its tight min/max
+    * vec_id ranges, so a pushed `vec_id IN (...)` seek reads O(lookups)
+    * row groups per segment ([[graft.search.Ann.graphTopKSeek]]'s
+    * vectors side for a GROWN graph). */
+  /** Per-segment `vecs/` (or `coarse/`) read with the PRE-v3 fallback:
+    * roots written before `knn_inc_v3` (e.g. long-lived streaming
+    * `knnIngest` roots, which are not keyed by the bumped [[Name]]) have
+    * no serving-side vecs/coarse artifacts — their slim (vec_id,
+    * embedding) rows come from the assign segment instead (cid-
+    * partitioned, so vec_id seeks don't prune there, and the coarse subset
+    * is filtered inline — correct but slower; every segment appended AFTER
+    * the code upgrade writes real artifacts, so the penalty decays with
+    * normal churn and vanishes at the next compaction, which re-writes the
+    * fold in the seek layout). One existence probe per segment. */
+  private def servingSegment(spark: SparkSession, root: String, kind: String)
+                            (kk: String): DataFrame =
+    if (SegmentStore.pathExists(s"$root/$kind/$kk"))
+      spark.read.parquet(s"$root/$kind/$kk")
+    else {
+      val assign = spark.read.parquet(s"$root/assign/$kk")
+      (if (kind == "coarse") assign.where(pmod(col("vec_id"), lit(CoarseMod)) === lit(0))
+       else assign).select(col("vec_id"), col("embedding"))
     }
 
   /** Merged serving vectors (vec_id, embedding): union of the per-segment
@@ -755,40 +632,10 @@ object IncrementalKnn {
     * vec_id ranges, so a pushed `vec_id IN (...)` seek reads O(lookups)
     * row groups per segment ([[graft.search.Ann.graphTopKSeek]]'s
     * vectors side for a GROWN graph). */
-  /** Per-segment `vecs/` read with the PRE-v3 fallback: roots written
-    * before `knn_inc_v3` (e.g. long-lived streaming `knnIngest` roots,
-    * which are not keyed by the bumped [[Name]]) have no serving-side
-    * vecs/coarse artifacts — their slim (vec_id, embedding) rows come
-    * from the assign segment instead (cid-partitioned, so vec_id seeks
-    * don't prune there — correct but slower; every segment appended
-    * AFTER the code upgrade writes real `vecs/`, so the penalty decays
-    * with normal churn and vanishes at the next compaction, which
-    * re-writes the fold in the seek layout). One existence probe per
-    * segment. */
-  private def vecsSegment(spark: SparkSession, root: String, kk: String): DataFrame =
-    if (SegmentStore.pathExists(s"$root/vecs/$kk"))
-      spark.read.parquet(s"$root/vecs/$kk")
-    else
-      spark.read.parquet(s"$root/assign/$kk")
-        .select(col("vec_id"), col("embedding"))
-
-  /** `coarse/` twin of [[vecsSegment]] — pre-v3 segments derive the
-    * mod-[[CoarseMod]] entry subset inline from assign (full-segment
-    * scan + filter, the exact cost the artifact exists to avoid; same
-    * decay story). */
-  private def coarseSegment(spark: SparkSession, root: String, kk: String): DataFrame =
-    if (SegmentStore.pathExists(s"$root/coarse/$kk"))
-      spark.read.parquet(s"$root/coarse/$kk")
-    else
-      spark.read.parquet(s"$root/assign/$kk")
-        .where(pmod(col("vec_id"), lit(CoarseMod)) === lit(0))
-        .select(col("vec_id"), col("embedding"))
-
   def vectorsAll(spark: SparkSession, root: String): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
+    requireInit(root)
     filterTombs(spark, root,
-      readFramesEntriesTagged(root)(vecsSegment(spark, root, _))
+      readTagged(committed(root).entries)(servingSegment(spark, root, "vecs"))
         .select(col("vec_id"), col("embedding"), col("__seg")),
       Seq("vec_id"))
       .drop("__seg")
@@ -798,10 +645,9 @@ object IncrementalKnn {
     * 1/[[CoarseMod]] of the corpus as I/O for entry selection, exactly
     * like the one-shot artifacts' `coarse/`. */
   def coarseAll(spark: SparkSession, root: String): DataFrame = {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
+    requireInit(root)
     filterTombs(spark, root,
-      readFramesEntriesTagged(root)(coarseSegment(spark, root, _))
+      readTagged(committed(root).entries)(servingSegment(spark, root, "coarse"))
         .select(col("vec_id"), col("embedding"), col("__seg")),
       Seq("vec_id"))
       .drop("__seg")
@@ -818,26 +664,27 @@ object IncrementalKnn {
   def compact(spark: SparkSession, root: String, newRoot: String,
               k: Int, tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-compact") {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
+    requireInit(root)
     readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$newRoot/centroids")
-    filterTombs(spark, root,
-        readEntriesTagged(spark, root)(p => s"$root/assign/$p"), Seq("vec_id"))
-      .drop("__seg")
-      .select(col("vec_id"), col("embedding"), col("cid"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(newRoot, 0))
-    filterTombs(spark, root,
-        readEntriesTagged(spark, root)(p => s"$root/probes/$p"), Seq("src"))
-      .drop("__seg")
-      .select(col("src"), col("cid"))
-      .write.mode(SaveMode.Overwrite).parquet(probesDir(newRoot, 0))
-    writeEdges(edges(spark, root, k) // tombstone-filtered read
-      .select(col("src"), col("dst"), col("score")), edgesDir(newRoot, 0))
-    writeVecs(vectorsAll(spark, root), newRoot, "0") // re-sorts the fold
-    publish(newRoot, 1, tag)
+    writeLive(spark, root, k, newRoot, "0")
+    SegmentStore.publish(commitBase(newRoot), 1, tag)
     }
+
+  /** The root's LIVE state as one segment `p` under `dest`: tombstoned
+    * rows physically dropped (assign/probes/vecs/coarse by id, edges via
+    * the covered merged read — repair refills folded in, ranks recomputed
+    * at read); vecs/coarse re-sorted into the seek layout. */
+  private def writeLive(spark: SparkSession, root: String, k: Int,
+                        dest: String, p: String): Unit = {
+    writeAssign(liveKind(spark, root, "assign", "vec_id")
+      .select(col("vec_id"), col("embedding"), col("cid")), s"$dest/assign/$p")
+    liveKind(spark, root, "probes", "src").select(col("src"), col("cid"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dest/probes/$p")
+    writeEdges(edges(spark, root, k)
+      .select(col("src"), col("dst"), col("score")), s"$dest/edges/$p")
+    writeVecs(vectorsAll(spark, root), dest, p)
+  }
 
   /** Size-tiered auto-compaction trigger (see
     * [[IncrementalBm25.compactIfNeeded]] — same policy, same pointer-swap
@@ -848,36 +695,11 @@ object IncrementalKnn {
     SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
       compact(spark, root, _, k, tag = tag))
 
-  private val SegKinds = Seq("assign", "probes", "edges", "vecs", "coarse")
-
-  /** Segment list at committed version `w` — the GC's previous-manifest
-    * view (see [[IncrementalIvf.entryListAt]]). */
-  private def segEntriesAt(root: String, w: Int): Seq[SegmentStore.ManifestEntry] =
-    if (w <= 0) Seq.empty
-    else SegmentStore.manifestAt(s"$root/commit", w).map(_.entries)
-      .getOrElse((0 until w).map(k =>
-        SegmentStore.ManifestEntry(k.toString, k.toLong)))
-
-  /** Retain-one-generation sweep across all five artifact kinds —
-    * [[IncrementalIvf.gcUnreferencedSegs]]'s graph twin: dirs referenced
-    * by NEITHER of the last two committed manifests go; folded-away
-    * tails get one fold generation of grace for in-flight readers. Runs
-    * under the writer lease. */
-  private def gcUnreferencedSegs(root: String): Unit = {
-    val v = version(root)
-    val retained = (segEntriesAt(root, v) ++ segEntriesAt(root, v - 1))
-      .map(_.dir).toSet
-    SegKinds.foreach { kind =>
-      SegmentStore.listChildDirs(s"$root/$kind").filterNot(retained)
-        .foreach(c => SegmentStore.deleteTree(s"$root/$kind/$c"))
-    }
-  }
-
   /** TAIL-FOLD for the graph family: fold every segment past the first
     * `keep` into ONE fresh physical segment (all five artifact kinds) IN
     * THIS ROOT — O(tail) write cost, the prefix only referenced (see
-    * [[IncrementalIvf.tailFold]] and docs/PLANS.md for the general
-    * design). Family-specific rule: the fold is PURE REORGANIZATION —
+    * [[SegmentedRoot]] and docs/PLANS.md for the general design).
+    * Family-specific rule: the fold is PURE REORGANIZATION —
     * every folded row keeps its original logical `__seg` as a STORED
     * column (the manifest marks the segment mixed-horizon), so the row
     * multiset, every tombstone horizon cut, the repair-coverage clock
@@ -895,85 +717,32 @@ object IncrementalKnn {
     require(keep >= 1,
       "knn tail-fold keeps at least one segment — full in-root " +
         "reclamation is reclaimFold() (repairs-current gate) or compact()")
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "knn-tail-fold") {
-    val v = version(root)
-    require(v > 0, s"knn graph at $root not initialized")
-    gcUnreferencedSegs(root)
-    val entries = segEntries(root)
-    if (entries.size <= keep) return // empty tail — nothing to fold
-    val cur = SegmentStore.currentManifest(s"$root/commit")
-    val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-    val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-    val rebase = cur.map(_.tombRebase).getOrElse(0)
-    val (prefix, tail) = entries.splitAt(keep)
-    def tagged(read: String => DataFrame): DataFrame =
-      tail.map { e =>
-        val df = read(e.dir)
-        if (e.logicalSeg >= 0) df.withColumn("__seg", lit(e.logicalSeg))
-        else df // already mixed-horizon: __seg is stored
-      }.reduce(_ unionByName _)
-    val p = nextPhys.toString
-    tagged(d => spark.read.parquet(s"$root/assign/$d"))
-      .select(col("vec_id"), col("embedding"), col("__seg"), col("cid"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(s"$root/assign/$p")
-    tagged(d => spark.read.parquet(s"$root/probes/$d"))
-      .select(col("src"), col("cid"), col("__seg"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
-    writeEdges(tagged(d => spark.read.parquet(s"$root/edges/$d"))
-      .select(col("src"), col("dst"), col("score"), col("__seg")),
-      s"$root/edges/$p")
-    val vecsFold = tagged(d => vecsSegment(spark, root, d))
-      .select(col("vec_id"), col("embedding"), col("__seg"))
-    vecsFold.repartitionByRange(8, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", (1 << 20).toString)
-      .parquet(s"$root/vecs/$p")
-    vecsFold.where(pmod(col("vec_id"), lit(CoarseMod)) === lit(0))
-      .repartitionByRange(2, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/coarse/$p")
-    SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-      SegmentStore.Manifest(
-        prefix :+ SegmentStore.ManifestEntry(p, -1L),
-        nextLogical = nextLog, // unchanged: the fold consumes no number
-        nextPhysical = nextPhys + 1,
-        tombRebase = rebase))
-    // no post-publish sweep: folded-away dirs get one fold generation of
-    // grace for in-flight readers (gcUnreferencedSegs retain-one rule)
+    commitFold(root, keep, tag, "knn-tail-fold") { slot =>
+      def tagged(read: String => DataFrame) = readTagged(slot.tail)(read)
+      val p = slot.phys
+      writeAssign(tagged(d => spark.read.parquet(s"$root/assign/$d"))
+        .select(col("vec_id"), col("embedding"), col("__seg"), col("cid")),
+        s"$root/assign/$p")
+      tagged(d => spark.read.parquet(s"$root/probes/$d"))
+        .select(col("src"), col("cid"), col("__seg"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
+      writeEdges(tagged(d => spark.read.parquet(s"$root/edges/$d"))
+        .select(col("src"), col("dst"), col("score"), col("__seg")),
+        s"$root/edges/$p")
+      writeVecs(tagged(servingSegment(spark, root, "vecs")), root, p,
+        Seq("vec_id", "embedding", "__seg"))
+      slot.folded(-1L) // mixed-horizon: the fold consumes no logical number
     }
   }
 
-  /** Size-tiered trigger for [[tailFold]] — fold on READ fan-in, the
-    * suffix chosen by [[SegmentStore.tieredFoldStart]] over the
-    * five-kind segment byte totals (edges + assign dominate).
-    * `keep < maxSegments` required and the ladder-fit warning returned —
-    * see [[IncrementalIvf.tailFoldIfNeeded]]. */
+  /** Size-tiered trigger for [[tailFold]] — [[SegmentedRoot.foldOnFanIn]]
+    * over the five-kind segment byte totals (edges + assign dominate),
+    * the fold start floored at 1 (this fold keeps the first segment). */
   def tailFoldIfNeeded(spark: SparkSession, root: String, maxSegments: Int,
                        keep: Int = 1,
-                       tag: Option[String] = None): Option[String] = {
-    require(keep < maxSegments,
-      s"keep ($keep) must be < maxSegments ($maxSegments): the trigger " +
-        "would fold one segment per trigger forever, never reducing fan-in")
-    val entries = segEntries(root)
-    if (entries.size > maxSegments) {
-      val sizes = segmentSizes(root)
-      tailFold(spark, root,
-        math.max(SegmentStore.tieredFoldStart(sizes, keep, maxSegments), 1),
-        tag)
-      SegmentStore.ladderCheck(sizes, maxSegments)
-    } else None
-  }
-
-  /** Per-live-segment byte totals across the five artifact kinds — the
-    * size input of the fold ladder and of [[SegmentStore.ladderCheck]]
-    * (admin-route observability). Order matches the manifest entry
-    * list. */
-  def segmentSizes(root: String): Seq[Long] =
-    segEntries(root).map(e =>
-      SegKinds.map(k => SegmentStore.treeBytes(s"$root/$k/${e.dir}")).sum)
+                       tag: Option[String] = None): Option[String] =
+    foldOnFanIn(root, maxSegments, keep)(m =>
+      tailFold(spark, root, math.max(m, 1), tag))
 
   /** RECLAIMING full fold — bake every committed kill into ONE fresh
     * segment IN THIS ROOT and REBASE the tombstone ledger, the graph
@@ -1010,50 +779,20 @@ object IncrementalKnn {
     * cadence, not per batch. Idempotent via `tag`; runs under the
     * writer lease. */
   def reclaimFold(spark: SparkSession, root: String, k: Int,
-                  tag: Option[String] = None): Unit = {
-    if (tag.exists(t => committedHasTag(root, t))) return
-    SegmentStore.withWriterLease(root, "knn-reclaim-fold") {
-      val v = version(root)
-      require(v > 0, s"knn graph at $root not initialized")
-      gcUnreferencedSegs(root)
+                  tag: Option[String] = None): Unit =
+    commitFold(root, 0, tag, "knn-reclaim-fold") { slot =>
       val staleN =
         if (repairsCurrent(spark, root)) 0L
-        else staleSrcs(spark, root, v).map(_.count()).getOrElse(0L)
+        else staleSrcs(spark, root, slot.at.v).map(_.count()).getOrElse(0L)
       require(staleN == 0L,
         s"reclaiming fold refused: $staleN srcs have unrepaired holes " +
           "(n_stale_srcs > 0) — baking kills now would freeze them as " +
           "silent truncation; run repair() first")
-      // ledger clocks captured BEFORE the reads they stamp as absorbed
-      val tombV = SegmentStore.tombVersion(tombsBase(root))
+      // repair-ledger clock captured BEFORE the reads it stamps as absorbed
       val repairV = SegmentStore.version(repairBase(root))
-      val cur = SegmentStore.currentManifest(s"$root/commit")
-      val nextPhys = cur.map(_.nextPhysical).getOrElse(v)
-      val nextLog = cur.map(_.nextLogical).getOrElse(v.toLong)
-      val p = nextPhys.toString
-      filterTombs(spark, root,
-          readEntriesTagged(spark, root)(d => s"$root/assign/$d"), Seq("vec_id"))
-        .drop("__seg")
-        .select(col("vec_id"), col("embedding"), col("cid"))
-        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-        .partitionBy("cid").parquet(s"$root/assign/$p")
-      filterTombs(spark, root,
-          readEntriesTagged(spark, root)(d => s"$root/probes/$d"), Seq("src"))
-        .drop("__seg")
-        .select(col("src"), col("cid"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
-      writeEdges(edges(spark, root, k) // covered merged read, repairs baked
-        .select(col("src"), col("dst"), col("score")), s"$root/edges/$p")
-      writeVecs(vectorsAll(spark, root), root, p) // re-sorts the fold
-      SegmentStore.publishManifest(s"$root/commit", v + 1, tag,
-        SegmentStore.Manifest(
-          Seq(SegmentStore.ManifestEntry(p, nextLog)),
-          nextLogical = nextLog + 1,
-          nextPhysical = nextPhys + 1,
-          tombRebase = tombV,
-          repairRebase = repairV))
-      // folded-away dirs: one-generation grace, same as tailFold
+      writeLive(spark, root, k, root, slot.phys)
+      slot.folded().copy(repairRebase = repairV)
     }
-  }
 
   /** Centroid RETRAIN for the graph family — the production answer to
     * the frozen-centroid drift caveat ([[IncrementalIvf.retrain]]'s graph
@@ -1068,28 +807,16 @@ object IncrementalKnn {
   def retrain(spark: SparkSession, root: String, newRoot: String,
               numCentroids: Int, nprobe: Int, k: Int): Unit =
     SegmentStore.withWriterLease(root, "knn-retrain") {
-    require(version(root) > 0, s"knn graph at $root not initialized")
     val live = vectorsAll(spark, root)
     val assembled = live.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
     val model = MlIndex.fitIvfCentroids(assembled, numCentroids)
     import spark.implicits._
-    model.clusterCenters.zipWithIndex.map {
+    init(live, model.clusterCenters.zipWithIndex.map {
         case (c, i) => (i.toLong, c.toArray.map(_.toFloat).toSeq)
       }.toSeq.toDF("cid", "cvec")
-      .select(col("cid"), col("cvec").cast("array<float>").as("cvec"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$newRoot/centroids")
-    val cent = readCentroids(spark, newRoot)
-    Ann.ivfAssign(live, cent)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("cid").parquet(assignDir(newRoot, 0))
-    probeLists(live, cent, nprobe)
-      .write.mode(SaveMode.Overwrite).parquet(probesDir(newRoot, 0))
-    writeEdges(Ann.knnGraph(live, cent, nprobe, k)
-      .select(col("src"), col("dst"), col("score")), edgesDir(newRoot, 0))
-    writeVecs(live, newRoot, "0")
-    publish(newRoot, 1)
+      .select(col("cid"), col("cvec").cast("array<float>").as("cvec")),
+      newRoot, nprobe, k)
     }
 
   /** Incrementally-GROWN whole-corpus graph for `dataDir` (thirds: init +
@@ -1098,14 +825,20 @@ object IncrementalKnn {
     * vectors 0..9, the engine-independent choice). */
   def ensure(spark: SparkSession, dataDir: String,
              nprobe: Int = 3, k: Int = 5): String =
-    IndexCatalog.ensure(spark, dataDir, Name) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
-    }
+    IndexCatalog.ensure(spark, dataDir, Name)(
+      grownThirds(spark, dataDir, _, nprobe, k))
+
+  /** The oracle fixtures' grown graph at `p` (centroids = stored vectors
+    * 0..9; init + two appends by vec_id % 3); returns the embeddings. */
+  private def grownThirds(spark: SparkSession, dataDir: String, p: String,
+                          nprobe: Int, k: Int): DataFrame = {
+    val emb = Tables.embeddings(spark, dataDir)
+    init(emb.where(col("vec_id") % 3 === 0), emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")), p, nprobe, k)
+    append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
+    append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+    emb
+  }
 
   // deterministic demo deletion set for the oracle-checked tombstone
   // read (a28): every 7th-mod-3 vector — spread across all three
@@ -1119,12 +852,7 @@ object IncrementalKnn {
   def ensureTombstoned(spark: SparkSession, dataDir: String,
                        nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
     }
@@ -1150,12 +878,7 @@ object IncrementalKnn {
   def ensureUpserted(spark: SparkSession, dataDir: String,
                      nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       val updated = emb.as("a")
         .join(emb.select(col("vec_id").as("nid"),
           col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
@@ -1176,12 +899,7 @@ object IncrementalKnn {
   def ensureTailFolded(spark: SparkSession, dataDir: String,
                        nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
@@ -1199,12 +917,7 @@ object IncrementalKnn {
   def ensureReclaimFolded(spark: SparkSession, dataDir: String,
                           nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
@@ -1226,12 +939,7 @@ object IncrementalKnn {
   def ensureReclaimDegraded(spark: SparkSession, dataDir: String,
                             nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimDegradedName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
@@ -1248,12 +956,7 @@ object IncrementalKnn {
   def ensureRepaired(spark: SparkSession, dataDir: String,
                      nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, RepairName) { p =>
-      val emb = Tables.embeddings(spark, dataDir)
-      val centroids = emb.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      init(emb.where(col("vec_id") % 3 === 0), centroids, p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 1), p, nprobe, k)
-      append(emb.where(col("vec_id") % 3 === 2), p, nprobe, k)
+      val emb = grownThirds(spark, dataDir, p, nprobe, k)
       delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
         .select(col("vec_id")), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))

@@ -1,17 +1,17 @@
 package graft.index
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE versioned-segment commit protocol shared by every incremental
-  * index ([[IncrementalIvf]], [[IncrementalBm25]], [[IncrementalKnn]]) —
-  * previously three private copies of the same state machine (reference
-  * analogue: Qdrant's collection segments publish through one storage
-  * layer, not one per index type, `scripts/indexing.py:214-260`).
+/** The versioned-segment storage primitives under every incremental
+  * index — versions, markers, manifests, the tombstone ledger, the writer
+  * lease, pointers and snapshots (reference analogue: Qdrant's collection
+  * segments publish through one storage layer, not one per index type,
+  * `scripts/indexing.py:214-260`). The root-level commit protocol the
+  * three families share on top of these is [[SegmentedRoot]].
   *
-  * Protocol (unchanged from the per-index implementations, pinned by the
-  * grown≡rebuilt IndexSpec cases):
+  * Protocol (pinned by the grown≡rebuilt IndexSpec cases):
   *
   *   - versions live under a `versions base` directory as `v=<N>` children;
   *   - a version is COMMITTED iff its zero-byte `_COMMITTED` marker
@@ -66,6 +66,17 @@ object SegmentStore {
     * a retried publish of the same version is idempotent). */
   private def touch(fs: FileSystem, p: Path): Unit =
     fs.create(p, true).close()
+
+  /** Every file under `p`, recursively (one listing, metadata-only). */
+  private def filesUnder(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    val it = fs.listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).toSeq
+  }
+
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
 
   def versionDir(versionsBase: String, v: Int): String =
     s"$versionsBase/v=$v"
@@ -192,17 +203,7 @@ object SegmentStore {
     * an unreadable file (read-during-rewrite, object-store consistency)
     * propagates as IOException for the caller's retry policy. */
   private def readLeaseRaw(fs: FileSystem, p: Path): Option[Array[Byte]] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(buf.toByteArray)
-      } finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(readBytes(fs, p))
 
   /** (owner, stamp, token) best-effort parse; a torn/garbage file parses
     * to stamp 0 (an always-stale CANDIDATE — the rename-verify break
@@ -483,36 +484,33 @@ object SegmentStore {
     }.foldLeft(0)(math.max)
   }
 
-  /** Publish version `v`: optional idempotence tags first, the atomic
-    * marker LAST — after every artifact under the version dir is
-    * durable. `mkdirs` is a no-op when the writer already created the
-    * directory (the stats-carrying layouts do; the marker-only layouts
-    * don't). */
-  def publish(versionsBase: String, v: Int, tag: Option[String]): Unit = {
+  /** Publish version `v`: small payload `files` (name -> bytes) and the
+    * optional idempotence tag first, the atomic marker LAST — after every
+    * artifact under the version dir is durable, so a visible payload or
+    * tag of a committed version is itself committed. `mkdirs` is a no-op
+    * when the writer already created the directory (the stats-carrying
+    * layouts do; the marker-only layouts don't). */
+  def publish(versionsBase: String, v: Int, tag: Option[String],
+              files: Seq[(String, Array[Byte])] = Nil): Unit = {
     val (fs, p) = fsFor(versionDir(versionsBase, v))
     fs.mkdirs(p)
-    tag.foreach(t => touch(fs, new Path(p, s"_tag_$t")))
-    touch(fs, new Path(p, CommitMarker))
-  }
-
-  /** [[publish]] carrying small key=value metadata files alongside the
-    * tag (`_meta_<key>` with the value as content, before the marker —
-    * a visible meta of a committed version is itself committed). Used
-    * for write-time facts a reader would otherwise need a data scan to
-    * recover (e.g. the tombstone-ledger stamp a repair observed —
-    * [[graft.index.IncrementalKnn.repair]]): the read-side fast paths
-    * they enable cost FS probes, not Spark jobs. */
-  def publishWithMeta(versionsBase: String, v: Int, tag: Option[String],
-                      meta: Map[String, String]): Unit = {
-    val (fs, p) = fsFor(versionDir(versionsBase, v))
-    fs.mkdirs(p)
-    meta.foreach { case (k, value) =>
-      val out = fs.create(new Path(p, s"_meta_$k"), true)
-      try out.write(value.getBytes("UTF-8")) finally out.close()
+    files.foreach { case (name, bytes) =>
+      val out = fs.create(new Path(p, name), true)
+      try out.write(bytes) finally out.close()
     }
     tag.foreach(t => touch(fs, new Path(p, s"_tag_$t")))
     touch(fs, new Path(p, CommitMarker))
   }
+
+  /** [[publish]] carrying small key=value metadata files (`_meta_<key>`)
+    * — write-time facts a reader would otherwise need a data scan to
+    * recover (e.g. the tombstone-ledger stamp a repair observed —
+    * [[graft.index.IncrementalKnn.repair]]): the read-side fast paths
+    * they enable cost FS probes, not Spark jobs. */
+  def publishWithMeta(versionsBase: String, v: Int, tag: Option[String],
+                      meta: Map[String, String]): Unit =
+    publish(versionsBase, v, tag,
+      meta.toSeq.map { case (k, value) => s"_meta_$k" -> value.getBytes("UTF-8") })
 
   /** Metadata value `key` published with version `v`, or None when the
     * version predates the meta protocol (readers fall back to deriving
@@ -520,32 +518,19 @@ object SegmentStore {
   def versionMeta(versionsBase: String, v: Int, key: String): Option[String] = {
     val (fs, p) = fsFor(versionDir(versionsBase, v))
     val mp = new Path(p, s"_meta_$key")
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  /** Whether version `v` carries idempotence tag `tag`. Only meaningful
-    * for committed versions (tags land before the marker, so a visible
-    * tag of a committed version is itself committed). */
-  def hasTag(versionsBase: String, v: Int, tag: String): Boolean = {
-    val (fs, p) = fsFor(versionDir(versionsBase, v))
-    fs.exists(new Path(p, s"_tag_$tag"))
+    if (!fs.exists(mp)) None else Some(new String(readBytes(fs, mp), "UTF-8"))
   }
 
   /** Whether ANY committed version carries `tag` — the at-least-once
     * writer's replay check (a redelivered micro-batch whose tag is
-    * visible anywhere in the committed history is skipped). */
-  def anyCommittedHasTag(versionsBase: String, tag: String): Boolean =
-    (1 to version(versionsBase)).exists(v => hasTag(versionsBase, v, tag))
+    * visible anywhere in the committed history is skipped; tags land
+    * before the marker, so a visible tag of a committed version is
+    * itself committed). */
+  def anyCommittedHasTag(versionsBase: String, tag: String): Boolean = {
+    val (fs, _) = fsFor(versionsBase)
+    (1 to version(versionsBase)).exists(v =>
+      fs.exists(new Path(versionDir(versionsBase, v), s"_tag_$tag")))
+  }
 
   // ---- Manifest-addressed segment lists (the tail-fold enabler) ----
   //
@@ -566,18 +551,9 @@ object SegmentStore {
   //    `root` payload) and publishes under the same single `_COMMITTED`
   //    marker as the version's idempotence tag — no second marker, no
   //    torn append-vs-manifest state, `version()` semantics unchanged.
-  //  - NO ledger rewrite on fold: the folded segment takes logical
-  //    number `nextLogical` — ABOVE every tombstone horizon committed so
-  //    far — so existing ledger entries spare the folded rows (their
-  //    kills are baked into the fold) while still killing prefix rows
-  //    (`seg < horizon` unchanged there), and post-fold deletes use a
-  //    yet-higher horizon that correctly kills folded rows. Logical
-  //    numbers are not positions; they only feed the horizon algebra.
-  //  - Ledger REBASE on full folds: a fold that consumed EVERY segment
-  //    baked every tombstone in, so the manifest records the ledger
-  //    version it absorbed (`tombRebase`) and readers skip ledger
-  //    segments below it — bounding the broadcast anti-join input
-  //    without deleting ledger history (the version clock never resets).
+  //  - logical numbers are not positions; they only feed the horizon
+  //    algebra of folds (no ledger rewrite on a fold, a ledger REBASE on
+  //    a full one), which [[SegmentedRoot]] owns.
   //
   // A root without a committed manifest reads positionally, exactly as
   // before — manifests appear at the first tail-fold, so existing roots
@@ -646,14 +622,8 @@ object SegmentStore {
     * first, the atomic marker last — one visible step for the segment
     * list change and the version bump together. */
   def publishManifest(versionsBase: String, v: Int, tag: Option[String],
-                      manifest: Manifest): Unit = {
-    val (fs, p) = fsFor(versionDir(versionsBase, v))
-    fs.mkdirs(p)
-    val out = fs.create(manifestPath(versionsBase, v), true)
-    try out.write(renderManifest(manifest)) finally out.close()
-    tag.foreach(t => touch(fs, new Path(p, s"_tag_$t")))
-    touch(fs, new Path(p, CommitMarker))
-  }
+                      manifest: Manifest): Unit =
+    publish(versionsBase, v, tag, Seq("manifest" -> renderManifest(manifest)))
 
   /** The manifest committed at version `v` of `versionsBase`, or None
     * when that version carries no payload (positional root, or a version
@@ -662,17 +632,7 @@ object SegmentStore {
     if (v <= 0) return None
     val (fs, _) = fsFor(versionsBase)
     val mp = manifestPath(versionsBase, v)
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(parseManifest(buf.toByteArray))
-      } finally in.close()
-    }
+    if (!fs.exists(mp)) None else Some(parseManifest(readBytes(fs, mp)))
   }
 
   /** The CURRENT committed manifest of `versionsBase` (at
@@ -684,11 +644,7 @@ object SegmentStore {
     * to [[tieredFoldStart]]. One recursive listing, metadata-only. */
   def treeBytes(path: String): Long = {
     val (fs, p) = fsFor(path)
-    if (!fs.exists(p)) return 0L
-    var total = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) total += it.next().getLen
-    total
+    if (!fs.exists(p)) 0L else filesUnder(fs, p).map(_.getLen).sum
   }
 
   /** SIZE-TIERED fold-start selection — which suffix of the segment
@@ -781,12 +737,6 @@ object SegmentStore {
     fs.exists(p) && fs.delete(p, true)
   }
 
-  /** Union of per-segment reads for segments `0 until upTo` — the shared
-    * read-side fan-in of every incremental index. */
-  def readSegments(spark: SparkSession, upTo: Int)
-                  (dir: Int => String): DataFrame =
-    (0 until upTo).map(k => spark.read.parquet(dir(k))).reduce(_ unionByName _)
-
   /** Size-tiered auto-compaction trigger — the shared policy half of the
     * LSM story: when the committed segment count `v` exceeds
     * `maxSegments`, fold into a fresh versioned root (the `compact`
@@ -812,14 +762,9 @@ object SegmentStore {
     * the previous pointer committed and visible — never a torn pointer.
     * Works on HDFS/POSIX/object stores for the same reasons the segment
     * markers do. */
-  def setPointer(pointerBase: String, root: String): Unit = {
-    val v = version(pointerBase) + 1
-    val (fs, dir) = fsFor(versionDir(pointerBase, v))
-    fs.mkdirs(dir)
-    val out = fs.create(new Path(dir, "root"), true)
-    try out.write(root.getBytes("UTF-8")) finally out.close()
-    publish(pointerBase, v, None)
-  }
+  def setPointer(pointerBase: String, root: String): Unit =
+    publish(pointerBase, version(pointerBase) + 1, None,
+      Seq("root" -> root.getBytes("UTF-8")))
 
   /** Committed current root, or None before the first swap. */
   def getPointer(pointerBase: String): Option[String] = {
@@ -832,14 +777,7 @@ object SegmentStore {
     * value is the retire() candidate after a swap's readers drain. */
   def readPointer(pointerBase: String, v: Int): String = {
     val (fs, _) = fsFor(pointerBase)
-    val in = fs.open(new Path(versionDir(pointerBase, v), "root"))
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
+    new String(readBytes(fs, new Path(versionDir(pointerBase, v), "root")), "UTF-8")
   }
 
   /** Recovery-and-retirement sweep for the compact-swap loop — run at
@@ -895,15 +833,7 @@ object SegmentStore {
     val cur = getPointer(pointerBase).getOrElse(defaultRoot)
     val pv = version(pointerBase)
     if (pv > 0) {
-      // The ONE retirement point of the compact-swap loop (r14: the
-      // maintenance loops no longer retire inline after a swap). The
-      // pv-1 target was superseded by the LAST committed swap — at
-      // least one full trigger ago, since this sweep runs at trigger
-      // START and swaps commit at trigger END — so a serving frame
-      // planned against it before the swap has had the whole trigger
-      // interval to collect: the pointer-swap twin of the tail-folds'
-      // retain-one-generation GC ([[gcUnreferencedSegs]]' policy).
-      // Idempotent and O(1) when already reclaimed (one exists-probe).
+      // the ONE retirement point of the compact-swap loop (item 2)
       val prev = if (pv == 1) defaultRoot else readPointer(pointerBase, pv - 1)
       if (prev != cur) retire(prev)
     }
@@ -949,8 +879,7 @@ object SegmentStore {
                 beforeSeg: Long = Long.MaxValue): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val cb = tombCommitBase(base)
-    if (tag.exists(t => (1 to version(cb)).exists(v => hasTag(cb, v, t))))
-      return
+    if (tag.exists(anyCommittedHasTag(cb, _))) return
     val tv = version(cb)
     ids.select(col(idCol).cast("long").as(idCol)).distinct()
       .withColumn("before_seg", lit(beforeSeg))
@@ -977,15 +906,14 @@ object SegmentStore {
     * keep the folded [[tombIds]]. */
   def tombIdsVersioned(spark: SparkSession, base: String,
                        fromVersion: Int = 0): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val tv = version(tombCommitBase(base))
     if (tv <= fromVersion) None
     else Some((fromVersion until tv).map { k =>
       val raw = spark.read.parquet(tombSegDir(base, k))
-      val withSeg =
-        if (raw.columns.contains("before_seg")) raw
-        else raw.withColumn("before_seg", lit(Long.MaxValue))
-      withSeg.withColumn("tomb_v", lit((k + 1).toLong))
+      (if (raw.columns.contains("before_seg")) raw
+       else raw.withColumn("before_seg", lit(Long.MaxValue)))
+        .withColumn("tomb_v", lit((k + 1).toLong))
     }.reduce(_ unionByName _))
   }
 
@@ -999,19 +927,10 @@ object SegmentStore {
     * baked into a full fold — see the manifest section above). */
   def tombIds(spark: SparkSession, base: String,
               fromVersion: Int = 0): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit, max}
-    val tv = version(tombCommitBase(base))
-    if (tv <= fromVersion) None
-    else {
-      val raw = (fromVersion until tv)
-        .map(k => spark.read.parquet(tombSegDir(base, k)))
-        .reduce(_ unionByName _)
-      val withSeg =
-        if (raw.columns.contains("before_seg")) raw
-        else raw.withColumn("before_seg", lit(Long.MaxValue))
-      val idCol = withSeg.columns.head
-      Some(withSeg.groupBy(col(idCol))
-        .agg(max(col("before_seg")).as("before_seg")))
+    import org.apache.spark.sql.functions.{col, max}
+    tombIdsVersioned(spark, base, fromVersion).map { t =>
+      t.groupBy(col(t.columns.head))
+        .agg(max(col("before_seg")).as("before_seg"))
     }
   }
 
@@ -1093,15 +1012,13 @@ object SegmentStore {
       .getOrElse(new Configuration())
     withWriterLease(src, "snapshot") { // quiesce folds/appends (see doc)
       val prefix = sp.toString + "/"
-      val files = scala.collection.mutable.ArrayBuffer[Path]()
-      val it = fs.listFiles(sp, true)
-      while (it.hasNext) files += it.next().getPath
+      val files = filesUnder(fs, sp).map(_.getPath)
       def copy(p: Path): Unit = {
         val rel = p.toString.stripPrefix(prefix)
         org.apache.hadoop.fs.FileUtil.copy(
           fs, p, dfs, new Path(dest, rel), false, conf)
       }
-      orderForCopy(files.toSeq).foreach(copy)
+      orderForCopy(files).foreach(copy)
     }
   }
 
@@ -1158,15 +1075,9 @@ object SegmentStore {
       val (fs, p0) = fsFor(root)
       if (!fs.exists(p0)) return Set.empty
       val p = fs.makeQualified(p0)
-      val prefix = p.toString + "/"
-      val out = scala.collection.mutable.Set[String]()
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName == CommitMarker || f.getName == ReadyMarker)
-          out += f.toString.stripPrefix(prefix)
-      }
-      out.toSet
+      filesUnder(fs, p).map(_.getPath)
+        .filter(f => f.getName == CommitMarker || f.getName == ReadyMarker)
+        .map(_.toString.stripPrefix(p.toString + "/")).toSet
     }
     (markerSet(src) -- markerSet(dest)).toSeq.sorted
   }
@@ -1186,17 +1097,12 @@ object SegmentStore {
   def danglingManifestRefs(root: String): Seq[String] = {
     val (fs, p0) = fsFor(root)
     if (!fs.exists(p0)) return Seq.empty
-    val bases = scala.collection.mutable.Set[Path]()
-    val it = fs.listFiles(fs.makeQualified(p0), true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      // a manifest payload lives at <base>/v=N/manifest
-      if (f.getName == "manifest" && f.getParent != null &&
-          f.getParent.getName.startsWith("v=") &&
-          f.getParent.getParent != null)
-        bases += f.getParent.getParent
-    }
-    bases.toSeq.flatMap { base =>
+    // a manifest payload lives at <base>/v=N/manifest
+    val bases = filesUnder(fs, fs.makeQualified(p0)).map(_.getPath)
+      .filter(f => f.getName == "manifest" && f.getParent != null &&
+        f.getParent.getName.startsWith("v=") && f.getParent.getParent != null)
+      .map(_.getParent.getParent).distinct
+    bases.flatMap { base =>
       val baseStr = base.toString
       currentManifest(baseStr).toSeq.flatMap { m =>
         val idxRoot = base.getParent.toString
@@ -1245,13 +1151,8 @@ object SegmentStore {
     val (fs, p) = fsFor(root)
     if (!fs.exists(p)) false
     else {
-      val markers = scala.collection.mutable.ArrayBuffer[Path]()
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName == CommitMarker) markers += st.getPath
-      }
-      markers.foreach(m => fs.delete(m, false))
+      filesUnder(fs, p).map(_.getPath).filter(_.getName == CommitMarker)
+        .foreach(fs.delete(_, false))
       fs.delete(p, true)
     }
   }

@@ -80,22 +80,6 @@ object TfIdfEmbedder {
       .select(col(idCol), col("bucket"), (col("w") / col("norm")).as("w"))
   }
 
-  /** Embed a literal query string with the CORPUS idf (the reference embeds
-    * queries with the same model as passages, `scripts/indexing.py:871-882`).
-    * Returns (bucket, qw), l2-normalized; at most |query tokens| rows. */
-  def queryVector(docs: DataFrame, idCol: String, textCol: String,
-                  query: String, dim: Int = DefaultDim): DataFrame = {
-    val qtf = docs.sparkSession.range(1).select(lit(query).as("qtext"))
-      .select(explode(TextOps.tokens(col("qtext"))).as("tok"))
-      .select(bucket(col("tok"), dim).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("tf"))
-    val weighted = qtf.join(idf(docs, idCol, textCol, dim), "bucket")
-      .withColumn("w", col("tf") * col("idf"))
-    val norm = weighted.agg(sqrt(sum(col("w") * col("w"))).as("norm"))
-    weighted.crossJoin(broadcast(norm))
-      .select(col("bucket"), (col("w") / col("norm")).as("qw"))
-  }
-
   /** End-to-end text search: embed query, cosine against normalized doc
     * vectors (= plain dot product via bucket join), top-k.
     *

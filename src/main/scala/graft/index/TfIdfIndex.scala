@@ -57,7 +57,6 @@ object TfIdfIndex {
     * only to score). */
   private val idfCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Double]]()
-  def invalidateIdfCache(): Unit = idfCache.clear()
   /** Drop cached idf tables living under `root` (wired into
     * `IndexCatalog.invalidate` so a rebuild can't serve stale idf). */
   def invalidateIdfCacheUnder(root: String): Unit =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.index.{IncrementalBm25, IncrementalIvf, IncrementalKnn, SegmentStore, SegmentedRoot}
+
 /** Structured Streaming operators (reference §2.10: the delta-import dir
   * N2 and checkpointed progress N4, made real streams).
   *
@@ -43,9 +45,8 @@ object DeltaStream {
     * the batch's checkpoint offset is then uncommitted and a restart
     * replays it exactly-once; schedule copies that outlast the retry
     * budget off-peak. */
-  private def withLeaseRetry[T](maxWaitMs: Long = leaseRetryMaxWaitMs)
-                               (body: => T): T = {
-    val deadline = System.currentTimeMillis() + maxWaitMs
+  private def withLeaseRetry[T](body: => T): T = {
+    val deadline = System.currentTimeMillis() + leaseRetryMaxWaitMs
     var backoffMs = 250L
     while (true) {
       try return body
@@ -61,20 +62,26 @@ object DeltaStream {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Start a checkpointed stream over `rows` that hands every
+    * micro-batch (and its id) to `f` — the sink shape of every
+    * `foreachBatch` operator here. */
+  private def onEachBatch(rows: DataFrame, checkpoint: String)
+                         (f: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .outputMode(OutputMode.Update())
+      .start()
+
   /** N2: stream new JSON files from a delta directory; each micro-batch is
     * handed to `merge` (e.g. Lifecycle.deltaDetect + parquet upsert). */
   def deltaImport(spark: SparkSession, deltaDir: String, checkpoint: String,
                   schema: org.apache.spark.sql.types.StructType)
                  (merge: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream
+    onEachBatch(spark.readStream
       .schema(schema)
       .option("multiLine", "true")
-      .json(deltaDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(merge)
-      .outputMode(OutputMode.Update())
-      .start()
+      .json(deltaDir), checkpoint)(merge)
 
   /** Watermarked tumbling-window counts over an event stream:
     * (window, event_type) → n, sum_value. Late data beyond the watermark
@@ -115,14 +122,10 @@ object DeltaStream {
     * retrain or widen the LM if the stream drifts. */
   def curationIngest(docs: DataFrame, lp: DataFrame, checkpoint: String)
                     (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.functions.CorpusStats.curationVerdictWithLm(batch, lp),
-          batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(docs, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      sink(graft.functions.CorpusStats.curationVerdictWithLm(batch, lp),
+        batchId)
+    }
 
   /** Streaming NEAR-dup gate at ingest: every micro-batch is MinHash-
     * banded (`Dedup.minhashBands` — same signatures as the batch d3
@@ -144,42 +147,38 @@ object DeltaStream {
   def lshDedupIngest(docs: DataFrame, bandStore: String, checkpoint: String,
                      n: Int = 3)
                     (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = graft.dedup.Dedup.minhashBands(batch, "doc_id", "text", n)
-          .localCheckpoint() // three consumers below; bands are tiny (4/doc)
-        val stored =
-          try spark.read.parquet(bandStore).select(col("band_id"), col("band"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("band"))
-              .limit(0) }
-        val hitStore = fresh.join(stored, Seq("band_id", "band"), "left_semi")
-          .select(col("doc_id"))
-        // intra-batch: a band's keeper is its min doc_id (partial-agg min,
-        // skew-immune); every other doc holding that band drops.
-        val intraLosers = fresh
-          .join(fresh.groupBy(col("band_id"), col("band"))
-              .agg(min(col("doc_id")).as("keeper")),
-            Seq("band_id", "band"))
-          .where(col("doc_id") =!= col("keeper"))
-          .select(col("doc_id"))
-        val dropIds = hitStore.union(intraLosers).distinct()
-        val survivors = batch.join(dropIds, Seq("doc_id"), "left_anti")
-        // One file per micro-batch append (band rows are 4/doc — tiny):
-        // a steady stream would otherwise shed shuffle-partition-many
-        // small files per trigger and the store's read side would choke
-        // on file count long before data size. Periodic `Store.compact`
-        // on the band store is the long-run answer; coalesce keeps the
-        // interval between compactions long.
-        fresh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .coalesce(1)
-          .write.mode("append").parquet(bandStore)
-        sink(survivors, batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(docs, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      val spark = batch.sparkSession
+      val fresh = graft.dedup.Dedup.minhashBands(batch, "doc_id", "text", n)
+        .localCheckpoint() // three consumers below; bands are tiny (4/doc)
+      val stored =
+        try spark.read.parquet(bandStore).select(col("band_id"), col("band"))
+        catch { case _: org.apache.spark.sql.AnalysisException =>
+          spark.emptyDataFrame.select(lit(0).as("band_id"), lit("").as("band"))
+            .limit(0) }
+      val hitStore = fresh.join(stored, Seq("band_id", "band"), "left_semi")
+        .select(col("doc_id"))
+      // intra-batch: a band's keeper is its min doc_id (partial-agg min,
+      // skew-immune); every other doc holding that band drops.
+      val intraLosers = fresh
+        .join(fresh.groupBy(col("band_id"), col("band"))
+            .agg(min(col("doc_id")).as("keeper")),
+          Seq("band_id", "band"))
+        .where(col("doc_id") =!= col("keeper"))
+        .select(col("doc_id"))
+      val dropIds = hitStore.union(intraLosers).distinct()
+      val survivors = batch.join(dropIds, Seq("doc_id"), "left_anti")
+      // One file per micro-batch append (band rows are 4/doc — tiny):
+      // a steady stream would otherwise shed shuffle-partition-many
+      // small files per trigger and the store's read side would choke
+      // on file count long before data size. Periodic `Store.compact`
+      // on the band store is the long-run answer; coalesce keeps the
+      // interval between compactions long.
+      fresh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .coalesce(1)
+        .write.mode("append").parquet(bandStore)
+      sink(survivors, batchId)
+    }
 
   /** Streaming CDC ingest: a continuous I/U/D changelog folded into a
     * parquet snapshot per micro-batch via
@@ -200,79 +199,15 @@ object DeltaStream {
     */
   def cdcIngest(changes: DataFrame, basePath: String, checkpoint: String,
                 idCol: String, seqCol: String, opCol: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val payloadCols = batch.columns.filterNot(c => c == seqCol || c == opCol)
-        val base = graft.ingest.Store.readSnapshot(spark, basePath)
-          .getOrElse(batch.select(payloadCols.map(col): _*).limit(0))
-        graft.ingest.Store.replaceSnapshot(
-          graft.ingest.Lifecycle.applyChangelog(base, batch, idCol, seqCol, opCol),
-          basePath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** Streaming index maintenance: each micro-batch of new documents
-    * becomes ONE committed segment of an [[graft.index.IncrementalBm25]]
-    * index — the ingest half of the search story (the reference re-upserts
-    * delta points into its live Qdrant index, `scripts/indexing.py:
-    * 214-260`; here search stays available throughout because readers
-    * always see the last PUBLISHED stats version, never a half-appended
-    * segment). foreachBatch is at-least-once, so each batch tags the
-    * stats version it publishes with its batch id and a redelivered
-    * batch whose tag is already committed is skipped — combined with
-    * "retry overwrites the orphan segment at the same number", the index
-    * is exactly-once. Per-batch segments are single-file (micro-batches
-    * are small); periodic [[graft.index.IncrementalBm25.compact]] folds
-    * the tail, the standard LSM discipline. */
-  def indexIngest(docs: DataFrame, indexRoot: String, checkpoint: String,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  maxSegments: Int = Int.MaxValue)
-      : StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalBm25, SegmentStore}
-        // Bounded-storage maintenance loop: the live root is resolved
-        // through the durable pointer (first batch: `indexRoot` itself),
-        // and when the append pushes the segment count past
-        // `maxSegments`, this batch compacts and swaps the pointer —
-        // the stream is the only writer and readers resolve the
-        // pointer. The superseded root is NOT retired inline: a serving
-        // frame planned against it seconds before the swap must still
-        // collect, so retirement routes through the NEXT trigger's
-        // [[SegmentStore.recoverRoot]] sweep (one-trigger drain window —
-        // the pointer-swap twin of the tail-folds' retain-one-generation
-        // GC). The compacted root's first version carries THIS batch's
-        // idempotence tag: on redelivery (restart of the one uncommitted
-        // batch) the tag is found on the current root and the whole
-        // append+compact step is skipped — older batches are
-        // checkpoint-committed and never redelivered. recoverRoot also
-        // finishes a predecessor's crashed swap (adopts a published-but-
-        // unswapped compacted root carrying this batch's tag) so no
-        // crash window leaks an index copy.
-        withLeaseRetry() {
-          val ptr = s"$indexRoot.current"
-          val tag = s"batch_$batchId"
-          val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-            IncrementalBm25.version, IncrementalBm25.committedHasTag)
-          if (!batch.isEmpty && !IncrementalBm25.committedHasTag(root, tag)) {
-            if (IncrementalBm25.version(root) == 0)
-              IncrementalBm25.init(batch, idCol, textCol, root,
-                numFiles = 1, tag = Some(tag))
-            else
-              IncrementalBm25.append(batch, idCol, textCol, root,
-                numFiles = 1, tag = Some(tag))
-            val newRoot = IncrementalBm25.compactIfNeeded(
-              batch.sparkSession, root, idCol, maxSegments, tag = Some(tag))
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(changes, checkpoint) { (batch: DataFrame, _: Long) =>
+      val spark = batch.sparkSession
+      val payloadCols = batch.columns.filterNot(c => c == seqCol || c == opCol)
+      val base = graft.ingest.Store.readSnapshot(spark, basePath)
+        .getOrElse(batch.select(payloadCols.map(col): _*).limit(0))
+      graft.ingest.Store.replaceSnapshot(
+        graft.ingest.Lifecycle.applyChangelog(base, batch, idCol, seqCol, opCol),
+        basePath)
+    }
 
   /** Collapse a CDC micro-batch to the NET operation per key — the
     * in-batch ordering contract (r10 ADVICE): the ingest loops apply ops
@@ -316,23 +251,205 @@ object DeltaStream {
         batch
     }
 
-  /** CDC-shaped [[indexIngest]] — the BM25 member of the family pattern
-    * ([[textGraphCdcIngest]] is the graph member): each micro-batch of
-    * (op, doc_id, text) changelog rows is collapsed to the net op per
-    * key ([[collapseCdc]] — pass `seqCol` when a trigger can carry
-    * multiple ops for one key), then DELETES apply first
-    * ([[graft.index.IncrementalBm25.delete]] tombstones — the doc leaves
+
+  // ---- Streaming index maintenance: one loop, seven entry points ----
+  //
+  // Every maintenance entry point below is a thin call into [[maintain]],
+  // which runs one trigger as: resolve the live root through the durable
+  // pointer ([[SegmentStore.recoverRoot]]), collapse a CDC batch to the
+  // net op per key ([[collapseCdc]]), apply tagged deletes → upserts →
+  // (kNN repair) → inserts, then tail-fold in place or compact into a
+  // fresh root and swap the pointer.
+
+  /** One index family's half of [[maintain]]: the root's protocol object
+    * ([[graft.index.SegmentedRoot]] — version and replay tags), the change
+    * rows' key and payload columns, and the family's own tagged steps. */
+  private abstract class Family(val index: SegmentedRoot, val idCol: String,
+                                val payload: Seq[String]) {
+    /** Net inserts and upserts reaching an uninitialized root initialize
+      * it (BM25); otherwise they reach the family's upsert/append, whose
+      * "not initialized" refusal fails the trigger. */
+    def initOnEmpty: Boolean = false
+    def delete(ids: DataFrame, root: String, tag: String): Unit
+    def upsert(rows: DataFrame, root: String, tag: String): Unit
+    def append(rows: DataFrame, root: String, tag: String): Unit
+    def repair(root: String, tag: String): Unit = ()
+    def tailFold(root: String, maxSegments: Int, tag: String): Unit
+    /** Full fold into a fresh root past `maxSegments`: the root to read. */
+    def compact(root: String, maxSegments: Int, tag: String): String
+  }
+
+  private def bm25(spark: SparkSession, key: String, textCol: String,
+                   driftFoldShare: Double = 1.0): Family =
+    new Family(IncrementalBm25, key, Seq(textCol)) {
+      override def initOnEmpty = true
+      def delete(ids: DataFrame, root: String, tag: String): Unit =
+        IncrementalBm25.delete(ids, idCol, root, Some(tag))
+      def upsert(rows: DataFrame, root: String, tag: String): Unit =
+        IncrementalBm25.upsert(rows, idCol, textCol, root, 1, Some(tag))
+      def append(rows: DataFrame, root: String, tag: String): Unit =
+        if (IncrementalBm25.version(root) == 0)
+          IncrementalBm25.init(rows, idCol, textCol, root, 1, Some(tag))
+        else IncrementalBm25.append(rows, idCol, textCol, root, 1, Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalBm25.tailFoldIfNeeded(spark, root, idCol, maxSegments,
+          tag = Some(tag), driftFoldShare = driftFoldShare)
+      def compact(root: String, maxSegments: Int, tag: String): String =
+        IncrementalBm25.compactIfNeeded(spark, root, idCol, maxSegments, Some(tag))
+    }
+
+  private def ivf(spark: SparkSession): Family =
+    new Family(IncrementalIvf, "vec_id", Seq("embedding")) {
+      def delete(ids: DataFrame, root: String, tag: String): Unit =
+        IncrementalIvf.delete(ids, root, Some(tag))
+      def upsert(rows: DataFrame, root: String, tag: String): Unit =
+        IncrementalIvf.upsert(rows, root, Some(tag))
+      def append(rows: DataFrame, root: String, tag: String): Unit =
+        IncrementalIvf.append(rows, root, Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
+      def compact(root: String, maxSegments: Int, tag: String): String =
+        IncrementalIvf.compactIfNeeded(spark, root, maxSegments, Some(tag))
+    }
+
+  /** The graph family over (vec_id, embedding) rows, or — with `dataDir` —
+    * over (doc_id, text) rows embedded into that corpus's FROZEN tfidf
+    * space ([[graft.index.TfIdfGraphIndex.embedDocsDense]]). */
+  private def knn(spark: SparkSession, nprobe: Int, k: Int,
+                  dataDir: Option[String] = None): Family =
+    new Family(IncrementalKnn, dataDir.fold("vec_id")(_ => "doc_id"),
+        Seq(dataDir.fold("embedding")(_ => "text"))) {
+      private def embed(rows: DataFrame): DataFrame = dataDir.fold(rows)(
+        graft.index.TfIdfGraphIndex.embedDocsDense(spark, _, rows))
+      def delete(ids: DataFrame, root: String, tag: String): Unit =
+        IncrementalKnn.delete(ids.withColumnRenamed(idCol, "vec_id"), root,
+          Some(tag))
+      def upsert(rows: DataFrame, root: String, tag: String): Unit =
+        IncrementalKnn.upsert(embed(rows), root, nprobe, k, Some(tag))
+      def append(rows: DataFrame, root: String, tag: String): Unit =
+        IncrementalKnn.append(embed(rows), root, nprobe, k, Some(tag))
+      override def repair(root: String, tag: String): Unit =
+        IncrementalKnn.repair(spark, root, nprobe, k, Some(tag))
+      def tailFold(root: String, maxSegments: Int, tag: String): Unit =
+        IncrementalKnn.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
+      def compact(root: String, maxSegments: Int, tag: String): String =
+        IncrementalKnn.compactIfNeeded(spark, root, k, maxSegments, Some(tag))
+    }
+
+  /** Stream `rows` into the index at `indexRoot`, one [[maintain]] call
+    * per micro-batch. `cdc` batches carry (op, id, payload) changelog rows;
+    * otherwise every row is an insert. */
+  private def maintainStream(rows: DataFrame, checkpoint: String,
+                             indexRoot: String, cdc: Boolean,
+                             seqCol: Option[String], maxSegments: Int,
+                             tailFold: Boolean)
+                            (family: SparkSession => Family): StreamingQuery =
+    onEachBatch(rows, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      maintain(family(batch.sparkSession), batch, batchId, indexRoot, cdc,
+        seqCol, maxSegments, tailFold)
+    }
+
+  /** The per-trigger index maintenance loop — the bounded-storage,
+    * exactly-once loop every maintenance entry point runs, inside
+    * [[withLeaseRetry]]:
+    *
+    *   1. resolve the live root through the durable `<indexRoot>.current`
+    *      pointer ([[SegmentStore.recoverRoot]] — first trigger:
+    *      `indexRoot` itself; also finishes a crashed compaction swap and
+    *      retires the root the PREVIOUS swap superseded, so a serving frame
+    *      planned against it has one trigger interval to collect);
+    *   2. collapse a CDC batch to the net op per key ([[collapseCdc]]);
+    *   3. deletes (tag `del_N`), upserts (`ups_N`), the kNN repair
+    *      (`rep_N`, after any delete or upsert — BEFORE the inserts, so a
+    *      compaction they trigger folds the healed edges, and a doc
+    *      inserted after deletes is born with its exact surviving top-k),
+    *      then inserts (`batch_N`);
+    *   4. when the root is initialized, on EVERY op mix: tail-fold in
+    *      place (`fold_N`, the root path never moves), or compact into a
+    *      fresh root carrying `batch_N` and swap the pointer.
+    *
+    * Empty-root rule: deletes that reach an uninitialized root are no-ops
+    * in every family; net inserts and upserts initialize a BM25 root and
+    * fail the trigger with the family's "not initialized" error on an IVF
+    * or kNN root (which must be initialized first — `init` freezes the
+    * centroids).
+    *
+    * Replay rule (Spark replays the one uncommitted batch after a crash;
+    * [[withLeaseRetry]] re-runs a refused body): every step is tagged, and
+    * a tag visible on ANY committed version skips its step. A root that
+    * already carries `batch_N` — committed by the insert append, or by the
+    * compaction the pointer swapped to — has applied steps 2–3 of this
+    * trigger (they commit in that order), so they are skipped as a whole;
+    * only the idempotent fold step runs again. */
+  private def maintain(f: Family, batch: DataFrame, batchId: Long,
+                       indexRoot: String, cdc: Boolean, seqCol: Option[String],
+                       maxSegments: Int, tailFold: Boolean): Unit =
+    withLeaseRetry {
+      val ptr = s"$indexRoot.current"
+      val tag = s"batch_$batchId"
+      val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
+        f.index.version, f.index.committedHasTag)
+      if (!f.index.committedHasTag(root, tag)) {
+        val live = f.index.version(root) > 0
+        val nb = if (cdc) collapseCdc(batch, f.idCol, seqCol) else batch
+        def rows(op: String): DataFrame = nb.where(col("op") === op)
+          .select((f.idCol +: f.payload).map(col): _*)
+        val hadDels = cdc && live && {
+          val dels = nb.where(col("op") === "D")
+            .select(col(f.idCol).cast("long").as(f.idCol))
+          !dels.isEmpty && { f.delete(dels, root, s"del_$batchId"); true }
+        }
+        // net upserts on an empty root that initializes are net inserts
+        val upsAsIns = cdc && !live && f.initOnEmpty
+        val hadUps = cdc && !upsAsIns && {
+          val ups = rows("U")
+          !ups.isEmpty && { f.upsert(ups, root, s"ups_$batchId"); true }
+        }
+        if (hadDels || hadUps) f.repair(root, s"rep_$batchId")
+        val ins =
+          if (!cdc) batch
+          else if (upsAsIns) rows("I").unionByName(rows("U"))
+          else rows("I")
+        if (!ins.isEmpty) f.append(ins, root, tag)
+      }
+      if (f.index.version(root) > 0) {
+        if (tailFold) f.tailFold(root, maxSegments, s"fold_$batchId")
+        else {
+          val newRoot = f.compact(root, maxSegments, tag)
+          if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
+        }
+      }
+    }
+
+  /** Streaming BM25 index maintenance: each micro-batch of new documents
+    * becomes ONE committed segment of an [[IncrementalBm25]] index (the
+    * first initializes it) — the ingest half of the search story (the
+    * reference re-upserts delta points into its live Qdrant index,
+    * `scripts/indexing.py:214-260`; here search stays available
+    * throughout because readers always see the last PUBLISHED stats
+    * version, never a half-appended segment). Past `maxSegments` the
+    * trigger compacts and swaps the pointer. Exactly-once and
+    * bounded-storage per [[maintain]]. */
+  def indexIngest(docs: DataFrame, indexRoot: String, checkpoint: String,
+                  idCol: String = "doc_id", textCol: String = "text",
+                  maxSegments: Int = Int.MaxValue)
+      : StreamingQuery =
+    maintainStream(docs, checkpoint, indexRoot, cdc = false, None,
+      maxSegments, tailFold = false)(bm25(_, idCol, textCol))
+
+  /** CDC-shaped [[indexIngest]]: each micro-batch of (op, doc_id, text)
+    * changelog rows collapses to the net op per key ([[collapseCdc]] —
+    * pass `seqCol` when a trigger can carry multiple ops for one key),
+    * then DELETES tombstone ([[IncrementalBm25.delete]] — the doc leaves
     * every `topK` this trigger, stats stale until compaction per the
-    * Lucene contract), op=U UPSERTS in place
-    * ([[graft.index.IncrementalBm25.upsert]] — same id, new text), and
-    * INSERTS last, inside the one single-writer loop. On an
-    * uninitialized root, net-U rows fold into the init set (they are
-    * net inserts by definition there). With `tailFoldCompaction`,
-    * `driftFoldShare` < 1 additionally escalates to the full merge
-    * moment when the stale-stats drift share crosses it
-    * ([[graft.index.IncrementalBm25.tailFoldIfNeeded]]) — the
-    * delete-heavy steady state catches its scoring stats up without an
-    * operator call. */
+    * Lucene contract), op=U UPSERTS in place ([[IncrementalBm25.upsert]]
+    * — same id, new text), and INSERTS append, per [[maintain]]. On an
+    * uninitialized root, net-U rows fold into the init set (they are net
+    * inserts by definition there). With `tailFoldCompaction`,
+    * `driftFoldShare` < 1 additionally escalates to the full merge moment
+    * when the stale-stats drift share crosses it
+    * ([[IncrementalBm25.tailFoldIfNeeded]]) — the delete-heavy steady
+    * state catches its scoring stats up without an operator call. */
   def indexCdcIngest(changes: DataFrame, indexRoot: String,
                      checkpoint: String,
                      idCol: String = "doc_id", textCol: String = "text",
@@ -340,130 +457,103 @@ object DeltaStream {
                      seqCol: Option[String] = None,
                      tailFoldCompaction: Boolean = false,
                      driftFoldShare: Double = 1.0): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalBm25, SegmentStore}
-        withLeaseRetry() {
-        val ptr = s"$indexRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-          IncrementalBm25.version, IncrementalBm25.committedHasTag)
-        val nb = collapseCdc(batch, idCol, seqCol)
-        val live = IncrementalBm25.version(root) > 0
-        val dels = nb.where(col("op") === "D")
-          .select(col(idCol).cast("long").as(idCol))
-        if (!dels.isEmpty && live)
-          IncrementalBm25.delete(dels, idCol, root, Some(s"del_$batchId"))
-        val ups0 = nb.where(col("op") === "U")
-          .select(col(idCol), col(textCol))
-        if (live && !ups0.isEmpty)
-          IncrementalBm25.upsert(ups0, idCol, textCol, root,
-            numFiles = 1, tag = Some(s"ups_$batchId"))
-        val ins0 = nb.where(col("op") === "I")
-          .select(col(idCol), col(textCol))
-        val ins = if (live) ins0 else ins0.unionByName(ups0)
-        if (!ins.isEmpty && !IncrementalBm25.committedHasTag(root, tag)) {
-          if (IncrementalBm25.version(root) == 0)
-            IncrementalBm25.init(ins, idCol, textCol, root,
-              numFiles = 1, tag = Some(tag))
-          else
-            IncrementalBm25.append(ins, idCol, textCol, root,
-              numFiles = 1, tag = Some(tag))
-        }
-        // compaction check runs for EVERY op mix, not just inserts:
-        // upserts append a segment each (and deletes grow the tombstone
-        // ledger the fold clears), so a pure-U/D changelog — the common
-        // steady-state CDC shape — must still hit the size-tiered fold or
-        // segment fan-in grows without bound ([[textGraphCdcIngest]]
-        // always had it hoisted; this loop gated it on inserts).
-        if (IncrementalBm25.version(root) > 0) {
-          if (tailFoldCompaction) {
-            // in-place bounded-write fold (see [[ivfCdcIngest]]'s twin):
-            // O(tail) per trigger, pointer never moves. `driftFoldShare`
-            // escalates to the FULL merge moment when the family's
-            // stale-stats drift crosses the operator's tolerance.
-            IncrementalBm25.tailFoldIfNeeded(batch.sparkSession, root,
-              idCol, maxSegments, tag = Some(s"fold_$batchId"),
-              driftFoldShare = driftFoldShare)
-            ()
-          } else {
-            val newRoot = IncrementalBm25.compactIfNeeded(
-              batch.sparkSession, root, idCol, maxSegments, tag = Some(tag))
-            // superseded root retired by the NEXT trigger's recoverRoot
-            // sweep, not inline — see [[indexIngest]]'s drain note
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    maintainStream(changes, checkpoint, indexRoot, cdc = true, seqCol,
+      maxSegments, tailFoldCompaction)(bm25(_, idCol, textCol, driftFoldShare))
 
-  /** CDC-shaped [[ivfIngest]] — the IVF member of the family pattern:
-    * the micro-batch collapses to the net op per key ([[collapseCdc]];
-    * pass `seqCol` for multi-op-per-key triggers), then deletes
-    * tombstone first ([[graft.index.IncrementalIvf.delete]] — exclusion
+  /** CDC-shaped [[ivfIngest]]: the micro-batch collapses to the net op per
+    * key ([[collapseCdc]]; pass `seqCol` for multi-op-per-key triggers),
+    * then deletes tombstone first ([[IncrementalIvf.delete]] — exclusion
     * IS rebuild semantics for IVF, so the served index equals a rebuild
-    * without the deleted vectors from this trigger on, no staleness and
-    * no repair step needed), upserts and inserts follow. The stream
-    * must be initialized first ([[graft.index.IncrementalIvf.init]]
-    * freezes the centroids). */
+    * without the deleted vectors from this trigger on, no staleness and no
+    * repair step needed), upserts and inserts follow, per [[maintain]].
+    * The root must be initialized first ([[IncrementalIvf.init]] freezes
+    * the centroids). `tailFoldCompaction` folds in place — O(tail) per
+    * trigger instead of the full fold's O(corpus) rewrite, the pointer
+    * never moves. */
   def ivfCdcIngest(changes: DataFrame, indexRoot: String,
                    checkpoint: String,
                    maxSegments: Int = Int.MaxValue,
                    seqCol: Option[String] = None,
                    tailFoldCompaction: Boolean = false): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalIvf, SegmentStore}
-        withLeaseRetry() {
-        val ptr = s"$indexRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-          IncrementalIvf.version, IncrementalIvf.committedHasTag)
-        val nb = collapseCdc(batch, "vec_id", seqCol)
-        val dels = nb.where(col("op") === "D")
-          .select(col("vec_id").cast("long").as("vec_id"))
-        if (!dels.isEmpty && IncrementalIvf.version(root) > 0)
-          IncrementalIvf.delete(dels, root, Some(s"del_$batchId"))
-        val ups = nb.where(col("op") === "U")
-          .select(col("vec_id"), col("embedding"))
-        if (!ups.isEmpty && IncrementalIvf.version(root) > 0)
-          IncrementalIvf.upsert(ups, root, Some(s"ups_$batchId"))
-        val ins = nb.where(col("op") === "I")
-          .select(col("vec_id"), col("embedding"))
-        if (!ins.isEmpty && !IncrementalIvf.committedHasTag(root, tag))
-          IncrementalIvf.append(ins, root, tag = Some(tag))
-        // hoisted like [[textGraphCdcIngest]]'s: upsert-only triggers
-        // append segments too and must still reach the fold (see the
-        // BM25 loop above)
-        if (IncrementalIvf.version(root) > 0) {
-          if (tailFoldCompaction) {
-            // in-place bounded-write fold: O(tail) per trigger instead
-            // of the full fold's O(corpus) rewrite — the steady-state
-            // choice for a long-running 100 TB ingest (the pointer
-            // never moves; readers keep their path). Trigger on READ
-            // fan-in, which the version clock stops reflecting after
-            // the first fold.
-            // ladder warning discarded here: the loop's maxSegments is
-            // caller-configured; operators watch it via the admin route
-            IncrementalIvf.tailFoldIfNeeded(batch.sparkSession, root,
-              maxSegments, tag = Some(s"fold_$batchId"))
-            ()
-          } else {
-            val newRoot = IncrementalIvf.compactIfNeeded(
-              batch.sparkSession, root, maxSegments, tag = Some(tag))
-            // superseded root retired by the NEXT trigger's recoverRoot
-            // sweep, not inline — see [[indexIngest]]'s drain note
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    maintainStream(changes, checkpoint, indexRoot, cdc = true, seqCol,
+      maxSegments, tailFoldCompaction)(ivf)
+
+  /** Streaming VECTOR index maintenance — the dense twin of
+    * [[indexIngest]]: each micro-batch of new (vec_id, embedding) rows is
+    * assigned against the frozen centroids and committed as ONE segment of
+    * an [[IncrementalIvf]] index. Unlike the in-place
+    * `IvfIndex.appendAssign` demo (which appends files into the live
+    * assigned dir, so a crashed task can leave a torn append visible),
+    * the segment commit is atomic and batch-id-tagged: readers see only
+    * published versions, redelivered batches are no-ops — exactly-once in
+    * effect. The root must be initialized first ([[IncrementalIvf.init]]
+    * freezes the centroids); empty micro-batches are skipped. */
+  def ivfIngest(vectors: DataFrame, indexRoot: String, checkpoint: String,
+                maxSegments: Int = Int.MaxValue)
+      : StreamingQuery =
+    maintainStream(vectors, checkpoint, indexRoot, cdc = false, None,
+      maxSegments, tailFold = false)(ivf)
+
+  /** Streaming kNN-GRAPH maintenance: each micro-batch of new (vec_id,
+    * embedding) rows becomes one committed [[IncrementalKnn]] segment —
+    * the new vectors probe the whole graph so far AND every prior vector
+    * gains the batch as candidates, so the merged graph stays hash-exact a
+    * whole-corpus rebuild after every trigger. Same exactly-once
+    * discipline as [[ivfIngest]]. The graph that SemDeDup clustering /
+    * diversity audits read is therefore never stale by more than one
+    * trigger interval. */
+  def knnIngest(vectors: DataFrame, graphRoot: String, checkpoint: String,
+                nprobe: Int, k: Int,
+                maxSegments: Int = Int.MaxValue): StreamingQuery =
+    maintainStream(vectors, checkpoint, graphRoot, cdc = false, None,
+      maxSegments, tailFold = false)(knn(_, nprobe, k))
+
+  /** Streaming TEXT-graph maintenance — `mode=graph`'s freshness story:
+    * each micro-batch of new (doc_id, text) rows embeds into the FROZEN
+    * corpus tfidf space driver-declared from `dataDir`'s idf artifact
+    * ([[graft.index.TfIdfGraphIndex.embedDocsDense]] — the model never
+    * retrains per delta, exactly like the reference's frozen `bge-small`
+    * weights) and lands as one committed [[IncrementalKnn]] segment of the
+    * serving graph. A document is therefore graph-searchable one trigger
+    * interval after it arrives, without any rebuild — the reference's
+    * live-HNSW-insert behavior (`scripts/indexing.py:214-260`) on Spark's
+    * micro-batch clock. Same exactly-once + bounded-storage discipline as
+    * [[knnIngest]]; the root must be initialized first (e.g. by
+    * [[graft.index.TfIdfGraphIndex.ensureGrown]] or an explicit
+    * `IncrementalKnn.init` over the build corpus). */
+  def textGraphIngest(docs: DataFrame, dataDir: String, graphRoot: String,
+                      checkpoint: String, nprobe: Int, k: Int,
+                      maxSegments: Int = Int.MaxValue): StreamingQuery =
+    maintainStream(docs, checkpoint, graphRoot, cdc = false, None,
+      maxSegments, tailFold = false)(knn(_, nprobe, k, Some(dataDir)))
+
+  /** CDC-shaped [[textGraphIngest]] — the full index-maintenance pipeline
+    * a CRUD store feeds: each micro-batch of (op, doc_id, text) changelog
+    * rows collapses to the net op per key ([[collapseCdc]] — pass
+    * `seqCol` when one trigger can carry several ops for a key), then
+    * applies DELETES ([[IncrementalKnn.delete]] tombstones — the doc
+    * leaves every serving read this trigger), UPDATES in place under the
+    * same id ([[IncrementalKnn.upsert]] — versioned tombstone + same-id
+    * re-embed+append), and INSERTS (frozen-space embed + append, like
+    * [[textGraphIngest]]), all inside the ONE single-writer loop of
+    * [[maintain]], so deletes can never race a concurrent compaction swap.
+    * Every delete- or update-carrying trigger runs
+    * [[IncrementalKnn.repair]] — the delta-cost neighbor healing — BEFORE
+    * the insert half, so the served graph NEVER degrades: after each
+    * trigger it equals a rebuild over the current rows (the a29/a30
+    * exactness arguments), without any rebuild ever running. With
+    * `tailFoldCompaction` the root folds in place
+    * ([[IncrementalKnn.tailFold]] — pure reorganization; it does NOT
+    * reclaim tombstones or repair segments, so schedule
+    * [[IncrementalKnn.compact]] as the deep clean). */
+  def textGraphCdcIngest(changes: DataFrame, dataDir: String,
+                         graphRoot: String, checkpoint: String,
+                         nprobe: Int, k: Int,
+                         maxSegments: Int = Int.MaxValue,
+                         seqCol: Option[String] = None,
+                         tailFoldCompaction: Boolean = false): StreamingQuery =
+    maintainStream(changes, checkpoint, graphRoot, cdc = true, seqCol,
+      maxSegments, tailFoldCompaction)(knn(_, nprobe, k, Some(dataDir)))
 
   /** Streaming percolation: saved-search alerts fire on each arriving
     * micro-batch ([[graft.search.Percolate]] — conjunctive match is
@@ -477,14 +567,10 @@ object DeltaStream {
   def percolateIngest(docs: DataFrame, alerts: DataFrame, outPath: String,
                       checkpoint: String, idCol: String = "doc_id",
                       textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.search.Percolate.matches(batch, alerts, idCol, textCol)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(docs, checkpoint) { (batch: DataFrame, _: Long) =>
+      graft.search.Percolate.matches(batch, alerts, idCol, textCol)
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+    }
 
   /** Streaming VECTOR percolation — the dense twin of
     * [[percolateIngest]]: every micro-batch of (vec_id, embedding) rows
@@ -496,14 +582,10 @@ object DeltaStream {
   def vectorPercolateServe(docs: DataFrame, alerts: DataFrame,
                            outPath: String,
                            checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.search.Percolate.vectorMatches(batch, alerts)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(docs, checkpoint) { (batch: DataFrame, _: Long) =>
+      graft.search.Percolate.vectorMatches(batch, alerts)
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
+    }
 
   /** Streaming HYBRID percolation — the term+vector member of the
     * percolation matrix's streaming column ([[percolateIngest]] = term,
@@ -522,211 +604,16 @@ object DeltaStream {
                            idCol: String = "doc_id",
                            textCol: String = "text",
                            inverted: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val emb = batch.select(col(idCol).cast("long").as("vec_id"),
-          col("embedding"))
-        val m =
-          if (inverted) graft.search.Percolate.hybridMatchesInverted(
-            batch, emb, alerts, idCol, textCol)
-          else graft.search.Percolate.hybridMatches(
-            batch, emb, alerts, idCol, textCol)
-        m.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** Streaming VECTOR index maintenance — the dense twin of
-    * [[indexIngest]]: each micro-batch of new (vec_id, embedding) rows is
-    * assigned against the frozen centroids and committed as ONE segment of
-    * an [[graft.index.IncrementalIvf]] index. Unlike the in-place
-    * `IvfIndex.appendAssign` demo (which appends files into the live
-    * assigned dir, so a crashed task can leave a torn append visible),
-    * the segment commit is atomic and batch-id-tagged: readers see only
-    * published versions, redelivered batches are no-ops — exactly-once in
-    * effect. The stream must be initialized first ([[graft.index
-    * .IncrementalIvf.init]] freezes the centroids); empty micro-batches
-    * are skipped. */
-  def ivfIngest(vectors: DataFrame, indexRoot: String, checkpoint: String,
-                maxSegments: Int = Int.MaxValue)
-      : StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalIvf, SegmentStore}
-        // Same bounded-storage maintenance loop as [[indexIngest]]:
-        // pointer-resolved root (with crashed-swap recovery), compact
-        // and swap in the batch that crosses `maxSegments` (compacting
-        // batch's tag on the new root), superseded root retired by the
-        // NEXT trigger's recoverRoot sweep.
-        withLeaseRetry() {
-          val ptr = s"$indexRoot.current"
-          val tag = s"batch_$batchId"
-          val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-            IncrementalIvf.version, IncrementalIvf.committedHasTag)
-          if (!batch.isEmpty && !IncrementalIvf.committedHasTag(root, tag)) {
-            IncrementalIvf.append(batch, root, tag = Some(tag))
-            val newRoot = IncrementalIvf.compactIfNeeded(
-              batch.sparkSession, root, maxSegments, tag = Some(tag))
-            if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-          }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** Streaming kNN-GRAPH maintenance: each micro-batch of new (vec_id,
-    * embedding) rows becomes one committed [[graft.index.IncrementalKnn]]
-    * segment — the new vectors probe the whole graph so far AND every
-    * prior vector gains the batch as candidates, so the merged graph
-    * stays hash-exact a whole-corpus rebuild after every trigger. Same
-    * exactly-once discipline as [[ivfIngest]]: atomic version markers,
-    * batch-id tags make redelivered micro-batches no-ops. The graph that
-    * SemDeDup clustering / diversity audits read is therefore never
-    * stale by more than one trigger interval. */
-  def knnIngest(vectors: DataFrame, graphRoot: String, checkpoint: String,
-                nprobe: Int, k: Int,
-                maxSegments: Int = Int.MaxValue): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graphMaintainBatch(batch, graphRoot, batchId, nprobe, k, maxSegments)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** The shared per-micro-batch graph maintenance step of [[knnIngest]] /
-    * [[textGraphIngest]] — the same bounded-storage loop as
-    * [[indexIngest]]: crash-recovery sweep, idempotence tag check,
-    * append, size-tiered compaction behind a durable pointer swap. */
-  private def graphMaintainBatch(batch: DataFrame, graphRoot: String,
-                                 batchId: Long, nprobe: Int, k: Int,
-                                 maxSegments: Int): Unit = {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    withLeaseRetry() {
-      val ptr = s"$graphRoot.current"
-      val tag = s"batch_$batchId"
-      val root = SegmentStore.recoverRoot(ptr, graphRoot, tag)(
-        IncrementalKnn.version, IncrementalKnn.committedHasTag)
-      if (!batch.isEmpty && !IncrementalKnn.committedHasTag(root, tag)) {
-        IncrementalKnn.append(batch, root, nprobe, k, tag = Some(tag))
-        val newRoot = IncrementalKnn.compactIfNeeded(
-          batch.sparkSession, root, k, maxSegments, tag = Some(tag))
-        if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-      }
+    onEachBatch(docs, checkpoint) { (batch: DataFrame, _: Long) =>
+      val emb = batch.select(col(idCol).cast("long").as("vec_id"),
+        col("embedding"))
+      val m =
+        if (inverted) graft.search.Percolate.hybridMatchesInverted(
+          batch, emb, alerts, idCol, textCol)
+        else graft.search.Percolate.hybridMatches(
+          batch, emb, alerts, idCol, textCol)
+      m.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
     }
-  }
-
-  /** Streaming TEXT-graph maintenance — `mode=graph`'s freshness story:
-    * each micro-batch of new (doc_id, text) rows embeds into the FROZEN
-    * corpus tfidf space driver-declared from `dataDir`'s idf artifact
-    * ([[graft.index.TfIdfGraphIndex.embedDocsDense]] — the model never
-    * retrains per delta, exactly like the reference's frozen `bge-small`
-    * weights) and lands as one committed [[graft.index.IncrementalKnn]]
-    * segment of the serving graph. A document is therefore graph-
-    * searchable one trigger interval after it arrives, without any
-    * rebuild — the reference's live-HNSW-insert behavior
-    * (`scripts/indexing.py:214-260`) on Spark's micro-batch clock.
-    * Same exactly-once + bounded-storage discipline as [[knnIngest]];
-    * the root must be initialized first (e.g. by
-    * [[graft.index.TfIdfGraphIndex.ensureGrown]] or an explicit
-    * `IncrementalKnn.init` over the build corpus). */
-  def textGraphIngest(docs: DataFrame, dataDir: String, graphRoot: String,
-                      checkpoint: String, nprobe: Int, k: Int,
-                      maxSegments: Int = Int.MaxValue): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dense = graft.index.TfIdfGraphIndex
-          .embedDocsDense(batch.sparkSession, dataDir, batch)
-        graphMaintainBatch(dense, graphRoot, batchId, nprobe, k, maxSegments)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-
-  /** CDC-shaped [[textGraphIngest]] — the full index-maintenance pipeline
-    * a CRUD store feeds: each micro-batch of (op, doc_id, text) changelog
-    * rows applies DELETES first ([[graft.index.IncrementalKnn.delete]]
-    * tombstones — the doc leaves every serving read this trigger) and
-    * INSERTS second (frozen-space embed + append, like
-    * [[textGraphIngest]]), all inside the ONE single-writer maintenance
-    * loop, so deletes can never race a concurrent compaction swap.
-    * Deletes and inserts carry separate idempotence tags, so an
-    * at-least-once redelivery replays both halves as no-ops.
-    * With `repairAfterDelete` (the default), every delete- or
-    * update-carrying trigger runs [[graft.index.IncrementalKnn.repair]]
-    * — the delta-cost neighbor healing — BEFORE the insert half, so the
-    * served graph NEVER degrades: after each trigger it equals a rebuild
-    * over the current rows (the a29/a30 exactness arguments), without
-    * any rebuild ever running.
-    * UPDATES (`op = U`) apply IN PLACE under the same id
-    * ([[graft.index.IncrementalKnn.upsert]] — versioned tombstone +
-    * same-id re-embed+append): the old version leaves every read this
-    * trigger, the new text serves from this trigger on. The micro-batch
-    * collapses to the net op per key first ([[collapseCdc]] — pass
-    * `seqCol` when one trigger can carry several ops for a key). */
-  def textGraphCdcIngest(changes: DataFrame, dataDir: String,
-                         graphRoot: String, checkpoint: String,
-                         nprobe: Int, k: Int,
-                         maxSegments: Int = Int.MaxValue,
-                         repairAfterDelete: Boolean = true,
-                         seqCol: Option[String] = None,
-                         tailFoldCompaction: Boolean = false): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.index.{IncrementalKnn, SegmentStore, TfIdfGraphIndex}
-        val spark = batch.sparkSession
-        withLeaseRetry() {
-        val ptr = s"$graphRoot.current"
-        val tag = s"batch_$batchId"
-        val root = SegmentStore.recoverRoot(ptr, graphRoot, tag)(
-          IncrementalKnn.version, IncrementalKnn.committedHasTag)
-        val nb = collapseCdc(batch, "doc_id", seqCol)
-        val dels = nb.where(col("op") === "D")
-          .select(col("doc_id").cast("long").as("vec_id"))
-        val hadDels = !dels.isEmpty
-        if (hadDels) IncrementalKnn.delete(dels, root, Some(s"del_$batchId"))
-        val ups = nb.where(col("op") === "U")
-          .select(col("doc_id"), col("text"))
-        val hadUps = !ups.isEmpty
-        if (hadUps) IncrementalKnn.upsert(
-          TfIdfGraphIndex.embedDocsDense(spark, dataDir, ups),
-          root, nprobe, k, Some(s"ups_$batchId"))
-        // heal BEFORE the insert half: if the insert triggers a
-        // compaction, the fold must see the REPAIRED edges — compacting
-        // a holed graph would bake the degraded top-k in and clear the
-        // tombstones the repair needs (holes only ever come from deletes
-        // and upserts, both already applied for this trigger)
-        if ((hadDels || hadUps) && repairAfterDelete)
-          IncrementalKnn.repair(spark, root, nprobe, k, Some(s"rep_$batchId"))
-        val ins = nb.where(col("op") === "I")
-          .select(col("doc_id"), col("text"))
-        if (!ins.isEmpty && !IncrementalKnn.committedHasTag(root, tag))
-          IncrementalKnn.append(
-            TfIdfGraphIndex.embedDocsDense(spark, dataDir, ins),
-            root, nprobe, k, tag = Some(tag))
-        if (tailFoldCompaction) {
-          // in-place bounded-write fold (pure reorganization for this
-          // family — stored horizons, so holes/repairs/coverage read
-          // identically; see [[graft.index.IncrementalKnn.tailFold]]).
-          // Unlike the full compact above it does NOT reclaim tombstones
-          // or repair segments — schedule compact() as the deep clean.
-          IncrementalKnn.tailFoldIfNeeded(spark, root, maxSegments,
-            tag = Some(s"fold_$batchId"))
-          ()
-        } else {
-          val newRoot = IncrementalKnn.compactIfNeeded(
-            spark, root, k, maxSegments, tag = Some(tag))
-          // superseded root retired by the NEXT trigger's recoverRoot
-          // sweep, not inline — see [[indexIngest]]'s drain note
-          if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-        }
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
 
   /** Streaming ANN serving: a continuous stream of (qid, qvec) query rows
     * answered per micro-batch by ONE batched IVF plan over a PERSISTED
@@ -743,14 +630,10 @@ object DeltaStream {
                centroids: DataFrame, checkpoint: String,
                nprobe: Int, k: Int)
               (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.search.Ann
-          .ivfTopKBatched(assigned, centroids, batch, nprobe, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(queryStream, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      sink(graft.search.Ann
+        .ivfTopKBatched(assigned, centroids, batch, nprobe, k), batchId)
+    }
 
   /** Streaming GRAPH-ANN serve — [[annServe]]'s graph-walk twin: vector
     * queries arrive as (qid, qvec) rows and each micro-batch is answered
@@ -762,15 +645,11 @@ object DeltaStream {
                  vectors: DataFrame, checkpoint: String,
                  sampleMod: Int, e: Int, beam: Int, hops: Int, k: Int)
                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.search.Ann.graphTopKBatched(edges, vectors, batch,
-          graft.search.Ann.hierEntriesBatched(vectors, batch, sampleMod, e),
-          beam, hops, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(queryStream, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      sink(graft.search.Ann.graphTopKBatched(edges, vectors, batch,
+        graft.search.Ann.hierEntriesBatched(vectors, batch, sampleMod, e),
+        beam, hops, k), batchId)
+    }
 
   /** Streaming HYBRID serve — the flagship query's streaming form: text
     * queries arrive as (qid, qtext) rows and each micro-batch is answered as
@@ -785,16 +664,12 @@ object DeltaStream {
   def hybridServe(queryStream: DataFrame, dataDir: String, checkpoint: String,
                   k: Int)
                  (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qs = batch.select(col("qid").cast("long"), col("qtext"))
-          .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-        sink(graft.search.SearchEngine
-          .textHybridBatched(batch.sparkSession, dataDir, qs, k), batchId)
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+    onEachBatch(queryStream, checkpoint) { (batch: DataFrame, batchId: Long) =>
+      val qs = batch.select(col("qid").cast("long"), col("qtext"))
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      sink(graft.search.SearchEngine
+        .textHybridBatched(batch.sparkSession, dataDir, qs, k), batchId)
+    }
 
   /** Declarative gap-sessionization: Spark's native `session_window`
     * (watermarked, state managed by the engine) — the zero-custom-code

@@ -743,10 +743,39 @@ class IndexSpec extends SparkSpec {
       "doc_id", "text", broot, tag = Some("m1"))
     assert(IncrementalBm25.version(broot) == 2)
     assert(IncrementalBm25.committedHasTag(broot, "m1"))
-    assert(!IncrementalBm25.committedHasTag(broot, "m0")) // latest-only contract
+    // any-version contract: a replayed step must find its tag below the top
+    assert(IncrementalBm25.committedHasTag(broot, "m0"))
     val hits = IncrementalBm25.topK(spark, broot, "doc_id",
       Seq("the", "data"), k = 5).collect()
     assert(hits.nonEmpty)
+  }
+
+  test("incremental bm25: replaying a CDC trigger body changes nothing (tags checked on every committed version)") {
+    // One trigger commits up to three versions (upsert, insert, fold): a
+    // replay must find ups_1 below the latest version, or it re-appends
+    // the upsert and the insert, doubling their postings and stats.
+    import graft.index.IncrementalBm25
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-bm25-replay").toString + "/i"
+    IncrementalBm25.init(Seq((1L, "spark stream data"), (2L, "data index query"),
+      (3L, "join shuffle data")).toDF("doc_id", "text"), "doc_id", "text", root,
+      numFiles = 1)
+    def trigger(): Unit = {
+      IncrementalBm25.delete(Seq(3L).toDF("doc_id"), "doc_id", root, Some("del_1"))
+      IncrementalBm25.upsert(Seq((2L, "data data index")).toDF("doc_id", "text"),
+        "doc_id", "text", root, 1, Some("ups_1"))
+      if (!IncrementalBm25.committedHasTag(root, "batch_1"))
+        IncrementalBm25.append(Seq((4L, "data query stream")).toDF("doc_id", "text"),
+          "doc_id", "text", root, 1, Some("batch_1"))
+    }
+    def state() = (IncrementalBm25.version(root), IncrementalBm25.fanIn(root),
+      IncrementalBm25.topK(spark, root, "doc_id", Seq("data", "query"), 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    trigger()
+    val once = state()
+    assert(once._1 == 3 && once._3.map(_._1).toSet == Set(1L, 2L, 4L))
+    trigger()
+    assert(state() == once)
   }
 
   test("incremental bm25 delete: survivors only, STALE stats until compact recomputes them (Lucene deleted-doc semantics)") {
@@ -2531,6 +2560,16 @@ class IndexSpec extends SparkSpec {
     val extra = emb.where(col("vec_id") < 5)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
     both(r => IncrementalKnn.append(extra, r, 3, 5, tag = Some("krf_a1")))
+    assert(rows(folded) == rows(twin))
+
+    // a plain tail-fold of the reclaimed root keeps the repair-ledger
+    // rebase: the absorbed repair segments must stay skipped, or their
+    // stale rows merge back into reads
+    val repairRebase =
+      SegmentStore.currentManifest(s"$folded/commit").get.repairRebase
+    IncrementalKnn.tailFold(spark, folded, keep = 1, tag = Some("krf_t1"))
+    assert(repairRebase > 0 &&
+      SegmentStore.currentManifest(s"$folded/commit").get.repairRebase == repairRebase)
     assert(rows(folded) == rows(twin))
 
     // reclaim-after-reclaim composes (fold-of-fold with a rebased

@@ -856,6 +856,29 @@ class StreamingSpec extends SparkSpec {
     assert(served == rebuilt && !served.exists(h => h._1 == 6L || h._1 == 8L))
   }
 
+  test("ivfCdcIngest: a U-only batch on an uninitialized root fails the query instead of being dropped (empty-root rule)") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-ivfcdc-empty").toString + "/i"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-ivfcdc-empty-ck").toString
+    val input = MemoryStream[(String, Long, Seq[Float])]
+    val q = DeltaStream.ivfCdcIngest(
+      input.toDF().toDF("op", "vec_id", "embedding")
+        .select(col("op"), col("vec_id"),
+          col("embedding").cast("array<float>").as("embedding")),
+      root, ckpt)
+    try {
+      input.addData(("U", 1L, Seq(0.5f, 0.5f)))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("not initialized")), msgs.mkString(" | "))
+    } finally q.stop()
+    assert(graft.index.IncrementalIvf.version(root) == 0)
+  }
+
   test("vectorPercolateServe: per-batch reverse-ANN firings union to the batch run; thresholds respected") {
     implicit val sqlCtx = spark.sqlContext
     import graft.search.Percolate
@@ -1516,7 +1539,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(!edges.exists(e => e._1 == 7L || e._2 == 7L))
 
-    // the default CDC loop is SELF-HEALING (repairAfterDelete): after
+    // the CDC loop is SELF-HEALING (repair after deletes/updates): after
     // every delete/update-carrying trigger the served graph equals a
     // rebuild over the CURRENT rows — dense ranks, no holes, and no
     // rebuild ever ran. The insert that shared the delete trigger
