@@ -16,7 +16,6 @@ import graft.tables.Tables
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     def load1(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
@@ -41,20 +40,13 @@ object Bench {
     // the r10 run saturated both gates and the artifact couldn't say so
     val load1Gate = load1()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession("graft-bench")
 
     // Fault-tolerance-path leg: SPARK_GRAFT_BARRIER_MODE=reliable runs the
     // iterative operators (CC, PageRank) with DFS checkpoint barriers — the
     // configuration a real cluster uses so a lost executor doesn't replay
     // the whole lineage chain. Off by default (the driver bench measures
-    // the local[32] fast path); used for the BENCHNOTES overhead row.
+    // the localCheckpoint fast path); used for the BENCHNOTES overhead row.
     sys.env.get("SPARK_GRAFT_BARRIER_MODE").foreach { mode =>
       spark.conf.set(graft.dedup.Dedup.BarrierModeKey, mode)
       if (mode == "reliable")

@@ -16,4 +16,23 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
+
+  /** Local cores for every main: `SPARK_GRAFT_CPUS`, else all processors. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The one session every main runs on: local[cpus] with shuffle
+    * partitions = cpus, UTC session time, TIMESTAMP(NANOS) read as long
+    * (see Tables.events), UI off, ERROR logging. */
+  def localSession(appName: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .appName(appName).master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 }

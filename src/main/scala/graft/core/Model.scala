@@ -28,11 +28,7 @@ object Model {
     Tables.embeddings(spark, dir).as[Embedding]
   }
 
-  implicit class HitsOps(private val ds: Dataset[Hit]) extends AnyVal {
-    /** Typed view over any (id, score) result DataFrame. */
-    def top(n: Int): Array[Hit] = ds.take(n)
-  }
-
+  /** Typed view over any (id, score) result DataFrame. */
   def asHits(df: org.apache.spark.sql.DataFrame): Dataset[Hit] = {
     import df.sparkSession.implicits._
     df.select("id", "score").as[Hit]

@@ -22,42 +22,40 @@ import graft.functions.{HashOps, TextOps}
 object Dedup {
 
   /** Session conf key selecting how iteration/consumption barriers
-    * materialize (every `Dedup` site that must cut lineage or stop a
-    * projection collapse goes through [[barrier]]):
+    * materialize (every engine site that must cut lineage or stop a
+    * projection collapse — here, in `Graph`, `Bm25`, `Multimodal` and the
+    * pipeline queries — goes through [[barrier]]):
     *
     *  - `local` (default): `localCheckpoint` — eager, executor-local
     *    blocks, fastest. Single-JVM/bench trade: a lost executor fails
     *    the job instead of recomputing (blocks are unreplicated and
     *    lineage is truncated).
-    *  - `persist`: `persist(MEMORY_AND_DISK) + count` — lineage KEPT, so
-    *    a lost executor recomputes its partitions; blocks stay until
-    *    [[releaseBarrier]] (or the ContextCleaner) frees them.
     *  - `reliable`: `Dataset.checkpoint` to the SparkContext's checkpoint
     *    dir (must be set; DFS on a cluster) — survives executor AND
     *    driver-cache loss; costs a DFS write and Spark's
     *    checkpoint-recompute (the plan may run twice per barrier).
     *
-    * All three are EAGER, so observe-metrics riding a barrier fire in
-    * every mode and downstream plan shapes are identical — DedupSpec pins
-    * value-identity across modes. */
+    * Any other value is rejected. Both modes are EAGER, so observe-metrics
+    * riding a barrier fire in either mode and downstream plan shapes are
+    * identical — DedupSpec pins value-identity across modes. */
   val BarrierModeKey = "spark.graft.barrierMode"
 
-  private[graft] def barrier(df: DataFrame): DataFrame =
+  private def reliableBarriers(df: DataFrame): Boolean =
     df.sparkSession.conf.get(BarrierModeKey, "local") match {
-      case "reliable" => df.checkpoint()
-      case "persist" =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      case _ => df.localCheckpoint()
+      case "local" => false
+      case "reliable" => true
+      case other => throw new IllegalArgumentException(
+        s"$BarrierModeKey must be 'local' or 'reliable', got '$other'")
     }
 
-  /** Free a no-longer-referenced barrier's blocks promptly (previous CC
-    * round's labels): persisted/local blocks unpersist; reliable
+  private[graft] def barrier(df: DataFrame): DataFrame =
+    if (reliableBarriers(df)) df.checkpoint() else df.localCheckpoint()
+
+  /** Free a no-longer-referenced barrier's blocks promptly (previous
+    * round's labels or ranks): local blocks unpersist; reliable
     * checkpoint files stay until the context cleaner collects them. */
-  private def releaseBarrier(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get(BarrierModeKey, "local") != "reliable")
-      df.unpersist(blocking = false)
+  private[graft] def releaseBarrier(df: DataFrame): Unit =
+    if (!reliableBarriers(df)) df.unpersist(blocking = false)
 
   /** Exact dedup on a normalized key: the sorted distinct token set (catches
     * reorderings and repeats, not just byte-identical text). One shuffle.
@@ -616,9 +614,8 @@ object Dedup {
     * only inspects the plan) and its blocks are executor-LOCAL — on a real
     * cluster a lost executor fails the job instead of recomputing from
     * lineage. That is the right trade in this single-JVM harness; at
-    * cluster scale swap the iteration-truncation sites for
-    * `persist(MEMORY_AND_DISK) + count()` (replicated, lineage kept) or a
-    * reliable `checkpoint()` to a DFS.
+    * cluster scale set [[BarrierModeKey]] to `reliable` (a `checkpoint()`
+    * to a DFS).
     *
     * Input: (aCol, bCol) pair rows. Output: (id, keeper) for every id that
     * appears in a pair — keeper == id for the kept member. Values are
@@ -642,11 +639,11 @@ object Dedup {
     // cache): the per-round neighbor join keys on src, so at scale —
     // where node-sized labels cannot broadcast and the join plans as
     // SMJ — the corpus-pair-scale edge list is never re-shuffled or
-    // re-sorted per round (ProbeCcPart: 210 MB → 72 MB total shuffle,
-    // 70 → 61 jobs on the ×8-corpus SMJ leg; fixpoints identical). The
-    // same layout serves the seed aggregation (groupBy(src) below), so
-    // even in the local broadcast regime the setup repartition costs
-    // zero net jobs (40 both, probe leg 1).
+    // re-sorted per round (OPTIMIZATION_r16.md: 210 MB → 72 MB total
+    // shuffle, 70 → 61 jobs on the ×8-corpus SMJ leg; fixpoints
+    // identical). The same layout serves the seed aggregation
+    // (groupBy(src) below), so even in the local broadcast regime the
+    // setup repartition costs zero net jobs (40 both, probe leg 1).
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -25,9 +25,6 @@ object VectorOps {
       ColumnBridge.expression(a.cast("array<float>")),
       ColumnBridge.expression(b.cast("array<float>"))))
 
-  /** L2 norm of a float-array column. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Euclidean distance over two ARRAY<DOUBLE> columns — bit-identical to
     * MLlib's `sqrt(Vectors.sqdist)` and to the interpreted
     * `sqrt(aggregate(zip_with(a,b,(x,y)=>(x-y)*(x-y)), 0.0, +))` form

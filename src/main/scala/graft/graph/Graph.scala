@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup.{barrier, releaseBarrier}
+
 /** Link-graph analytics for corpus quality weighting.
   *
   * Web-pipeline provenance: Common Crawl ranks hosts by centrality over
@@ -19,24 +21,6 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle can replay the iterations CTE by CTE.
   */
 object Graph {
-
-  /** Same three-way barrier as Dedup (shared conf key
-    * [[graft.dedup.Dedup.BarrierModeKey]]): local checkpoint for
-    * single-JVM speed, persist+count to keep lineage, reliable checkpoint
-    * for cluster fault-tolerance. */
-  private def barrier(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(graft.dedup.Dedup.BarrierModeKey, "local") match {
-      case "reliable" => df.checkpoint()
-      case "persist" =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      case _ => df.localCheckpoint()
-    }
-
-  private def releaseBarrier(df: DataFrame): Unit =
-    if (df.sparkSession.conf.get(graft.dedup.Dedup.BarrierModeKey, "local") != "reliable")
-      df.unpersist(blocking = false)
 
   private val orderedSum =
     "aggregate(array_sort(collect_list(w)), cast(0 as double), (a, x) -> a + x)"
@@ -157,14 +141,10 @@ object Graph {
     // upstream candidate generation re-runs per consumer (measured ~4×
     // the pairs cost on g3 at sf0.1). Pair-scale materialization, the
     // same trade [[graft.dedup.Dedup.connectedComponents]] documents.
-    // Barrier-mode caveat: the result is returned lazily, so these three
-    // barriers cannot be released here (the caller's action still needs
-    // them). In the default 'local' mode (localCheckpoint) and
-    // 'reliable' mode the blocks are reclaimed by the ContextCleaner /
-    // checkpoint GC once the result is unreachable; in 'persist' mode
-    // each call leaks three MEMORY_AND_DISK CacheManager entries for the
-    // session lifetime — acceptable for batch jobs, but a long-lived
-    // service on 'persist' mode should bound calls or prefer 'local'.
+    // The result is returned lazily, so these three barriers cannot be
+    // released here (the caller's action still needs them); the
+    // ContextCleaner / checkpoint GC reclaims them once the result is
+    // unreachable.
     val und = barrier(pairs.select(col(aCol).cast("long").as("u"),
       col(bCol).cast("long").as("v")))
     val deg = barrier(

@@ -42,7 +42,6 @@ object IvfIndex {
     new java.util.concurrent.ConcurrentHashMap[String, Info]()
 
   def register(sourceKey: String, info: Info): Unit = registry.put(sourceKey, info)
-  def unregister(sourceKey: String): Unit = registry.remove(sourceKey)
   def lookup(sourceKey: String): Option[Info] = Option(registry.get(sourceKey))
 
   /** Build centroids + assignment for `dataDir`'s embeddings table and

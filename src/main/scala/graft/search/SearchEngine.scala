@@ -346,25 +346,18 @@ object SearchEngine {
     Fusion.simple(Seq(exact, vector), "id", k)
   }
 
-  /** Shared oversample-then-trim core for the two filtered endpoints
-    * (T4: fetch oversample×k, post-filter on the payload field, head k). */
-  private def filteredWithOversample(spark: SparkSession, dir: String,
-      queryVecId: Long, filterField: String, filterValue: String,
-      k: Int, oversample: Int): DataFrame = {
-    val over = denseTopK(spark, dir, queryVecId, k * oversample)
-    over.join(Tables.documents(spark, dir)
+  /** Q3: filtered search with the reference's oversample-then-trim
+    * semantics (T4: fetch 3×k, post-filter on the payload field, head k —
+    * `app/services/search_service.py:413-423`). */
+  def filteredSearch(spark: SparkSession, dir: String, queryVecId: Long,
+                     filterField: String, filterValue: String, k: Int): DataFrame =
+    denseTopK(spark, dir, queryVecId, k * 3)
+      .join(Tables.documents(spark, dir)
         .select(col("doc_id").as("id"), col(filterField)), Seq("id"))
       .where(col(filterField) === filterValue)
       .select(col("id"), col("score"))
       .orderBy(col("score").desc, col("id").asc)
       .limit(k)
-  }
-
-  /** Q3: filtered search with the reference's oversample-then-trim
-    * semantics (3× — `app/services/search_service.py:413-423`). */
-  def filteredSearch(spark: SparkSession, dir: String, queryVecId: Long,
-                     filterField: String, filterValue: String, k: Int): DataFrame =
-    filteredWithOversample(spark, dir, queryVecId, filterField, filterValue, k, 3)
 
   /** J3/Q-linear: α-weighted blend of normalized dense + sparse arms. */
   def linearFusion(spark: SparkSession, dir: String, queryVecId: Long,
@@ -374,28 +367,6 @@ object SearchEngine {
     Fusion.linear(dense, sparse, "id", alpha, k)
   }
 
-  /** Q9 `search_lean`: dense top-k, minimal projection, no enrichment
-    * (the reference's hnsw_ef=64 fast path — approximation knobs don't
-    * exist for an exact scan, so lean = skip the payload join). */
-  def searchLean(spark: SparkSession, dir: String, queryVecId: Long, k: Int): DataFrame =
-    denseTopK(spark, dir, queryVecId, k).select(col("id"), col("score"))
-
-  /** Q4 `/api/query` legacy filtered search: oversample 2× (vs Q3's 3×),
-    * post-filter, minimal (id, score) projection
-    * (`app/services/search_service.py:443-478`). */
-  def filteredLegacy(spark: SparkSession, dir: String, queryVecId: Long,
-                     filterField: String, filterValue: String, k: Int): DataFrame =
-    filteredWithOversample(spark, dir, queryVecId, filterField, filterValue, k, 2)
-
-  /** Q8 `mode=graph`: a TEXT query served by the walk over the
-    * tfidf-space kNN graph artifact — the reference's actual serving
-    * structure (HNSW entry descent + layer-0 walk,
-    * `scripts/indexing.py:326-340`) reachable from a query string. The
-    * query embeds driver-side into the graph's own space
-    * ([[graft.index.TfIdfGraphIndex.queryVec]]), the coarse layer picks
-    * entry points, and per-hop work is O(beam·k) against the src-sorted
-    * edge artifact — corpus-size-independent, unlike the dense tfidf
-    * scan. Output (id, score), the same shape as every other mode. */
   /** One-shot tfidf-graph serving frames (vectors, edges, coarse) —
     * RAM-resident via [[ServingCache]] (the artifacts are build-once
     * immutable, so the clock is a constant; cached batches keep the
@@ -429,6 +400,15 @@ object SearchEngine {
       case None => coarse
     }
 
+  /** Q8 `mode=graph`: a TEXT query served by the walk over the
+    * tfidf-space kNN graph artifact — the reference's actual serving
+    * structure (HNSW entry descent + layer-0 walk,
+    * `scripts/indexing.py:326-340`) reachable from a query string. The
+    * query embeds driver-side into the graph's own space
+    * ([[graft.index.TfIdfGraphIndex.queryVec]]), the coarse layer picks
+    * entry points, and per-hop work is O(beam·k) against the src-sorted
+    * edge artifact — corpus-size-independent, unlike the dense tfidf
+    * scan. Output (id, score), the same shape as every other mode. */
   def graphSearch(spark: SparkSession, dir: String, query: String, k: Int): DataFrame = {
     import graft.index.TfIdfGraphIndex
     val (vecs, edges, coarse) = tfidfGraphServing(spark, dir)

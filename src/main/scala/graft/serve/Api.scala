@@ -12,9 +12,8 @@ import graft.tables.Tables
   * `app/main.py:50-160`, `app/api/endpoints/search.py:46-545`,
   * `admin.py:19-111`) mapped onto the engine as request → DataFrame →
   * JSON. Transport-agnostic by design — [[handle]] takes (path, params)
-  * and returns a status + JSON body, so the same dispatch serves an HTTP
-  * server, a CLI ([[ServeCli]]), or a test harness; the zero-egress build
-  * environment has no HTTP dependency to bind to.
+  * and returns a status + JSON body, so the same dispatch serves the HTTP
+  * server ([[HttpServe]]) and the test harness alike.
   *
   * Text queries embed with the engine's deterministic stand-in encoders
   * (TF-IDF index for the dense arm, BM25 postings for the sparse arm —
@@ -1000,27 +999,4 @@ object Api {
   private def err(msg: String): String = s"""{"error":${quote(msg)}}"""
 
   private def ok(body: String): Response = Response(200, body)
-}
-
-/** CLI transport for [[Api]]: one request per invocation.
-  *   runMain graft.serve.ServeCli <sfDir> <path> [key=value ...]       */
-object ServeCli {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val path = args.lift(1).getOrElse("/health")
-    val params = args.drop(2).flatMap { kv =>
-      kv.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-    }.toMap
-    val spark = SparkSession.builder()
-      .appName("graft-serve").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val r = Api.handle(spark, dir, path, params)
-    println(s"HTTP ${r.status}")
-    println(r.body)
-    spark.stop()
-  }
 }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.SparkSession
   * is what makes a live server possible in this zero-egress build. The
   * reference is a uvicorn/FastAPI service (`app/main.py:106-160`,
   * `app/api/endpoints/search.py:46-545`); this binds the same routes over
-  * the same transport-agnostic dispatch that [[ServeCli]] and
-  * `ServeApiSpec` already drive, so every endpoint behavior is identical
-  * across transports by construction.
+  * the same transport-agnostic dispatch that `ServeApiSpec` drives
+  * directly, so every endpoint behaves the same over HTTP by construction.
   *
   * Request model:
   *  - query-string parameters, URL-decoded (`?q=hello%20world&count=5`);
@@ -95,13 +94,7 @@ object ServeHttp {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .appName("graft-http").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("graft-http")
     val server = HttpServe.start(spark, dir, port)
     println(s"graft serving $dir on http://localhost:${server.getAddress.getPort}")
     Thread.currentThread().join()

@@ -671,19 +671,6 @@ object DeltaStream {
         .textHybridBatched(batch.sparkSession, dataDir, qs, k), batchId)
     }
 
-  /** Declarative gap-sessionization: Spark's native `session_window`
-    * (watermarked, state managed by the engine) — the zero-custom-code
-    * twin of [[sessionize]]; use mapGroupsWithState only when the session
-    * payload outgrows what an aggregate can express. */
-  def sessionWindows(events: DataFrame, watermark: String,
-                     gap: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("n_events"), col("total_value"))
-
   /** Stream-stream interval join (the impression⋈click shape of a
     * training-data event pipeline): each left row matches right rows with
     * the same key whose timestamp lands in [left.ts, left.ts + horizon].

@@ -1,15 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: write `.explain("formatted")` of declared queries to files —
   * the before/after plan evidence committed under plans/r15/.
   *
   *   runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <name> [name...]
   *
-  * Each query's plan lands at `<outDir>/<name>_<suffix>.txt`. Runs under the
-  * same session shape as Bench (local[$SPARK_GRAFT_CPUS], shuffle partitions
-  * = cpus) so the dumped plans match what the bench executes.
+  * Each query's plan lands at `<outDir>/<name>_<suffix>.txt`. Runs on the
+  * same session as Bench (`SparkEntry.localSession`), so the dumped plans
+  * match what the bench executes.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -19,15 +17,7 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-explaindump").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("graft-explaindump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       graft.SparkEntry.queries.get(n) match {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -28,15 +28,8 @@ import graft.tables.Tables
 object ProbeCores {
   def main(args: Array[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName(s"graft-probe-cores-$cpus").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.SparkEntry.cpus
+    val spark = graft.SparkEntry.localSession(s"graft-probe-cores-$cpus")
     val src = "/root/testdata/sf0.1"
     val big = s"target/scale_test/x$m"
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -23,11 +23,7 @@ import graft.tables.Tables
 object ScaleSlope {
   def main(args: Array[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("graft-scale-slope")
     val src = "/root/testdata/sf0.1"
     val base = "target/scale_test"
 

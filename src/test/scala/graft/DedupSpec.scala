@@ -167,7 +167,7 @@ class DedupSpec extends SparkSpec {
     assert(hinted.exists(p => p._1 == 1L && p._2 == 101L && p._3 == 1.0))
   }
 
-  test("barrier modes (local / persist / reliable) are value-identical") {
+  test("barrier modes (local / reliable) are value-identical") {
     val withClone = docs.union(
       docs.where($"doc_id" === 1).withColumn("doc_id", $"doc_id" + 100))
     val ccPairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
@@ -180,10 +180,19 @@ class DedupSpec extends SparkSpec {
     val local = runAll() // default mode
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    for (mode <- Seq("persist", "reliable")) {
+    spark.conf.set(Dedup.BarrierModeKey, "reliable")
+    try assert(runAll() == local, "mode reliable diverged")
+    finally spark.conf.unset(Dedup.BarrierModeKey)
+  }
+
+  test("an unknown barrier mode is rejected, naming the accepted values") {
+    for (mode <- Seq("persist", "checkpoint")) {
       spark.conf.set(Dedup.BarrierModeKey, mode)
-      try assert(runAll() == local, s"mode $mode diverged")
-      finally spark.conf.unset(Dedup.BarrierModeKey)
+      try {
+        val e = intercept[IllegalArgumentException](Dedup.barrier(docs))
+        assert(e.getMessage.contains("'local' or 'reliable'") &&
+          e.getMessage.contains(mode), e.getMessage)
+      } finally spark.conf.unset(Dedup.BarrierModeKey)
     }
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Store
@@ -98,5 +100,30 @@ class ExtensionsLayoutSpec extends SparkSpec {
     val plan = back.where(col("source") === "src7").queryExecution
       .executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(source,src7)"))
+  }
+
+  test("entry points: src/main/scala has exactly the pinned mains") {
+    // A new main must be named here or delete itself once its verdict is
+    // written down; one-shot probes otherwise accumulate in the build.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val files = Files.walk(root)
+    val mains = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val src = Files.readString(f)
+        val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1))
+        "def main\\(".r.findAllMatchIn(src).map { m =>
+          val obj = "object (\\w+)".r.findAllMatchIn(src.substring(0, m.start))
+            .map(_.group(1)).toSeq.last
+          pkg.fold(obj)(p => s"$p.$obj")
+        }
+      }.toSet
+    finally files.close()
+    assert(mains == Set(
+      "graft.Bench", "graft.Verify", "graft.serve.ServeHttp",
+      "graft.tools.ExplainDump", "graft.tools.MakeScaled",
+      "graft.tools.ProbeCores", "graft.tools.ProbeServingSlope",
+      "graft.tools.ScaleSlope"), mains)
   }
 }

@@ -47,7 +47,9 @@ class GraphSpec extends SparkSpec {
     def run() = Graph.pageRank(edges, "src", "dst")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val local = run()
-    spark.conf.set(graft.dedup.Dedup.BarrierModeKey, "persist")
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    spark.conf.set(graft.dedup.Dedup.BarrierModeKey, "reliable")
     try assert(run() == local)
     finally spark.conf.unset(graft.dedup.Dedup.BarrierModeKey)
   }

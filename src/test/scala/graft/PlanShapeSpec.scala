@@ -178,8 +178,8 @@ class PlanShapeSpec extends SparkSpec {
     // 1. opt-in scan, registered, above threshold -> physical plan reads
     //    the persisted assignment, not the raw embeddings
     val rewritten = bruteShaped(IvfIndex.readRewritable(spark, Sf0001))
-    val plan = rewritten.queryExecution.executedPlan.toString
-    assert(plan.contains("ivf/assigned"), plan)
+    val roots = scanRoots(rewritten)
+    assert(roots.exists(_.endsWith("ivf/assigned")), roots)
 
     //    and the result equals the inline IVF computation, column-exact
     val emb = graft.tables.Tables.embeddings(spark, Sf0001)
@@ -192,17 +192,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(got == expected && got.nonEmpty)
 
     // 2. un-tagged scan (the exact path) is never rewritten
-    val exactPlan = bruteShaped(emb).queryExecution.executedPlan.toString
-    assert(!exactPlan.contains("ivf/assigned"), exactPlan)
-    assert(exactPlan.contains("embeddings.parquet"), exactPlan)
+    val exactRoots = scanRoots(bruteShaped(emb))
+    assert(!exactRoots.exists(_.contains("ivf/assigned")), exactRoots)
+    assert(exactRoots.exists(_.endsWith("embeddings.parquet")), exactRoots)
 
     // 3. below full_scan_threshold the exact scan is kept (Qdrant's
     //    full_scan_threshold trade: brute force wins on small relations)
     IvfIndex.register(Sf0001, info.copy(fullScanThresholdBytes = Long.MaxValue))
     try {
-      val small = bruteShaped(IvfIndex.readRewritable(spark, Sf0001))
-        .queryExecution.executedPlan.toString
-      assert(!small.contains("ivf/assigned"), small)
+      val small = scanRoots(bruteShaped(IvfIndex.readRewritable(spark, Sf0001)))
+      assert(!small.exists(_.contains("ivf/assigned")), small)
+      assert(small.exists(_.endsWith("embeddings.parquet")), small)
     } finally IvfIndex.register(Sf0001, info)
   }
 
@@ -445,8 +445,9 @@ class PlanShapeSpec extends SparkSpec {
 
     // physical plan reads the TRAINED assignment, not raw embeddings and
     // not the fixed-vector a4 index
-    val plan = rewritten.queryExecution.executedPlan.toString
-    assert(plan.contains("ivf_trained_v2_k8"), plan)
+    val roots = scanRoots(rewritten)
+    assert(roots.exists(_.contains("ivf_trained_v2_k8")), roots)
+    assert(!roots.exists(_.endsWith("embeddings.parquet")), roots)
 
     // nprobe = k probes every list -> exactly brute-force top-k
     val emb = graft.tables.Tables.embeddings(spark, Sf0001)

@@ -593,7 +593,9 @@ class ServeApiSpec extends SparkSpec {
       .where(org.apache.spark.sql.functions.col("term").startsWith("s"))
     val plan = vocab.queryExecution.executedPlan.toString
     assert(!plan.contains("Generate"), plan)
-    assert(plan.contains("termstats"), plan)
+    val roots = scanRoots(vocab)
+    assert(roots.exists(_.endsWith("termstats")), roots)
+    assert(!roots.exists(_.endsWith("documents.parquet")), roots)
   }
 
   test("batch-search: per-query blocks equal N single /api/query calls") {

@@ -35,27 +35,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("native session_window splits on the gap and closes past the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val events = input.toDF().toDF("ts", "user_id", "value")
-
-    val q = DeltaStream.sessionWindows(events, "10 minutes", "5 minutes")
-      .writeStream.format("memory").queryName("sess_win")
-      .outputMode("complete").start()
-    try {
-      input.addData(
-        (Timestamp.valueOf("2024-01-01 00:00:00"), 1L, 1.0),
-        (Timestamp.valueOf("2024-01-01 00:03:00"), 1L, 2.0), // same session
-        (Timestamp.valueOf("2024-01-01 00:20:00"), 1L, 5.0)) // gap > 5m: new session
-      q.processAllAvailable()
-      val out = spark.table("sess_win")
-        .select("user_id", "n_events", "total_value")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(out == Set((1L, 2L, 3.0), (1L, 1L, 5.0)))
-    } finally q.stop()
-  }
-
   test("chunkWindows streams unchanged: per-row op, no state, batch-identical output") {
     implicit val sqlCtx = spark.sqlContext
     val rows = Seq((1L, (1 to 40).map("t" + _).mkString(" ")), (2L, "a b"))
