@@ -42,7 +42,7 @@ import graft.search.Bm25
   *
   * Semantics: append-mostly (new doc ids), plus mark-and-filter
   * [[delete]] — tombstoned docs leave results immediately, stats stay
-  * stale until [[compact]] reclaims postings and recomputes them
+  * stale until a full [[tailFold]] reclaims postings and recomputes them
   * (Lucene's exact deleted-doc behavior). Replacing a document is
   * delete + append under the document's next version id.
   */
@@ -88,8 +88,8 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
     * `stats_drift_docs` = `stats_n_docs` − `live_n_docs` (documents the
     * stats count that no longer serve: deleted survivors-to-be plus one
     * per upsert's dead version); when its share of `stats_n_docs` grows
-    * past the operator's tolerance, a FULL fold ([[tailFold]] keep=0) or
-    * [[compact]] is the merge moment that zeroes it. Costs one distinct
+    * past the operator's tolerance, a FULL fold ([[tailFold]] keep=0) is
+    * the merge moment that zeroes it. Costs one distinct
     * count over the surviving postings — an admin-route price, not a
     * serving-path one. */
   def stats(spark: SparkSession, root: String,
@@ -161,10 +161,10 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
     * tombstoned doc's postings are excluded from every [[topK]] from this
     * moment on (it can never be returned), but the corpus statistics
     * (df / n_docs / avgdl) stay STALE — they still count the deleted
-    * docs — until [[compact]] physically reclaims the postings and
-    * recomputes the stats from the survivors. That is literally how
+    * docs — until a full [[tailFold]] physically reclaims the postings
+    * and recomputes the stats from the survivors. That is literally how
     * Lucene serves deletes before a segment merge, and it keeps the
-    * pre-compaction read SQL-replayable (whole-corpus stats CTEs +
+    * pre-fold read SQL-replayable (whole-corpus stats CTEs +
     * a tombstone WHERE on the scoring rows — the s3e oracle). Idempotent
     * via `tag`. */
   def delete(ids: DataFrame, idCol: String, root: String,
@@ -176,11 +176,11 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
     * a versioned tombstone (old postings die at their horizon) plus a
     * same-id [[append]] (the new text serves from its own segment).
     * Stats semantics follow the delete contract one step further: until
-    * [[compact]] recomputes from survivors, df/n_docs/avgdl count BOTH
-    * versions (the append merged the new version's increments in, the
-    * old version's were never subtracted) — the s3f oracle states that
-    * double-counted interim exactly, and compaction is the merge moment
-    * where the stats catch up. */
+    * a full [[tailFold]] recomputes from survivors, df/n_docs/avgdl count
+    * BOTH versions (the append merged the new version's increments in,
+    * the old version's were never subtracted) — the s3f oracle states
+    * that double-counted interim exactly, and the full fold is the merge
+    * moment where the stats catch up. */
   def upsert(delta: DataFrame, idCol: String, textCol: String, root: String,
              numFiles: Int = 8, tag: Option[String] = None): Unit =
     commitUpsert(delta, idCol, root, "bm25-upsert", tag)(
@@ -223,45 +223,6 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
       .limit(k)
   }
 
-  /** Compact all committed segments into a single fresh one. Queries pay
-    * one scan task set per segment, so a long-running streaming ingest
-    * (one segment per micro-batch) eventually wants its tail folded —
-    * the standard LSM discipline. Stats are already merged (they carry
-    * no per-segment state), so compaction only rewrites postings:
-    * read segments 0..v-1, write the union as the new seg/0 into a fresh
-    * root, re-publish the CURRENT stats as v=1. The result serves
-    * hash-identical scores (postings rows are the same multiset).
-    * Building into `newRoot` keeps the old index readable throughout —
-    * callers swap the root pointer when done (the same publish-last
-    * discipline as [[append]]).
-    */
-  def compact(spark: SparkSession, root: String, newRoot: String,
-              idCol: String, numFiles: Int = 8,
-              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "bm25-compact") {
-    val v = requireInit(root)
-    val hasTombs = SegmentStore.tombIds(spark, tombsBase(root)).nonEmpty
-    val survivors = filterTombs(spark, root,
-      readSegsTagged(spark, root), Seq(idCol)).drop("__seg")
-    Store.optimizeLayout(survivors,
-      segDir(newRoot, 0), Seq("term", idCol), numFiles,
-      bloomCols = Seq("term"))
-    if (!hasTombs) {
-      // stats carry no per-segment state — republish as-is
-      spark.read.parquet(s"${statsDir(root, v)}/termstats")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/termstats")
-      spark.read.parquet(s"${statsDir(root, v)}/corpus")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${statsDir(newRoot, 1)}/corpus")
-    } else {
-      // deletes applied: the fresh root serves scores hash-exact a
-      // rebuild without the deleted docs, and starts with a clear ledger
-      recomputeStats(spark, segDir(newRoot, 0), idCol, statsDir(newRoot, 1))
-    }
-    SegmentStore.publish(commitBase(newRoot), 1, tag)
-    }
-
   /** Stats of the postings segment at `postings` written as the version
     * dir `out` — the Lucene-merge moment where stale df/n_docs/avgdl
     * catch up with the survivors. Postings are distinct on (term, id) so
@@ -279,18 +240,6 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
       .parquet(s"$out/corpus")
   }
 
-  /** Size-tiered auto-compaction trigger — the policy half of the LSM
-    * story: reads fan in over every committed segment, so segment count
-    * is the read-amplification dial. When it exceeds `maxSegments`, fold
-    * into a fresh versioned root (old root readable throughout) and
-    * return the new root for the caller to swap its pointer to;
-    * otherwise return `root` unchanged. The new root's name carries the
-    * source version, so repeated triggers never collide. */
-  def compactIfNeeded(spark: SparkSession, root: String, idCol: String,
-                      maxSegments: Int, tag: Option[String] = None): String =
-    SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
-      compact(spark, root, _, idCol, tag = tag))
-
   /** TAIL-FOLD: fold every postings segment past the first `keep` into
     * ONE fresh segment IN THIS ROOT — O(tail), not O(corpus), write cost;
     * the manifest, horizon algebra and GC are [[SegmentedRoot]]'s fold
@@ -304,8 +253,7 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
     * stale until a full merge (Lucene's deleted docs before a merge). A
     * FULL fold (`keep = 0`) IS the merge moment: every posting is read
     * anyway, so stats are recomputed from the survivors and the absorbed
-    * ledger history is rebased away — byte-for-byte the [[compact]]
-    * catch-up, without rewriting a prefix that doesn't exist. */
+    * ledger history is rebased away. */
   def tailFold(spark: SparkSession, root: String, idCol: String,
                keep: Int = 1, numFiles: Int = 8,
                tag: Option[String] = None): Unit = {
@@ -388,16 +336,12 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
     * memoized for the `s3f_bm25_upsert` oracle: every doc_id % 11 == 5
     * (with a +1 neighbor) takes its neighbor's TEXT in place. Serving
     * reads score the CURRENT texts under the documented interim stats
-    * (both versions counted until compaction). */
+    * (both versions counted until a full fold). */
   def ensureUpserted(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
       val all = grownHalves(spark, dataDir, p)
-      val updated = all.as("a")
-        .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
-          col("a.doc_id") + 1 === col("nid"))
-        .where(pmod(col("a.doc_id"), lit(11)) === 5)
-        .select(col("a.doc_id").as("doc_id"), col("ntext").as("text"))
-      upsert(updated, "doc_id", "text", p, tag = Some("demo_upsert"))
+      upsert(demoUpserts(all, "doc_id", "text"), "doc_id", "text", p,
+        tag = Some("demo_upsert"))
     }
 
   val TailFoldName = "bm25_tailfold_v1"
@@ -413,15 +357,9 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
   def ensureTailFolded(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
       val all = grownHalves(spark, dataDir, p)
-      delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
-        .select(col("doc_id")), "doc_id", p, tag = Some("demo_tf_delete"))
-      val updated = all.as("a")
-        .join(all.select(col("doc_id").as("nid"), col("text").as("ntext")),
-          col("a.doc_id") + 1 === col("nid"))
-        .where(pmod(col("a.doc_id"), lit(11)) === 5 &&
-          pmod(col("a.doc_id"), lit(7)) =!= 3)
-        .select(col("a.doc_id").as("doc_id"), col("ntext").as("text"))
-      upsert(updated, "doc_id", "text", p, tag = Some("demo_tf_upsert"))
+      delete(demoDeletes(all, "doc_id"), "doc_id", p, tag = Some("demo_tf_delete"))
+      upsert(demoUpserts(all, "doc_id", "text", skipDeletes = true),
+        "doc_id", "text", p, tag = Some("demo_tf_upsert"))
       tailFold(spark, p, "doc_id", keep = 1, tag = Some("demo_tf_fold"))
     }
 
@@ -434,7 +372,6 @@ object IncrementalBm25 extends SegmentedRoot("stats", "seg/", Seq("seg")) {
   def ensureTombstoned(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
       val all = grownHalves(spark, dataDir, p)
-      delete(all.where(pmod(col("doc_id"), lit(7)) === 3)
-        .select(col("doc_id")), "doc_id", p, tag = Some("demo_delete"))
+      delete(demoDeletes(all, "doc_id"), "doc_id", p, tag = Some("demo_delete"))
     }
 }

@@ -3,7 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.Store
 import graft.search.Ann
 import graft.tables.Tables
 
@@ -36,9 +35,8 @@ import graft.tables.Tables
   *
   * Drift caveat (design note for 100 TB): frozen centroids mean list-size
   * balance degrades as the ingested distribution drifts; the production
-  * answer is periodic re-train + full rebuild into a fresh root (the
-  * [[compact]] mechanics with new centroids), swapped behind the same
-  * publish-last discipline.
+  * answer is periodic re-train + full rebuild into a fresh root
+  * ([[retrain]]), behind the same publish-last discipline.
   */
 object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
 
@@ -74,7 +72,7 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
   /** Append a delta of new vectors as the next segment, assigned against
     * the frozen centroids. Vec ids must be unseen-or-tombstoned
     * (replacing a LIVE vector in place is [[upsert]]; dead rows reclaim
-    * at [[compact]]). */
+    * at a full [[tailFold]]). */
   def append(delta: DataFrame, root: String,
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "ivf-append") {
@@ -109,9 +107,10 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
     * no staleness caveat at all. The tombstone carries a HORIZON (the
     * current segment count), so a later re-insert of the same id — a new
     * document, or [[upsert]]'s new version — serves from its own segment
-    * (Lucene delete-then-add). [[compact]]/[[retrain]] read through the
-    * filter, so they physically reclaim the rows and their fresh roots
-    * start with a clear ledger. Idempotent via `tag`. */
+    * (Lucene delete-then-add). A full [[tailFold]] and [[retrain]] read
+    * through the filter, so they physically reclaim the rows (the fold
+    * rebases the ledger past them, a retrained root starts with a clear
+    * one). Idempotent via `tag`. */
   def delete(ids: DataFrame, root: String, tag: Option[String] = None): Unit =
     commitDelete(ids, "vec_id", root, "ivf-delete", tag)
 
@@ -157,42 +156,15 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
     Ann.ivfTopKAssigned(readAssigned(spark, root),
       readCentroids(spark, root), queryVec, nprobe, k)
 
-  /** Fold all committed segments into a single fresh segment under
-    * `newRoot` (assignment rows are the same multiset, so served scores
-    * are hash-identical), re-publishing the frozen centroids as-is. The
-    * old root stays readable throughout; callers swap the root pointer
-    * when done — the standard LSM tail-fold, same as the sparse twin.
-    * Reads through the tombstone filter, so deleted vectors are
-    * physically dropped and the fresh root starts with a clear ledger. */
-  def compact(spark: SparkSession, root: String, newRoot: String,
-              tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "ivf-compact") { // quiesce the
-      requireInit(root) // source: a delete committed mid-read would vanish
-      readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$newRoot/centroids")                 // from the fresh
-      writeAssigned(readAssigned(spark, root), segDir(newRoot, 0)) // clear-
-      // ledger root
-      SegmentStore.publish(commitBase(newRoot), 1, tag)
-    }
-
-  /** Size-tiered auto-compaction trigger (see
-    * [[IncrementalBm25.compactIfNeeded]] — same policy, same pointer-swap
-    * contract): fold when segment fan-in exceeds `maxSegments`, return
-    * the root to read from. */
-  def compactIfNeeded(spark: SparkSession, root: String,
-                      maxSegments: Int, tag: Option[String] = None): String =
-    SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
-      compact(spark, root, _, tag = tag))
-
   /** TAIL-FOLD: fold every segment past the first `keep` into ONE fresh
     * physical segment IN THIS ROOT, leaving the prefix untouched — the
     * bounded-write-amplification compaction docs/PLANS.md designed
     * (size-tiered folds rewrite the small recent tail; the big old
     * prefix is REFERENCED by the new manifest, not rewritten). Write
-    * cost is O(tail bytes); [[compact]]'s full fold — still the deep
-    * clean that reclaims prefix tombstones and resets storage into a
-    * fresh root — stays O(corpus), which is exactly why a steady-state
-    * 100 TB ingest runs THIS between rare deep cleans. All tombstones
+    * cost is O(tail bytes); the full fold (`keep = 0`) — the deep clean
+    * that reclaims prefix tombstones and rebases the ledger — stays
+    * O(corpus), which is exactly why a steady-state 100 TB ingest runs
+    * partial folds between rare deep cleans. All tombstones
     * visible at fold time are APPLIED to the folded rows; the horizon
     * algebra that keeps that sound without a ledger rewrite, the commit,
     * the crash windows and the retain-one-generation GC are
@@ -221,9 +193,10 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
     * CURRENT corpus (union of all committed segments), reassign every
     * vector against them, and publish the result as a fresh single-
     * segment root. The old root stays readable throughout and callers
-    * swap their pointer when done — compaction with new centroids, behind
-    * the same publish-last discipline. Served results are exactly a
-    * from-scratch trained build over the same corpus (same kmeans path
+    * move their reads to the new root when done — a full rebuild with
+    * new centroids, behind the same publish-last discipline. Served
+    * results are exactly a from-scratch trained build over the same
+    * corpus (same kmeans path
     * as [[IvfIndex.buildTrained]], same [[Ann.ivfAssign]] arithmetic —
     * IndexSpec pins retrained ≡ rebuilt). */
   def retrain(spark: SparkSession, root: String, newRoot: String,
@@ -243,8 +216,8 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
   /** Drift-triggered retrain — wires the a22 list-balance monitor to
     * [[retrain]]: when the worst list's balance (n·lists/total, the a22
     * definition — 1.0 is perfectly even) exceeds `maxBalance`, re-fit
-    * into a fresh versioned sibling and return it for the caller to swap
-    * its pointer to; otherwise return `root` unchanged. The balance scan
+    * into a fresh versioned sibling and return it for the caller to read
+    * from; otherwise return `root` unchanged. The balance scan
     * is one map-side-combined count over the assignment (list-count
     * rows to the driver, never vectors). `lists` is the CENTROID count,
     * not the non-empty-list count — a fully-collapsed assignment (every
@@ -295,12 +268,8 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
   def ensureUpserted(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
       val emb = grown(spark, dataDir, p, parts = 2)
-      val updated = emb.as("a")
-        .join(emb.select(col("vec_id").as("nid"),
-          col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
-        .where(pmod(col("a.vec_id"), lit(11)) === 5)
-        .select(col("a.vec_id").as("vec_id"), col("nemb").as("embedding"))
-      upsert(updated, p, tag = Some("demo_upsert"))
+      upsert(demoUpserts(emb, "vec_id", "embedding"), p,
+        tag = Some("demo_upsert"))
     }
 
   val TailFoldName = "ivf_tailfold_v1"
@@ -314,15 +283,9 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
   def ensureTailFolded(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
       val emb = grown(spark, dataDir, p, parts = 3)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_tf_delete"))
-      val updated = emb.as("a")
-        .join(emb.select(col("vec_id").as("nid"),
-          col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
-        .where(pmod(col("a.vec_id"), lit(11)) === 5 &&
-          pmod(col("a.vec_id"), lit(7)) =!= 3)
-        .select(col("a.vec_id").as("vec_id"), col("nemb").as("embedding"))
-      upsert(updated, p, tag = Some("demo_tf_upsert"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_tf_delete"))
+      upsert(demoUpserts(emb, "vec_id", "embedding", skipDeletes = true), p,
+        tag = Some("demo_tf_upsert"))
       tailFold(spark, p, keep = 1, tag = Some("demo_tf_fold"))
     }
 
@@ -336,7 +299,6 @@ object IncrementalIvf extends SegmentedRoot("commit", "seg/", Seq("seg")) {
   def ensureTombstoned(spark: SparkSession, dataDir: String): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
       val emb = grown(spark, dataDir, p, parts = 2)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
     }
 }

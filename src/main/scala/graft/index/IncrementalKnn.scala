@@ -56,7 +56,7 @@ import SegmentedRoot.filterTombsWith
   *                    EVERY segment of a grown graph, not just on a
   *                    one-shot build. The layout survives growth by
   *                    construction (each append writes its own sorted
-  *                    segment) and compaction re-sorts the fold
+  *                    segment) and every fold re-sorts its output
   *                    (StreamingSpec pins both).
   *   - `commit/v=<k>/` atomic version markers ([[SegmentedRoot]]).
   *
@@ -103,7 +103,7 @@ object IncrementalKnn extends SegmentedRoot(
     * index needs and a build-once one doesn't (Lucene exposes segment +
     * deleted-doc counts for exactly this). Beyond the three clocks of
     * [[stateVersions]]: `n_tombstoned_ids` is the ledger backlog
-    * compaction will fold, and `n_stale_srcs` is the ONE alertable
+    * a reclaiming fold will absorb, and `n_stale_srcs` is the ONE alertable
     * number — srcs whose served rows a tombstone killed AFTER their
     * last repair (0 = every read is rebuild-exact; >0 = visible-holes
     * degraded until the next repair). Costs two bounded jobs (ledger
@@ -124,7 +124,7 @@ object IncrementalKnn extends SegmentedRoot(
       "repair_rebase" -> committed(root).repairRebase.toLong,
       // READ fan-in (live segment count): after tail-folds the version
       // clock keeps counting mutations while fan-in shrinks — this is
-      // the number the compaction trigger and a capacity planner watch
+      // the number the fold trigger and a capacity planner watch
       "read_fan_in" -> fanIn(root).toLong)
   }
 
@@ -228,7 +228,7 @@ object IncrementalKnn extends SegmentedRoot(
 
   /** Append a delta of new vectors: one new assignment/probes/edges
     * segment, candidate arms as documented above. Vec ids must be new
-    * (append-only; replacement needs tombstone + [[compact]]). */
+    * (append-only; replacing a live vector is [[upsert]]). */
   def append(delta: DataFrame, root: String, nprobe: Int, k: Int,
              tag: Option[String] = None): Unit =
     SegmentStore.withWriterLease(root, "knn-append") {
@@ -405,7 +405,7 @@ object IncrementalKnn extends SegmentedRoot(
     val v = requireInit(root)
     val base = readKind(spark, root, "edges")
     // tombstone set materialized ONCE per read (tiny — bounded by
-    // compaction cadence): the optimizer pushes the (src, dst)
+    // fold cadence): the optimizer pushes the (src, dst)
     // anti-joins below the segment UNION, so an inline ledger aggregate
     // re-plans per union arm (2 joins × segments broadcast builds, each
     // with its own ledger shuffle — 8 in the r16 a29 before-plan);
@@ -446,9 +446,9 @@ object IncrementalKnn extends SegmentedRoot(
         // every steady-state read's jobs they cost (r16 measurement).
         // Otherwise the stale set is MATERIALIZED once (localCheckpoint
         // — bounded by the unrepaired backlog's reverse degree) so the
-        // detection subtree never re-executes per consumer. Compaction
-        // clears both ledgers and returns the root to the single-scan
-        // plan.
+        // detection subtree never re-executes per consumer. A reclaiming
+        // fold absorbs both ledgers and returns the root to the
+        // single-scan plan.
         val stale: Option[DataFrame] =
           if (repairsCurrent(spark, root)) None
           else {
@@ -526,7 +526,7 @@ object IncrementalKnn extends SegmentedRoot(
     // on the tombstone ledger's version clock because deletes/upserts
     // never bump the index version. Cost: the dead-row scan is one
     // columnar pass, the repair set is bounded by the tombstone
-    // backlog's reverse degree — compaction resets both.
+    // backlog's reverse degree — a reclaiming fold resets both.
     val repairSrcs = staleSrcs(spark, root, v).get
     val holed = vectorsAll(spark, root)
       .select(col("vec_id").as("src"), col("embedding").as("svec"))
@@ -571,11 +571,12 @@ object IncrementalKnn extends SegmentedRoot(
     * Lucene/Qdrant mark-and-filter: a tombstone segment commits under its
     * own versioned ledger (same marker protocol — ids first, marker
     * last), every read-side frame excludes tombstoned ids from that
-    * moment on, and [[compact]] physically reclaims the rows and clears
-    * the ledger. Until a REBUILD, edges that pointed AT a deleted vector
-    * are dropped rather than refilled — the per-src rank keeps its holes,
-    * a visible (and documented) degree-degradation signal, exactly like
-    * Lucene's deleted docs not refilling posting tops until merge.
+    * moment on, and [[reclaimFold]] physically reclaims the rows and
+    * rebases the ledger past them. Until a REBUILD, edges that pointed AT
+    * a deleted vector are dropped rather than refilled — the per-src rank
+    * keeps its holes, a visible (and documented) degree-degradation
+    * signal, exactly like Lucene's deleted docs not refilling posting
+    * tops until merge.
     * Append-arms stay unfiltered: candidate edges into deleted vectors
     * are generated and then filtered at read, which keeps the grown ≡
     * rebuilt exactness argument intact for the SURVIVING pairs and keeps
@@ -615,8 +616,8 @@ object IncrementalKnn extends SegmentedRoot(
     * partitioned, so vec_id seeks don't prune there, and the coarse subset
     * is filtered inline — correct but slower; every segment appended AFTER
     * the code upgrade writes real artifacts, so the penalty decays with
-    * normal churn and vanishes at the next compaction, which re-writes the
-    * fold in the seek layout). One existence probe per segment. */
+    * normal churn and vanishes at the next fold, which re-writes the
+    * folded segments in the seek layout). One existence probe per segment. */
   private def servingSegment(spark: SparkSession, root: String, kind: String)
                             (kk: String): DataFrame =
     if (SegmentStore.pathExists(s"$root/$kind/$kk"))
@@ -653,47 +654,20 @@ object IncrementalKnn extends SegmentedRoot(
       .drop("__seg")
   }
 
-  /** Fold all segments into a fresh single-segment root (read-merged
-    * edges, unioned assignment/probes/vecs/coarse, centroids
-    * republished) — the LSM tail-fold bounding read-side fan-in; old
-    * root readable throughout. Tombstoned rows are physically dropped
-    * (assign/probes/vecs/coarse by id, edges via the already-filtered
-    * read) and the new root starts with a CLEAR tombstone ledger — the
-    * reclamation half of [[delete]]'s mark-and-filter, same as a Lucene
-    * segment merge. */
-  def compact(spark: SparkSession, root: String, newRoot: String,
-              k: Int, tag: Option[String] = None): Unit =
-    SegmentStore.withWriterLease(root, "knn-compact") {
-    requireInit(root)
-    readCentroids(spark, root).coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$newRoot/centroids")
-    writeLive(spark, root, k, newRoot, "0")
-    SegmentStore.publish(commitBase(newRoot), 1, tag)
-    }
-
-  /** The root's LIVE state as one segment `p` under `dest`: tombstoned
+  /** The root's LIVE state as its physical segment `p`: tombstoned
     * rows physically dropped (assign/probes/vecs/coarse by id, edges via
     * the covered merged read — repair refills folded in, ranks recomputed
     * at read); vecs/coarse re-sorted into the seek layout. */
   private def writeLive(spark: SparkSession, root: String, k: Int,
-                        dest: String, p: String): Unit = {
+                        p: String): Unit = {
     writeAssign(liveKind(spark, root, "assign", "vec_id")
-      .select(col("vec_id"), col("embedding"), col("cid")), s"$dest/assign/$p")
+      .select(col("vec_id"), col("embedding"), col("cid")), s"$root/assign/$p")
     liveKind(spark, root, "probes", "src").select(col("src"), col("cid"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dest/probes/$p")
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/probes/$p")
     writeEdges(edges(spark, root, k)
-      .select(col("src"), col("dst"), col("score")), s"$dest/edges/$p")
-    writeVecs(vectorsAll(spark, root), dest, p)
+      .select(col("src"), col("dst"), col("score")), s"$root/edges/$p")
+    writeVecs(vectorsAll(spark, root), root, p)
   }
-
-  /** Size-tiered auto-compaction trigger (see
-    * [[IncrementalBm25.compactIfNeeded]] — same policy, same pointer-swap
-    * contract): fold when edge-segment fan-in exceeds `maxSegments`,
-    * return the root to read from. */
-  def compactIfNeeded(spark: SparkSession, root: String, k: Int,
-                      maxSegments: Int, tag: Option[String] = None): String =
-    SegmentStore.compactIfNeeded(root, version(root), maxSegments)(
-      compact(spark, root, _, k, tag = tag))
 
   /** TAIL-FOLD for the graph family: fold every segment past the first
     * `keep` into ONE fresh physical segment (all five artifact kinds) IN
@@ -707,7 +681,7 @@ object IncrementalKnn extends SegmentedRoot(
     * byte-identical to the unfolded root. No gating on repair state, no
     * ledger rewrite, no reduction: dead rows and below-top-k rows fold
     * through unchanged (the read-side merge already handles both), and
-    * their physical reclamation stays with [[compact]] — Lucene's
+    * their physical reclamation stays with [[reclaimFold]] — Lucene's
     * partial-merge vs full-merge split. The folded edge/vecs/coarse
     * artifacts keep their seek layouts (src- and vec_id-sorted, small
     * row groups), so the serving walk's pushed `IN` lookups prune on
@@ -716,7 +690,7 @@ object IncrementalKnn extends SegmentedRoot(
                tag: Option[String] = None): Unit = {
     require(keep >= 1,
       "knn tail-fold keeps at least one segment — full in-root " +
-        "reclamation is reclaimFold() (repairs-current gate) or compact()")
+        "reclamation is reclaimFold() (repairs-current gate)")
     commitFold(root, keep, tag, "knn-tail-fold") { slot =>
       def tagged(read: String => DataFrame) = readTagged(slot.tail)(read)
       val p = slot.phys
@@ -748,7 +722,7 @@ object IncrementalKnn extends SegmentedRoot(
     * segment IN THIS ROOT and REBASE the tombstone ledger, the graph
     * family's missing lever between [[tailFold]] (pure reorganization —
     * dead rows and ledger history fold through untouched, growing with
-    * churn) and [[compact]] (a full new root + pointer swap). After a
+    * churn) and a full rebuild into a new root. After a
     * sustained churn the ledger's broadcast anti-join input is the cost
     * that grows without bound; this bounds it in place: the root path
     * never moves, the ledger's version clock never resets, readers just
@@ -790,7 +764,7 @@ object IncrementalKnn extends SegmentedRoot(
           "silent truncation; run repair() first")
       // repair-ledger clock captured BEFORE the reads it stamps as absorbed
       val repairV = SegmentStore.version(repairBase(root))
-      writeLive(spark, root, k, root, slot.phys)
+      writeLive(spark, root, k, slot.phys)
       slot.folded().copy(repairRebase = repairV)
     }
 
@@ -801,7 +775,8 @@ object IncrementalKnn extends SegmentedRoot(
     * centroids into a fresh single-segment root — the one operation that
     * IS a rebuild by definition (new centroids change every candidate
     * list), done at the operator's chosen cadence rather than forced per
-    * delta. Old root readable throughout; callers swap the pointer. The
+    * delta. Old root readable throughout; callers move their reads to
+    * the new root when done. The
     * result serves exactly [[Ann.knnGraph]] over the live vectors against
     * the re-fit centroids (IndexSpec pins it). */
   def retrain(spark: SparkSession, root: String, newRoot: String,
@@ -853,8 +828,7 @@ object IncrementalKnn extends SegmentedRoot(
                        nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, TombName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
     }
 
   // v2: repair segments carry their write horizon (`at_seg`) so upserts
@@ -879,12 +853,8 @@ object IncrementalKnn extends SegmentedRoot(
                      nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, UpsertName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      val updated = emb.as("a")
-        .join(emb.select(col("vec_id").as("nid"),
-          col("embedding").as("nemb")), col("a.vec_id") + 1 === col("nid"))
-        .where(pmod(col("a.vec_id"), lit(11)) === 5)
-        .select(col("a.vec_id").as("vec_id"), col("nemb").as("embedding"))
-      upsert(updated, p, nprobe, k, tag = Some("demo_upsert"))
+      upsert(demoUpserts(emb, "vec_id", "embedding"), p, nprobe, k,
+        tag = Some("demo_upsert"))
       repair(spark, p, nprobe, k, tag = Some("demo_upsert_repair"))
     }
 
@@ -900,8 +870,7 @@ object IncrementalKnn extends SegmentedRoot(
                        nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, TailFoldName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
       tailFold(spark, p, keep = 1, tag = Some("demo_tf_fold"))
     }
@@ -918,8 +887,7 @@ object IncrementalKnn extends SegmentedRoot(
                           nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
       reclaimFold(spark, p, k, tag = Some("demo_reclaim"))
     }
@@ -940,8 +908,7 @@ object IncrementalKnn extends SegmentedRoot(
                             nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, ReclaimDegradedName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
       reclaimFold(spark, p, k, tag = Some("demo_reclaim"))
       // the degraded window: a second delete, repair deliberately absent
@@ -957,8 +924,7 @@ object IncrementalKnn extends SegmentedRoot(
                      nprobe: Int = 3, k: Int = 5): String =
     IndexCatalog.ensure(spark, dataDir, RepairName) { p =>
       val emb = grownThirds(spark, dataDir, p, nprobe, k)
-      delete(emb.where(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id")), p, tag = Some("demo_delete"))
+      delete(demoDeletes(emb, "vec_id"), p, tag = Some("demo_delete"))
       repair(spark, p, nprobe, k, tag = Some("demo_repair"))
     }
 }

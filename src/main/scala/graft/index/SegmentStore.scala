@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The versioned-segment storage primitives under every incremental
   * index — versions, markers, manifests, the tombstone ledger, the writer
-  * lease, pointers and snapshots (reference analogue: Qdrant's collection
+  * lease and snapshots (reference analogue: Qdrant's collection
   * segments publish through one storage layer, not one per index type,
   * `scripts/indexing.py:214-260`). The root-level commit protocol the
   * three families share on top of these is [[SegmentedRoot]].
@@ -92,18 +92,17 @@ object SegmentStore {
 
   // ---- Writer lease (the single-writer contract, CHECKED) ----
   //
-  // Every mutation of an index root (append/upsert/delete/fold/compact/
-  // retrain) assumes it is the only writer: the fold's GC sweeps any
-  // physical dir the committed manifests don't reference — which would
-  // include a CONCURRENT in-flight append's uncommitted dir — and a
-  // delete committed mid-fold could take a horizon equal to the folded
-  // segment's logical number (sparing rows whose kill was never baked
-  // in: silent resurrection). The maintenance loops are single-writer by
-  // construction, but `POST /api/admin/tail-fold` (or any second
-  // process) is operator-reachable concurrently — so the contract is
-  // now CHECKED, not prose: every mutator acquires the root's lease
-  // file and a held lease refuses loudly ([[LeaseHeldException]])
-  // instead of corrupting silently.
+  // Every mutation of an index root (append/upsert/delete/fold/retrain)
+  // assumes it is the only writer: the fold's GC sweeps any physical dir
+  // the committed manifests don't reference — which would include a
+  // CONCURRENT in-flight append's uncommitted dir — and a delete committed
+  // mid-fold could take a horizon equal to the folded segment's logical
+  // number (sparing rows whose kill was never baked in: silent
+  // resurrection). The maintenance loops are single-writer by construction,
+  // but `POST /api/admin/tail-fold` (or any second process) is
+  // operator-reachable concurrently — so the contract is now CHECKED, not
+  // prose: every mutator acquires the root's lease file and a held lease
+  // refuses loudly ([[LeaseHeldException]]) instead of corrupting silently.
   //
   // Mechanics: one zero-ish lease file per index root
   // (`<root>/_WRITER_LEASE`), created with overwrite=false — an atomic
@@ -112,7 +111,7 @@ object SegmentStore {
   // better than the unchecked prose). The file carries
   // `owner \t stamp-millis \t token` (token unique per acquisition). A
   // held lease is HEARTBEATED: a daemon timer rewrites the stamp every
-  // `staleMs/3`, so a legitimately-long fold (reclaimFold/compact are
+  // `staleMs/3`, so a legitimately-long fold (a full reclaimFold is
   // O(live corpus) at the design point — hours) never looks stale to a
   // second writer; only a holder that CRASHED (or whose JVM paused past
   // `staleMs`) leaves a breakable lease. Breaking is rename-then-verify,
@@ -424,7 +423,7 @@ object SegmentStore {
         if (age <= staleMs) throw new LeaseHeldException(
           s"writer lease on $root held by '$heldOwner' (${age}ms old): " +
             "concurrent mutation refused — retry after the current " +
-            "append/fold/compact finishes")
+            "append/fold finishes")
         if (!breakStaleLease(fs, leasePath, observed, token))
           throw new LeaseHeldException(
             s"writer lease on $root was re-acquired while breaking a " +
@@ -535,7 +534,7 @@ object SegmentStore {
   // ---- Manifest-addressed segment lists (the tail-fold enabler) ----
   //
   // The positional layout (`seg/0..v-1`, version = segment count) makes
-  // every compaction a FULL fold: the new root must contain every byte,
+  // every compaction a FULL fold: it must rewrite every byte,
   // including the large old prefix that didn't change — O(corpus) write
   // cost per fold, the classic size-tiered-vs-full-merge gap that
   // dominates write amplification at 100 TB (docs/PLANS.md records the
@@ -547,10 +546,10 @@ object SegmentStore {
   //
   // Design constraints honored here:
   //  - ONE atomic step per mutation: the manifest payload lives INSIDE
-  //    the commit version dir (`commit/v=N/manifest`, like setPointer's
-  //    `root` payload) and publishes under the same single `_COMMITTED`
-  //    marker as the version's idempotence tag — no second marker, no
-  //    torn append-vs-manifest state, `version()` semantics unchanged.
+  //    the commit version dir (`commit/v=N/manifest`) and publishes
+  //    under the same single `_COMMITTED` marker as the version's
+  //    idempotence tag — no second marker, no torn append-vs-manifest
+  //    state, `version()` semantics unchanged.
   //  - logical numbers are not positions; they only feed the horizon
   //    algebra of folds (no ledger rewrite on a fold, a ledger REBASE on
   //    a full one), which [[SegmentedRoot]] owns.
@@ -737,119 +736,6 @@ object SegmentStore {
     fs.exists(p) && fs.delete(p, true)
   }
 
-  /** Size-tiered auto-compaction trigger — the shared policy half of the
-    * LSM story: when the committed segment count `v` exceeds
-    * `maxSegments`, fold into a fresh versioned root (the `compact`
-    * callback receives the new root; the old root stays readable
-    * throughout) and return the new root for the caller to swap its
-    * pointer to. The new root's name carries the source version, so
-    * repeated triggers never collide. */
-  def compactIfNeeded(root: String, v: Int, maxSegments: Int)
-                     (compact: String => Unit): String =
-    if (v <= maxSegments) root
-    else {
-      val newRoot = s"$root-c$v"
-      compact(newRoot)
-      newRoot
-    }
-
-  /** Durable "which root is current" pointer — the missing persistence
-    * half of [[compactIfNeeded]]'s pointer swap: without it a restarted
-    * process would resolve the pre-compaction root forever. Reuses the
-    * version+marker protocol verbatim (no new atomicity primitive): each
-    * swap writes a `root` payload file under `pointerBase/v=N` and
-    * publishes the `_COMMITTED` marker LAST, so a crash mid-swap leaves
-    * the previous pointer committed and visible — never a torn pointer.
-    * Works on HDFS/POSIX/object stores for the same reasons the segment
-    * markers do. */
-  def setPointer(pointerBase: String, root: String): Unit =
-    publish(pointerBase, version(pointerBase) + 1, None,
-      Seq("root" -> root.getBytes("UTF-8")))
-
-  /** Committed current root, or None before the first swap. */
-  def getPointer(pointerBase: String): Option[String] = {
-    val v = version(pointerBase)
-    if (v == 0) None
-    else Some(readPointer(pointerBase, v))
-  }
-
-  /** The root a committed pointer version N points at — version N-1's
-    * value is the retire() candidate after a swap's readers drain. */
-  def readPointer(pointerBase: String, v: Int): String = {
-    val (fs, _) = fsFor(pointerBase)
-    new String(readBytes(fs, new Path(versionDir(pointerBase, v), "root")), "UTF-8")
-  }
-
-  /** Recovery-and-retirement sweep for the compact-swap loop — run at
-    * the START of every at-least-once maintenance batch, before the
-    * idempotence skip check. Besides closing two crash windows that
-    * would leak storage (correctness was never affected — the pointer
-    * protocol guarantees readers a committed root throughout), this
-    * sweep is where superseded roots are RETIRED at all (r14): the
-    * maintenance loops stop retiring inline after a swap, so a serving
-    * frame planned against the pre-swap root keeps its files for one
-    * full trigger interval — the pointer-swap analogue of the
-    * tail-folds' retain-one-generation GC.
-    *
-    *   1. crash AFTER [[compactIfNeeded]] published the new root (which
-    *      carries the redelivered batch's tag) but BEFORE [[setPointer]]:
-    *      on redelivery the tag is found on the OLD root, the whole step
-    *      is skipped, the pointer never moves, and the next compaction
-    *      writes a differently-named root — each such crash would orphan
-    *      a full index copy forever. The compaction target name is
-    *      deterministic (`<root>-c<version>`), so ONE probe finds the
-    *      orphan; if its committed history carries this batch's tag, the
-    *      swap is finished here (adopt: setPointer; the superseded root
-    *      becomes the pv-1 target and is retired by the NEXT trigger's
-    *      sweep) and the adopted root is returned — the caller's
-    *      skip check then sees the tag on the CURRENT root, as if the
-    *      crash never happened.
-    *   2. the previous pointer version's target: superseded by the last
-    *      committed swap at least one trigger ago, its reader-drain
-    *      grace has elapsed, so it is retired here ([[retire]] is
-    *      idempotent — in normal operation this is one exists-probe).
-    *   3. crash DURING compaction (the tagged append already committed
-    *      on the old root, the compacted root's first `_COMMITTED`
-    *      marker not yet written): on redelivery the tag is found on the
-    *      OLD root so the caller skips append AND the compaction retry,
-    *      and the partial target directory would never be adopted (no
-    *      committed version) nor reused (the next compaction, after the
-    *      next append, targets a higher version) — a storage leak. The
-    *      partial target is identified by construction: the
-    *      deterministic orphan path EXISTS but resolves to committed
-    *      version 0, which a completed compaction can never do
-    *      (compact's last act is publishing version 1). It is retired
-    *      here. A committed orphan that merely lacks THIS batch's tag
-    *      is left alone — conservative, and unreachable from the
-    *      single-writer loop anyway (redelivery replays the same tag).
-    *
-    * `segVersion` / `committedHasTag` are the index type's accessors
-    * (each incremental index roots its version ledger differently).
-    * Returns the resolved current root. Cost when nothing crashed:
-    * three FS existence probes. */
-  def recoverRoot(pointerBase: String, defaultRoot: String, tag: String)
-                 (segVersion: String => Int,
-                  committedHasTag: (String, String) => Boolean): String = {
-    val cur = getPointer(pointerBase).getOrElse(defaultRoot)
-    val pv = version(pointerBase)
-    if (pv > 0) {
-      // the ONE retirement point of the compact-swap loop (item 2)
-      val prev = if (pv == 1) defaultRoot else readPointer(pointerBase, pv - 1)
-      if (prev != cur) retire(prev)
-    }
-    val orphan = s"$cur-c${segVersion(cur)}"
-    if (orphan != cur && committedHasTag(orphan, tag)) { // window 1: adopt
-      setPointer(pointerBase, orphan)
-      // cur is NOT retired inline: it is the new pv-1 target and gets
-      // its one-generation grace from the next trigger's sweep above
-      orphan
-    } else {
-      if (orphan != cur && segVersion(orphan) == 0)
-        retire(orphan) // window 3: uncommitted partial compaction target
-      cur
-    }
-  }
-
   // ---- Tombstone ledger (shared mark-and-filter delete protocol) ----
   //
   // One versioned ledger per index root (`<root>/tombs`): each delete
@@ -859,8 +745,8 @@ object SegmentStore {
   // segments; an absent ledger costs one existence probe and leaves the
   // read plan untouched. Deletion semantics per family are documented at
   // the call sites (Lucene/Qdrant mark-and-filter: excluded from reads
-  // immediately, physically reclaimed at the next compaction, which
-  // starts its new root with a clear ledger).
+  // immediately, physically reclaimed at the next full fold, which
+  // rebases the ledger past the kills it absorbed).
 
   private def tombSegDir(base: String, v: Int) = s"$base/seg/$v"
   private def tombCommitBase(base: String) = s"$base/commit"
@@ -995,11 +881,7 @@ object SegmentStore {
     * a serving root (the spec pins snapshot ≡ source reads, and
     * isolation from post-snapshot mutations of the source). Empty
     * directories carry no state in this layout (all protocol state is
-    * files), so they are not reproduced. For POINTER-MANAGED roots
-    * (the streaming ingests' bounded-storage loops) use
-    * [[snapshotCurrent]] — compaction moves the live tree to a sibling
-    * directory, and snapshotting the original path would faithfully
-    * back up a retired husk. */
+    * files), so they are not reproduced. */
   def snapshot(src: String, dest: String): Unit = {
     val (fs, sp0) = fsFor(src)
     require(fs.exists(sp0), s"snapshot source $src does not exist")
@@ -1114,46 +996,5 @@ object SegmentStore {
         }.map(e => s"$baseStr -> ${e.dir}")
       }
     }.sorted
-  }
-
-  /** [[snapshot]] for a POINTER-MANAGED root (the streaming ingests'
-    * bounded-storage loops): compaction folds into a SIBLING directory
-    * (`<root>-c<v>`) and swaps the `<root>.current` pointer, so once any
-    * compaction has run, the original path is a retired husk — a plain
-    * `snapshot(root, dest)` would faithfully back up the WRONG tree.
-    * This resolves the pointer first (same convention every ingest
-    * writes) and snapshots the CURRENT root; returns the resolved source
-    * path so the caller can record what was backed up. Restore is
-    * unchanged: copy anywhere, point readers (or the pointer) at it. */
-  def snapshotCurrent(indexRoot: String, dest: String): String = {
-    val src = getPointer(s"$indexRoot.current").getOrElse(indexRoot)
-    snapshot(src, dest)
-    src
-  }
-
-  /** Reclaim a RETIRED index root — the storage-lifecycle half of
-    * [[compactIfNeeded]]'s pointer swap. Compaction writes a fresh root
-    * (no files shared with the old one) and the caller swaps its
-    * pointer; without reclamation every compaction leaks a full index
-    * copy, which at 100 TB is the difference between bounded and
-    * unbounded index storage.
-    *
-    * Call AFTER the pointer swap is durable and in-flight readers of the
-    * old root have drained (the caller's drain policy — typically one
-    * query-timeout grace period). Deletion order makes a mid-retire
-    * crash safe rather than torn: every `_COMMITTED` marker under the
-    * root is removed FIRST, so a partially-deleted root resolves to
-    * version 0 (uninitialized — loudly refused by the index readers),
-    * never to a committed version with missing data; then the tree goes
-    * in one recursive delete. Idempotent: returns false when the root
-    * is already gone. */
-  def retire(root: String): Boolean = {
-    val (fs, p) = fsFor(root)
-    if (!fs.exists(p)) false
-    else {
-      filesUnder(fs, p).map(_.getPath).filter(_.getName == CommitMarker)
-        .foreach(fs.delete(_, false))
-      fs.delete(p, true)
-    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod}
 
 import SegmentStore.{Manifest, ManifestEntry}
 
@@ -212,6 +212,25 @@ abstract class SegmentedRoot(commitDir: String, entryPrefix: String,
           SegmentStore.publishManifest(commitBase(root), at.v + 1, tag, m)
         }
       }
+
+  /** The oracle fixtures' demo delete set over `rows`: ids ≡ 3 (mod 7),
+    * spread across every segment of the grown fixtures. */
+  protected def demoDeletes(rows: DataFrame, idCol: String): DataFrame =
+    rows.where(pmod(col(idCol), lit(7)) === 3).select(col(idCol))
+
+  /** The oracle fixtures' demo upsert set over `rows`: each id ≡ 5 (mod 11)
+    * with a `+1` neighbour takes that neighbour's `payload`; `skipDeletes`
+    * drops the [[demoDeletes]] ids, for a fixture that applies both sets. */
+  protected def demoUpserts(rows: DataFrame, idCol: String, payload: String,
+                            skipDeletes: Boolean = false): DataFrame = {
+    val id = col(s"a.$idCol")
+    val picked = pmod(id, lit(11)) === 5
+    rows.as("a")
+      .join(rows.select(col(idCol).as("nid"), col(payload).as("npay")),
+        id + 1 === col("nid"))
+      .where(if (skipDeletes) picked && pmod(id, lit(7)) =!= 3 else picked)
+      .select(id.as(idCol), col("npay").as(payload))
+  }
 
   /** Size-tiered fold trigger: when the READ fan-in exceeds
     * `maxSegments`, `fold` the suffix [[SegmentStore.tieredFoldStart]]

@@ -6,7 +6,7 @@ import graft.index.IncrementalKnn
 
 /** Per-process serving state for an incrementally-GROWN kNN graph root —
   * the "resolve once per session" half of the freshness story (r10
-  * VERDICT #2: the grown walk re-resolved pointer/ledger/segment state
+  * VERDICT #2: the grown walk re-resolved ledger/segment state
   * inside every hop's job, making `s28b_graph_grown` the most expensive
   * s-query at a varying job count; with this state it runs 2.29 s →
   * 0.39 s at sf0.1 with a stable job count).
@@ -20,7 +20,7 @@ import graft.index.IncrementalKnn
   * ([[IncrementalKnn.stateVersions]] — index segments, tombstone ledger,
   * repair ledger) and live in [[ServingCache]] (persisted RAM-resident,
   * re-validated with three FS probes per request). Any mutation —
-  * append, delete, upsert, repair, compaction behind the pointer — bumps
+  * append, delete, upsert, repair, fold — bumps
   * one of the three clocks, and the next request rebuilds the state and
   * unpersists the stale frames, so freshness stays "one trigger
   * interval", exactly as before; only the per-request re-resolution is

@@ -443,7 +443,7 @@ object SearchEngine {
                        k: Int): DataFrame = {
     import graft.index.TfIdfGraphIndex
     val root = TfIdfGraphIndex.ensureGrown(spark, dir)
-    // pointer + ledger + segment list resolve ONCE per mutation of the
+    // ledger + segment list resolve ONCE per mutation of the
     // root ([[GrownServing]]) — the walk's per-hop lookups hit the
     // persisted merged frames instead of re-running the whole
     // segment-union + tombstone subtree every hop

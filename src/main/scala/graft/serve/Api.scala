@@ -700,7 +700,7 @@ object Api {
       // plus the grown BM25 root's STALE-STATS drift gauge
       // (stats_drift_docs: documents df/n_docs/avgdl still count that no
       // longer serve; when its share of stats_n_docs passes the
-      // operator's tolerance, a full fold/compact is the merge moment
+      // operator's tolerance, a full fold is the merge moment
       // that zeroes it — IncrementalBm25.stats).
       val src = graft.index.TfIdfGraphIndex.ensureGrown(spark, dir)
       val st = graft.index.IncrementalKnn.stats(spark, src)
@@ -718,9 +718,10 @@ object Api {
       // path unmoved, serving identical by construction (the fold keeps
       // each row's logical horizon — IncrementalKnn.tailFold). The
       // mutation clock bumps, so GrownServing's cached frames rebuild on
-      // the next read; no cache flush, no downtime, no pointer swap.
-      // Tombstone/repair reclamation stays with the full compact (the
-      // deep clean an operator schedules off-peak).
+      // the next read; no cache flush, no downtime.
+      // Tombstone/repair reclamation stays with the reclaiming full fold
+      // (/api/admin/reclaim-fold — the deep clean an operator schedules
+      // off-peak).
       // The single-writer contract is CHECKED here: this route racing a
       // live CDC append/fold on the same root refuses with 409 (the
       // writer lease) instead of sweeping the in-flight segment.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.index.{IncrementalBm25, IncrementalIvf, IncrementalKnn, SegmentStore, SegmentedRoot}
+import graft.index.{IncrementalBm25, IncrementalIvf, IncrementalKnn, SegmentedRoot}
 
 /** Structured Streaming operators (reference §2.10: the delta-import dir
   * N2 and checkpointed progress N4, made real streams).
@@ -255,11 +255,9 @@ object DeltaStream {
   // ---- Streaming index maintenance: one loop, seven entry points ----
   //
   // Every maintenance entry point below is a thin call into [[maintain]],
-  // which runs one trigger as: resolve the live root through the durable
-  // pointer ([[SegmentStore.recoverRoot]]), collapse a CDC batch to the
-  // net op per key ([[collapseCdc]]), apply tagged deletes → upserts →
-  // (kNN repair) → inserts, then tail-fold in place or compact into a
-  // fresh root and swap the pointer.
+  // which runs one trigger as: collapse a CDC batch to the net op per key
+  // ([[collapseCdc]]), apply tagged deletes → upserts → (kNN repair) →
+  // inserts, then tail-fold in place.
 
   /** One index family's half of [[maintain]]: the root's protocol object
     * ([[graft.index.SegmentedRoot]] — version and replay tags), the change
@@ -275,8 +273,6 @@ object DeltaStream {
     def append(rows: DataFrame, root: String, tag: String): Unit
     def repair(root: String, tag: String): Unit = ()
     def tailFold(root: String, maxSegments: Int, tag: String): Unit
-    /** Full fold into a fresh root past `maxSegments`: the root to read. */
-    def compact(root: String, maxSegments: Int, tag: String): String
   }
 
   private def bm25(spark: SparkSession, key: String, textCol: String,
@@ -294,8 +290,6 @@ object DeltaStream {
       def tailFold(root: String, maxSegments: Int, tag: String): Unit =
         IncrementalBm25.tailFoldIfNeeded(spark, root, idCol, maxSegments,
           tag = Some(tag), driftFoldShare = driftFoldShare)
-      def compact(root: String, maxSegments: Int, tag: String): String =
-        IncrementalBm25.compactIfNeeded(spark, root, idCol, maxSegments, Some(tag))
     }
 
   private def ivf(spark: SparkSession): Family =
@@ -308,8 +302,6 @@ object DeltaStream {
         IncrementalIvf.append(rows, root, Some(tag))
       def tailFold(root: String, maxSegments: Int, tag: String): Unit =
         IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
-      def compact(root: String, maxSegments: Int, tag: String): String =
-        IncrementalIvf.compactIfNeeded(spark, root, maxSegments, Some(tag))
     }
 
   /** The graph family over (vec_id, embedding) rows, or — with `dataDir` —
@@ -332,41 +324,37 @@ object DeltaStream {
         IncrementalKnn.repair(spark, root, nprobe, k, Some(tag))
       def tailFold(root: String, maxSegments: Int, tag: String): Unit =
         IncrementalKnn.tailFoldIfNeeded(spark, root, maxSegments, tag = Some(tag))
-      def compact(root: String, maxSegments: Int, tag: String): String =
-        IncrementalKnn.compactIfNeeded(spark, root, k, maxSegments, Some(tag))
     }
 
   /** Stream `rows` into the index at `indexRoot`, one [[maintain]] call
     * per micro-batch. `cdc` batches carry (op, id, payload) changelog rows;
-    * otherwise every row is an insert. */
+    * otherwise every row is an insert. `maxSegments` must be at least 2:
+    * each trigger's fold keeps the first segment and runs after the
+    * trigger's rows commit, so a bound of 1 would fail every trigger
+    * after its commit, on every replay — refused before any trigger. */
   private def maintainStream(rows: DataFrame, checkpoint: String,
                              indexRoot: String, cdc: Boolean,
-                             seqCol: Option[String], maxSegments: Int,
-                             tailFold: Boolean)
-                            (family: SparkSession => Family): StreamingQuery =
+                             seqCol: Option[String], maxSegments: Int)
+                            (family: SparkSession => Family): StreamingQuery = {
+    require(maxSegments >= 2, s"maxSegments must be >= 2, got $maxSegments")
     onEachBatch(rows, checkpoint) { (batch: DataFrame, batchId: Long) =>
       maintain(family(batch.sparkSession), batch, batchId, indexRoot, cdc,
-        seqCol, maxSegments, tailFold)
+        seqCol, maxSegments)
     }
+  }
 
   /** The per-trigger index maintenance loop — the bounded-storage,
     * exactly-once loop every maintenance entry point runs, inside
-    * [[withLeaseRetry]]:
+    * [[withLeaseRetry]], on the index root itself (its path never moves):
     *
-    *   1. resolve the live root through the durable `<indexRoot>.current`
-    *      pointer ([[SegmentStore.recoverRoot]] — first trigger:
-    *      `indexRoot` itself; also finishes a crashed compaction swap and
-    *      retires the root the PREVIOUS swap superseded, so a serving frame
-    *      planned against it has one trigger interval to collect);
-    *   2. collapse a CDC batch to the net op per key ([[collapseCdc]]);
-    *   3. deletes (tag `del_N`), upserts (`ups_N`), the kNN repair
+    *   1. collapse a CDC batch to the net op per key ([[collapseCdc]]);
+    *   2. deletes (tag `del_N`), upserts (`ups_N`), the kNN repair
     *      (`rep_N`, after any delete or upsert — BEFORE the inserts, so a
-    *      compaction they trigger folds the healed edges, and a doc
-    *      inserted after deletes is born with its exact surviving top-k),
-    *      then inserts (`batch_N`);
-    *   4. when the root is initialized, on EVERY op mix: tail-fold in
-    *      place (`fold_N`, the root path never moves), or compact into a
-    *      fresh root carrying `batch_N` and swap the pointer.
+    *      fold they trigger folds the healed edges, and a doc inserted
+    *      after deletes is born with its exact surviving top-k), then
+    *      inserts (`batch_N`);
+    *   3. when the root is initialized, on EVERY op mix: the family's
+    *      size-tiered tail-fold in place (`fold_N`).
     *
     * Empty-root rule: deletes that reach an uninitialized root are no-ops
     * in every family; net inserts and upserts initialize a BM25 root and
@@ -377,18 +365,14 @@ object DeltaStream {
     * Replay rule (Spark replays the one uncommitted batch after a crash;
     * [[withLeaseRetry]] re-runs a refused body): every step is tagged, and
     * a tag visible on ANY committed version skips its step. A root that
-    * already carries `batch_N` — committed by the insert append, or by the
-    * compaction the pointer swapped to — has applied steps 2–3 of this
-    * trigger (they commit in that order), so they are skipped as a whole;
-    * only the idempotent fold step runs again. */
+    * already carries `batch_N` has applied steps 1–2 of this trigger
+    * (they commit in that order), so they are skipped as a whole; only
+    * the idempotent fold step runs again. */
   private def maintain(f: Family, batch: DataFrame, batchId: Long,
-                       indexRoot: String, cdc: Boolean, seqCol: Option[String],
-                       maxSegments: Int, tailFold: Boolean): Unit =
+                       root: String, cdc: Boolean, seqCol: Option[String],
+                       maxSegments: Int): Unit =
     withLeaseRetry {
-      val ptr = s"$indexRoot.current"
       val tag = s"batch_$batchId"
-      val root = SegmentStore.recoverRoot(ptr, indexRoot, tag)(
-        f.index.version, f.index.committedHasTag)
       if (!f.index.committedHasTag(root, tag)) {
         val live = f.index.version(root) > 0
         val nb = if (cdc) collapseCdc(batch, f.idCol, seqCol) else batch
@@ -412,13 +396,7 @@ object DeltaStream {
           else rows("I")
         if (!ins.isEmpty) f.append(ins, root, tag)
       }
-      if (f.index.version(root) > 0) {
-        if (tailFold) f.tailFold(root, maxSegments, s"fold_$batchId")
-        else {
-          val newRoot = f.compact(root, maxSegments, tag)
-          if (newRoot != root) SegmentStore.setPointer(ptr, newRoot)
-        }
-      }
+      if (f.index.version(root) > 0) f.tailFold(root, maxSegments, s"fold_$batchId")
     }
 
   /** Streaming BM25 index maintenance: each micro-batch of new documents
@@ -428,25 +406,25 @@ object DeltaStream {
     * `scripts/indexing.py:214-260`; here search stays available
     * throughout because readers always see the last PUBLISHED stats
     * version, never a half-appended segment). Past `maxSegments` the
-    * trigger compacts and swaps the pointer. Exactly-once and
+    * trigger tail-folds the root in place. Exactly-once and
     * bounded-storage per [[maintain]]. */
   def indexIngest(docs: DataFrame, indexRoot: String, checkpoint: String,
                   idCol: String = "doc_id", textCol: String = "text",
                   maxSegments: Int = Int.MaxValue)
       : StreamingQuery =
     maintainStream(docs, checkpoint, indexRoot, cdc = false, None,
-      maxSegments, tailFold = false)(bm25(_, idCol, textCol))
+      maxSegments)(bm25(_, idCol, textCol))
 
   /** CDC-shaped [[indexIngest]]: each micro-batch of (op, doc_id, text)
     * changelog rows collapses to the net op per key ([[collapseCdc]] —
     * pass `seqCol` when a trigger can carry multiple ops for one key),
     * then DELETES tombstone ([[IncrementalBm25.delete]] — the doc leaves
-    * every `topK` this trigger, stats stale until compaction per the
+    * every `topK` this trigger, stats stale until a full fold per the
     * Lucene contract), op=U UPSERTS in place ([[IncrementalBm25.upsert]]
     * — same id, new text), and INSERTS append, per [[maintain]]. On an
     * uninitialized root, net-U rows fold into the init set (they are net
-    * inserts by definition there). With `tailFoldCompaction`,
-    * `driftFoldShare` < 1 additionally escalates to the full merge moment
+    * inserts by definition there). `driftFoldShare` < 1 additionally
+    * escalates the trigger's tail-fold to the full merge moment
     * when the stale-stats drift share crosses it
     * ([[IncrementalBm25.tailFoldIfNeeded]]) — the delete-heavy steady
     * state catches its scoring stats up without an operator call. */
@@ -455,10 +433,9 @@ object DeltaStream {
                      idCol: String = "doc_id", textCol: String = "text",
                      maxSegments: Int = Int.MaxValue,
                      seqCol: Option[String] = None,
-                     tailFoldCompaction: Boolean = false,
                      driftFoldShare: Double = 1.0): StreamingQuery =
     maintainStream(changes, checkpoint, indexRoot, cdc = true, seqCol,
-      maxSegments, tailFoldCompaction)(bm25(_, idCol, textCol, driftFoldShare))
+      maxSegments)(bm25(_, idCol, textCol, driftFoldShare))
 
   /** CDC-shaped [[ivfIngest]]: the micro-batch collapses to the net op per
     * key ([[collapseCdc]]; pass `seqCol` for multi-op-per-key triggers),
@@ -467,16 +444,14 @@ object DeltaStream {
     * without the deleted vectors from this trigger on, no staleness and no
     * repair step needed), upserts and inserts follow, per [[maintain]].
     * The root must be initialized first ([[IncrementalIvf.init]] freezes
-    * the centroids). `tailFoldCompaction` folds in place — O(tail) per
-    * trigger instead of the full fold's O(corpus) rewrite, the pointer
-    * never moves. */
+    * the centroids). Past `maxSegments` the root tail-folds in place —
+    * O(tail) per trigger, the root path never moves. */
   def ivfCdcIngest(changes: DataFrame, indexRoot: String,
                    checkpoint: String,
                    maxSegments: Int = Int.MaxValue,
-                   seqCol: Option[String] = None,
-                   tailFoldCompaction: Boolean = false): StreamingQuery =
+                   seqCol: Option[String] = None): StreamingQuery =
     maintainStream(changes, checkpoint, indexRoot, cdc = true, seqCol,
-      maxSegments, tailFoldCompaction)(ivf)
+      maxSegments)(ivf)
 
   /** Streaming VECTOR index maintenance — the dense twin of
     * [[indexIngest]]: each micro-batch of new (vec_id, embedding) rows is
@@ -492,7 +467,7 @@ object DeltaStream {
                 maxSegments: Int = Int.MaxValue)
       : StreamingQuery =
     maintainStream(vectors, checkpoint, indexRoot, cdc = false, None,
-      maxSegments, tailFold = false)(ivf)
+      maxSegments)(ivf)
 
   /** Streaming kNN-GRAPH maintenance: each micro-batch of new (vec_id,
     * embedding) rows becomes one committed [[IncrementalKnn]] segment —
@@ -506,7 +481,7 @@ object DeltaStream {
                 nprobe: Int, k: Int,
                 maxSegments: Int = Int.MaxValue): StreamingQuery =
     maintainStream(vectors, checkpoint, graphRoot, cdc = false, None,
-      maxSegments, tailFold = false)(knn(_, nprobe, k))
+      maxSegments)(knn(_, nprobe, k))
 
   /** Streaming TEXT-graph maintenance — `mode=graph`'s freshness story:
     * each micro-batch of new (doc_id, text) rows embeds into the FROZEN
@@ -525,7 +500,7 @@ object DeltaStream {
                       checkpoint: String, nprobe: Int, k: Int,
                       maxSegments: Int = Int.MaxValue): StreamingQuery =
     maintainStream(docs, checkpoint, graphRoot, cdc = false, None,
-      maxSegments, tailFold = false)(knn(_, nprobe, k, Some(dataDir)))
+      maxSegments)(knn(_, nprobe, k, Some(dataDir)))
 
   /** CDC-shaped [[textGraphIngest]] — the full index-maintenance pipeline
     * a CRUD store feeds: each micro-batch of (op, doc_id, text) changelog
@@ -536,24 +511,32 @@ object DeltaStream {
     * same id ([[IncrementalKnn.upsert]] — versioned tombstone + same-id
     * re-embed+append), and INSERTS (frozen-space embed + append, like
     * [[textGraphIngest]]), all inside the ONE single-writer loop of
-    * [[maintain]], so deletes can never race a concurrent compaction swap.
+    * [[maintain]], so deletes can never race a concurrent fold.
     * Every delete- or update-carrying trigger runs
     * [[IncrementalKnn.repair]] — the delta-cost neighbor healing — BEFORE
     * the insert half, so the served graph NEVER degrades: after each
     * trigger it equals a rebuild over the current rows (the a29/a30
-    * exactness arguments), without any rebuild ever running. With
-    * `tailFoldCompaction` the root folds in place
-    * ([[IncrementalKnn.tailFold]] — pure reorganization; it does NOT
-    * reclaim tombstones or repair segments, so schedule
-    * [[IncrementalKnn.compact]] as the deep clean). */
+    * exactness arguments), without any rebuild ever running. Past
+    * `maxSegments` the root folds in place ([[IncrementalKnn.tailFold]] —
+    * pure reorganization; it does NOT reclaim tombstones or repair
+    * segments, so schedule [[IncrementalKnn.reclaimFold]], or the
+    * `/api/admin/reclaim-fold` route, as the deep clean).
+    *
+    * `tailFoldCompaction` is the flag of the removed compact-and-swap
+    * mode; only `true` is accepted. The serving benchmark passes it by
+    * name, so a change to the benchmark may drop the argument and then
+    * this parameter. */
   def textGraphCdcIngest(changes: DataFrame, dataDir: String,
                          graphRoot: String, checkpoint: String,
                          nprobe: Int, k: Int,
                          maxSegments: Int = Int.MaxValue,
                          seqCol: Option[String] = None,
-                         tailFoldCompaction: Boolean = false): StreamingQuery =
+                         tailFoldCompaction: Boolean = true): StreamingQuery = {
+    require(tailFoldCompaction, "tailFoldCompaction = false selected the " +
+      "compact-and-swap mode, which was removed: every root folds in place")
     maintainStream(changes, checkpoint, graphRoot, cdc = true, seqCol,
-      maxSegments, tailFoldCompaction)(knn(_, nprobe, k, Some(dataDir)))
+      maxSegments)(knn(_, nprobe, k, Some(dataDir)))
+  }
 
   /** Streaming percolation: saved-search alerts fire on each arriving
     * micro-batch ([[graft.search.Percolate]] — conjunctive match is

@@ -579,85 +579,27 @@ class IndexSpec extends SparkSpec {
     new java.io.File(stray, "_COMMITTED").createNewFile()
     assert(IncrementalIvf.version(root) == 3)
 
-    // compaction folds segments into a fresh root, scores unchanged, old
-    // root untouched
-    val compacted = Files.createTempDirectory("graft-ivf-cp").toString + "/idx"
-    IncrementalIvf.compact(spark, root, compacted)
-    assert(IncrementalIvf.version(compacted) == 1)
-    val afterCompact = IncrementalIvf.topK(spark, compacted, qv, nprobe = 3, k = 15)
+    def top = IncrementalIvf.topK(spark, root, qv, nprobe = 3, k = 15)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(afterCompact == grown)
-    assert(IncrementalIvf.version(root) == 3)
 
-    // size-tiered trigger: under the cap returns the same root untouched;
-    // over it folds into a versioned sibling with identical results
-    assert(IncrementalIvf.compactIfNeeded(spark, root, maxSegments = 3) == root)
-    val auto = IncrementalIvf.compactIfNeeded(spark, root, maxSegments = 2)
-    assert(auto == s"$root-c3" && IncrementalIvf.version(auto) == 1)
-    val afterAuto = IncrementalIvf.topK(spark, auto, qv, nprobe = 3, k = 15)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(afterAuto == grown)
+    // size-tiered trigger: under the cap nothing folds; over it the tail
+    // folds IN THIS ROOT, scores unchanged
+    assert(IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments = 3).isEmpty)
+    assert(IncrementalIvf.fanIn(root) == 3)
+    IncrementalIvf.tailFoldIfNeeded(spark, root, maxSegments = 2)
+    assert(IncrementalIvf.fanIn(root) <= 2)
+    assert(top == grown)
 
-    // storage lifecycle: retiring the OLD root after the pointer swap
-    // reclaims it without touching the compacted root (fresh files)
-    assert(graft.index.SegmentStore.retire(root))
-    assert(IncrementalIvf.version(root) == 0) // resolves uninitialized
-    assert(!graft.index.SegmentStore.retire(root)) // idempotent
-    val afterRetire = IncrementalIvf.topK(spark, auto, qv, nprobe = 3, k = 15)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(afterRetire == grown) // compacted root fully intact
+    // the full fold leaves one segment, scores unchanged
+    IncrementalIvf.tailFold(spark, root, keep = 0)
+    assert(IncrementalIvf.fanIn(root) == 1)
+    assert(top == grown)
 
     // append-before-init is refused
     intercept[IllegalArgumentException] {
       IncrementalIvf.append(emb,
         Files.createTempDirectory("graft-ivf-empty").toString)
     }
-  }
-
-  test("segment store: durable root pointer survives restart; full compact-swap-retire cycle") {
-    import graft.index.{IncrementalBm25, SegmentStore}
-    import java.nio.file.Files
-    import spark.implicits._
-
-    // pointer protocol alone: committed swaps resolve latest, crash
-    // (uncommitted version dir) leaves the previous pointer visible
-    val ptr = Files.createTempDirectory("graft-ptr").toString + "/current"
-    assert(SegmentStore.getPointer(ptr).isEmpty)
-    SegmentStore.setPointer(ptr, "/roots/a")
-    SegmentStore.setPointer(ptr, "/roots/b")
-    assert(SegmentStore.getPointer(ptr).contains("/roots/b"))
-    assert(SegmentStore.readPointer(ptr, 1) == "/roots/a") // retire candidate
-    val (fs, orphan) = {
-      val p = new org.apache.hadoop.fs.Path(SegmentStore.versionDir(ptr, 3))
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
-    fs.mkdirs(orphan) // crashed swap: dir exists, no marker, no payload
-    assert(SegmentStore.getPointer(ptr).contains("/roots/b"))
-
-    // composed lifecycle: grow past maxSegments, compact, swap the
-    // durable pointer, retire the old root, serve from the pointer
-    val docs = Seq((1L, "spark shuffles data"), (2L, "spark joins tables"),
-      (3L, "vectors score queries")).toDF("doc_id", "text")
-    val more = Seq((4L, "spark scans parquet"), (5L, "joins spark spark"))
-      .toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-lc").toString + "/idx"
-    IncrementalBm25.init(docs, "doc_id", "text", root, numFiles = 1)
-    IncrementalBm25.append(more, "doc_id", "text", root, numFiles = 1)
-    val grown = IncrementalBm25.topK(spark, root, "doc_id", Seq("spark"), 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val lcPtr = root + ".current"
-    SegmentStore.setPointer(lcPtr, root)
-    val newRoot = IncrementalBm25.compactIfNeeded(spark, root, "doc_id",
-      maxSegments = 1)
-    assert(newRoot != root)
-    SegmentStore.setPointer(lcPtr, newRoot)
-    val prev = SegmentStore.readPointer(lcPtr, 1)
-    assert(prev == root)
-    assert(SegmentStore.retire(prev))
-    val served = IncrementalBm25.topK(spark,
-        SegmentStore.getPointer(lcPtr).get, "doc_id", Seq("spark"), 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(served == grown, s"served=$served grown=$grown")
   }
 
   test("incremental ivf: drift-triggered retrain rebalances and equals a fresh build") {
@@ -800,18 +742,17 @@ class IndexSpec extends SparkSpec {
     IncrementalBm25.delete(dels.toDF("doc_id"), "doc_id", root, tag = Some("d1"))
     assert(hits(root) == after)
 
-    // compact reclaims postings AND recomputes stats: scores now equal a
-    // FRESH index built over the survivors only (df/n_docs/avgdl caught
-    // up — the Lucene segment-merge moment)
-    val compacted = Files.createTempDirectory("graft-bm25-del-cp").toString + "/i"
-    IncrementalBm25.compact(spark, root, compacted, "doc_id")
+    // the full fold reclaims postings AND recomputes stats: scores now
+    // equal a FRESH index built over the survivors only (df/n_docs/avgdl
+    // caught up — the Lucene segment-merge moment)
+    IncrementalBm25.tailFold(spark, root, "doc_id", keep = 0)
     val fresh = Files.createTempDirectory("graft-bm25-del-fr").toString + "/i"
     IncrementalBm25.init(all.where(!col("doc_id").isin(dels: _*)),
       "doc_id", "text", fresh)
-    assert(hits(compacted) == hits(fresh))
-    // and compacted-without-deletes differs from the stale serving form
-    // on scores (df moved) while agreeing on the survivor id set
-    assert(hits(compacted).map(_._1).toSet == after.map(_._1).toSet)
+    assert(hits(root) == hits(fresh))
+    // and the folded form differs from the stale serving form on scores
+    // (df moved) while agreeing on the survivor id set
+    assert(hits(root).map(_._1).toSet == after.map(_._1).toSet)
   }
 
   test("incremental ivf delete: filtered read == rebuild without deleted (exact), compact reclaims") {
@@ -839,16 +780,18 @@ class IndexSpec extends SparkSpec {
       centroids, qv, 3, 10))
     assert(after == rebuilt && !after.exists(h => dels.contains(h._1)))
 
-    // compact physically reclaims, same answers, fresh ledger
-    val compacted = Files.createTempDirectory("graft-ivf-del-cp").toString + "/i"
-    IncrementalIvf.compact(spark, root, compacted)
-    assert(hits(IncrementalIvf.topK(spark, compacted, qv, 3, 10)) == after)
-    assert(IncrementalIvf.readAssigned(spark, compacted)
+    // the full fold physically reclaims, same answers, ledger absorbed
+    IncrementalIvf.tailFold(spark, root, keep = 0)
+    assert(hits(IncrementalIvf.topK(spark, root, qv, 3, 10)) == after)
+    assert(graft.index.SegmentStore.currentManifest(s"$root/commit").get
+      .tombRebase == 1)
+    assert(IncrementalIvf.readAssigned(spark, root)
       .where(col("vec_id").isin(dels: _*)).count() == 0)
   }
 
   test("incremental knn delete: mark-and-filter reads with rank holes, idempotent replay, compact reclaims + clears the ledger") {
     import graft.index.IncrementalKnn
+    import graft.search.Ann
     import spark.implicits._
     val emb = Tables.embeddings(spark, Sf0001)
     val centroids = emb.where(col("vec_id") < 10)
@@ -884,17 +827,17 @@ class IndexSpec extends SparkSpec {
     IncrementalKnn.delete(dels.toDF("vec_id"), root, tag = Some("d1"))
     assert(rows(IncrementalKnn.edges(spark, root, 5)) == after)
 
-    // compaction physically reclaims: same surviving (src,dst,score) set,
-    // ranks now DENSE per src (the Lucene-merge analogue), ledger cleared
-    val compacted = Files.createTempDirectory("graft-knn-del-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    val comp = rows(IncrementalKnn.edges(spark, compacted, 5))
-    assert(comp.map(e => (e._1, e._2, e._3)).toSet ==
-      after.map(e => (e._1, e._2, e._3)).toSet)
-    comp.groupBy(_._1).foreach { case (_, es) =>
-      assert(es.map(_._4).sorted == (1 to es.size).toSeq) }
-    assert(IncrementalKnn.vectorsAll(spark, compacted)
-      .count() == vecIds.size)
+    // repair + the reclaiming full fold physically reclaim: reads equal a
+    // rebuild over the survivors (ranks dense — the Lucene-merge
+    // analogue) and the ledger is absorbed (rebased, zero backlog)
+    IncrementalKnn.repair(spark, root, 3, 5, tag = Some("r1"))
+    IncrementalKnn.reclaimFold(spark, root, 5, tag = Some("f1"))
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == rows(Ann.knnGraph(
+      emb.where(!col("vec_id").isin(dels: _*)), centroids, 3, 5)))
+    val st = IncrementalKnn.stats(spark, root)
+    assert(st("tomb_rebase") == st("tombstone_ledger_version") &&
+      st("n_tombstoned_ids") == 0L, st.toString)
+    assert(IncrementalKnn.vectorsAll(spark, root).count() == vecIds.size)
   }
 
   test("incremental knn repair: post-delete holes refill to EXACTLY the rebuild-without-deleted graph, delta-cost") {
@@ -923,12 +866,11 @@ class IndexSpec extends SparkSpec {
       emb.where(!col("vec_id").isin(dels: _*)), centroids, 3, 5))
     assert(repaired == rebuilt && rebuilt.nonEmpty)
 
-    // idempotent replay; and compact folds the healed graph
+    // idempotent replay; and the reclaiming fold bakes the healed graph
     IncrementalKnn.repair(spark, root, 3, 5, tag = Some("r1"))
     assert(rows(IncrementalKnn.edges(spark, root, 5)) == repaired)
-    val compacted = Files.createTempDirectory("graft-knn-rep-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(rows(IncrementalKnn.edges(spark, compacted, 5)) == repaired)
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == repaired)
   }
 
   test("incremental ivf upsert: in-place update is exact immediately; delete-then-re-add revives the id") {
@@ -987,15 +929,14 @@ class IndexSpec extends SparkSpec {
     assert(hits(root, Seq("zzzuniquemarker")).map(_._1) == Seq(3L))
     assert(!hits(root, Seq("data", "query")).exists(_._1 == 3L))
 
-    // compaction recomputes the stats from survivors: scores equal a
+    // the full fold recomputes the stats from survivors: scores equal a
     // FRESH index over the current texts
-    val compacted = Files.createTempDirectory("graft-bm25-ups-cp").toString + "/i"
-    IncrementalBm25.compact(spark, root, compacted, "doc_id")
+    IncrementalBm25.tailFold(spark, root, "doc_id", keep = 0)
     val fresh = Files.createTempDirectory("graft-bm25-ups-fr").toString + "/i"
     IncrementalBm25.init(
       all.where(col("doc_id") =!= 3L).unionByName(updated), "doc_id", "text", fresh)
-    assert(hits(compacted, Seq("data", "query")) == hits(fresh, Seq("data", "query")))
-    assert(hits(compacted, Seq("zzzuniquemarker")).map(_._1) == Seq(3L))
+    assert(hits(root, Seq("data", "query")) == hits(fresh, Seq("data", "query")))
+    assert(hits(root, Seq("zzzuniquemarker")).map(_._1) == Seq(3L))
   }
 
   test("incremental knn upsert: same-id in-place update + repair == rebuild with current vectors; reads serve the new version") {
@@ -1037,11 +978,11 @@ class IndexSpec extends SparkSpec {
     IncrementalKnn.upsert(updated, root, 3, 5, tag = Some("u1"))
     assert(rows(IncrementalKnn.edges(spark, root, 5)) == served)
 
-    // compaction folds the current state; ledger cleared, rebuild-exact
-    val compacted = Files.createTempDirectory("graft-knn-ups-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(rows(IncrementalKnn.edges(spark, compacted, 5)) == served)
-    assert(IncrementalKnn.vectorsAll(spark, compacted).count() == emb.count())
+    // the reclaiming fold bakes the current state; ledger absorbed,
+    // rebuild-exact
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == served)
+    assert(IncrementalKnn.vectorsAll(spark, root).count() == emb.count())
   }
 
   test("incremental knn retrain: fresh kmeans centroids, rebuilt graph == knnGraph over live vectors") {
@@ -1123,10 +1064,9 @@ class IndexSpec extends SparkSpec {
     val rebuilt = rows(Ann.knnGraph(
       emb.where(!col("vec_id").isin(allDels: _*)), centroids, 3, 5))
     assert(healed == rebuilt && rebuilt.nonEmpty)
-    // and the compacted fold agrees
-    val compacted = Files.createTempDirectory("graft-knn-drd-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(rows(IncrementalKnn.edges(spark, compacted, 5)) == healed)
+    // and the reclaiming full fold agrees
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == healed)
   }
 
   test("incremental knn retrain under a PENDING upsert horizon == rebuild over current vectors (r10 VERDICT #7)") {
@@ -1199,11 +1139,13 @@ class IndexSpec extends SparkSpec {
     val rebuilt = rows(Ann.knnGraph(
       emb.where(!col("vec_id").isin(dels: _*)), centroids, 3, 5))
     assert(healed == rebuilt && rebuilt.nonEmpty)
-    // compaction writes the fold in the CURRENT layout — real vecs/
-    val compacted = Files.createTempDirectory("graft-knn-legacy-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$compacted/vecs/0")))
-    assert(rows(IncrementalKnn.edges(spark, compacted, 5)) == healed)
+    // the reclaiming fold writes its segment in the CURRENT layout — real
+    // vecs/
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    val Seq(folded) = graft.index.SegmentStore
+      .currentManifest(s"$root/commit").get.entries
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/vecs/${folded.dir}")))
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == healed)
   }
 
   test("incremental knn mutation-sequence property: random delete/upsert/append/repair/compact keeps the serving invariants") {
@@ -1213,8 +1155,9 @@ class IndexSpec extends SparkSpec {
     // Invariants after EVERY op: no dead endpoint served, one row per
     // (src, dst), per-src ranks positive and distinct. After repair:
     // served == whole rebuild over the current vectors (dense). After
-    // compact: the (src, dst, score) set is preserved exactly and ranks
-    // come out dense (the Lucene-merge re-rank).
+    // repair + the reclaiming full fold: the (src, dst, score) set is
+    // preserved exactly and ranks come out dense (the Lucene-merge
+    // re-rank).
     import graft.index.IncrementalKnn
     import graft.search.Ann
     import spark.implicits._
@@ -1231,9 +1174,9 @@ class IndexSpec extends SparkSpec {
       val rnd = new scala.util.Random(seed)
       val model = scala.collection.mutable.LinkedHashMap[Long, Seq[Float]]()
       emb0.collect().foreach(r => model(r.getLong(0)) = r.getSeq[Float](1))
-      var root = Files.createTempDirectory(s"graft-knn-prop$seed").toString + "/g"
+      val root = Files.createTempDirectory(s"graft-knn-prop$seed").toString + "/g"
       IncrementalKnn.init(emb0, centroids, root, 3, 5)
-      var tombstoned = false // live tombstones since the last compact
+      var tombstoned = false // live tombstones since the last full fold
       var opN = 0
 
       def modelDf = model.toSeq.toDF("vec_id", "embedding")
@@ -1293,27 +1236,23 @@ class IndexSpec extends SparkSpec {
               assert(served == rebuilt,
                 s"seed $seed op $opN: post-repair != rebuild")
             }
-          case _ => // heal-then-compact (the CDC loop's discipline: folding
+          case _ => // heal-then-fold (the CDC loop's discipline: folding
             // a HOLED graph would physically reclaim the dead-row evidence
-            // and bake the degraded top-k in — the first draft of this test
-            // compacted unhealed states and correctly caught exactly that
-            // documented degradation); after the fold: triple set preserved
-            // vs the healed read, ranks dense, ledger clear, rebuild-exact
+            // and bake the degraded top-k in — reclaimFold refuses exactly
+            // that); after the fold: triple set preserved vs the healed
+            // read, ranks dense, ledger absorbed, rebuild-exact
             IncrementalKnn.repair(spark, root, 3, 5, tag = Some(s"p$seed-$opN-r"))
             val before = rows(IncrementalKnn.edges(spark, root, 5))
-            val newRoot = Files
-              .createTempDirectory(s"graft-knn-propc$seed-$opN").toString + "/g"
-            IncrementalKnn.compact(spark, root, newRoot, 5)
-            val after = rows(IncrementalKnn.edges(spark, newRoot, 5))
+            IncrementalKnn.reclaimFold(spark, root, 5, tag = Some(s"p$seed-$opN-f"))
+            val after = rows(IncrementalKnn.edges(spark, root, 5))
             assert(after.map(e => (e._1, e._2, e._3)).toSet ==
               before.map(e => (e._1, e._2, e._3)).toSet,
-              s"seed $seed op $opN: compact changed the edge set")
+              s"seed $seed op $opN: full fold changed the edge set")
             after.groupBy(_._1).foreach { case (_, es) =>
               assert(es.map(_._4).sorted == (1 to es.size).toSeq,
-                s"seed $seed op $opN: compact ranks not dense") }
+                s"seed $seed op $opN: full fold ranks not dense") }
             assert(after == rows(Ann.knnGraph(modelDf, centroids, 3, 5)),
-              s"seed $seed op $opN: healed compact != rebuild")
-            root = newRoot
+              s"seed $seed op $opN: healed full fold != rebuild")
             tombstoned = false
         }
         checkAlways(rows(IncrementalKnn.edges(spark, root, 5)))
@@ -1348,12 +1287,10 @@ class IndexSpec extends SparkSpec {
     val grown = rows(IncrementalKnn.edges(spark, root, 5))
     assert(grown == rebuilt && rebuilt.nonEmpty)
 
-    // compaction folds to one segment, merged graph unchanged
-    val compacted = Files.createTempDirectory("graft-knn-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(IncrementalKnn.version(compacted) == 1)
-    assert(rows(IncrementalKnn.edges(spark, compacted, 5)) == grown)
-    assert(IncrementalKnn.version(root) == 3)
+    // the full fold leaves one segment, merged graph unchanged
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    assert(IncrementalKnn.fanIn(root) == 1 && IncrementalKnn.version(root) == 4)
+    assert(rows(IncrementalKnn.edges(spark, root, 5)) == grown)
 
     // append-before-init is refused
     intercept[IllegalArgumentException] {
@@ -1427,139 +1364,6 @@ class IndexSpec extends SparkSpec {
       spark, Sf0001, 0L, "n_chars",
       docs.select("n_chars").head().get(0).toString, 10)
     assert(route4 == "prefilter_ivf" && df4.columns.sameElements(Array("id", "score")))
-  }
-
-  // ------------------------------------------------------------------
-  // SegmentStore.recoverRoot crash windows — these branches run at the
-  // START of every streaming maintenance micro-batch (DeltaStream
-  // indexIngest/ivfIngest/knnIngest), so each window gets an explicit
-  // crash-injection case: the state a crash leaves behind is built by
-  // hand, then recoverRoot must finish (or sweep) the interrupted step
-  // and the recovered index must be value-identical to a clean run.
-  // ------------------------------------------------------------------
-
-  /** Small grown IncrementalKnn graph + its pointer base, ready for
-    * crash injection. Returns (root, ptr, expected edge rows). */
-  private def grownGraph(prefix: String): (String, String, Seq[(Long, Long, Double, Int)]) = {
-    import graft.index.IncrementalKnn
-    val emb = Tables.embeddings(spark, Sf0001).where(col("vec_id") < 90)
-    val centroids = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val root = Files.createTempDirectory(prefix).toString + "/g"
-    IncrementalKnn.init(emb.where(col("vec_id") % 2 === 0), centroids, root, 3, 5)
-    IncrementalKnn.append(emb.where(col("vec_id") % 2 === 1), root, 3, 5,
-      tag = Some("batch_1"))
-    val expected = IncrementalKnn.edges(spark, root, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    (root, s"$root.current", expected)
-  }
-
-  private def dirExists(p: String): Boolean = new java.io.File(p).exists
-
-  test("recoverRoot window 1: committed-but-unswapped compaction target is adopted on redelivery") {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    val (root, ptr, expected) = grownGraph("graft-rr1")
-    // crash injection: compaction committed (it carries the redelivered
-    // batch's tag) but the process died BEFORE the pointer swap
-    val target = s"$root-c${IncrementalKnn.version(root)}"
-    IncrementalKnn.compact(spark, root, target, 5, tag = Some("batch_1"))
-    assert(SegmentStore.getPointer(ptr).isEmpty) // the crash state
-
-    // redelivery of batch_1 starts with recoverRoot: it must finish the
-    // swap — pointer moved, data identical. The superseded root is NOT
-    // retired inline (r14 retention: a frame planned against it drains
-    // for one trigger) — the NEXT trigger's sweep reclaims it.
-    val resolved = SegmentStore.recoverRoot(ptr, root, "batch_1")(
-      IncrementalKnn.version, IncrementalKnn.committedHasTag)
-    assert(resolved == target)
-    assert(SegmentStore.getPointer(ptr).contains(target))
-    assert(dirExists(root),
-      "superseded root keeps its one-trigger reader grace after adopt")
-    // the caller's skip check now sees the tag on the CURRENT root, so
-    // the redelivered batch is a no-op — as if the crash never happened
-    assert(IncrementalKnn.committedHasTag(resolved, "batch_1"))
-    val recovered = IncrementalKnn.edges(spark, resolved, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    assert(recovered == expected && expected.nonEmpty)
-    // the next healthy trigger's sweep reclaims the husk
-    SegmentStore.recoverRoot(ptr, root, "batch_2")(
-      IncrementalKnn.version, IncrementalKnn.committedHasTag)
-    assert(!dirExists(root), "superseded root reclaimed by the next sweep")
-    assert(dirExists(target))
-  }
-
-  test("recoverRoot window 2: swapped-but-unretired predecessor is retired, live root untouched") {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    val (root, ptr, _) = grownGraph("graft-rr2")
-    val target = s"$root-c${IncrementalKnn.version(root)}"
-    IncrementalKnn.compact(spark, root, target, 5, tag = Some("batch_1"))
-    SegmentStore.setPointer(ptr, target)
-    // crash BEFORE retire(root): predecessor still on disk
-    assert(dirExists(root))
-    val expected = IncrementalKnn.edges(spark, target, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-
-    val resolved = SegmentStore.recoverRoot(ptr, root, "batch_2")(
-      IncrementalKnn.version, IncrementalKnn.committedHasTag)
-    assert(resolved == target)
-    assert(!dirExists(root), "unretired predecessor must be retired")
-    assert(dirExists(target), "live root must survive")
-    val after = IncrementalKnn.edges(spark, resolved, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    assert(after == expected && expected.nonEmpty)
-  }
-
-  test("recoverRoot healthy path: repeated batches never retire the live root") {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    val (root, ptr, _) = grownGraph("graft-rr3")
-    // one CLEAN compact-swap-retire cycle (what a healthy maintenance
-    // batch does when it crosses maxSegments)
-    val target = s"$root-c${IncrementalKnn.version(root)}"
-    IncrementalKnn.compact(spark, root, target, 5, tag = Some("batch_1"))
-    SegmentStore.setPointer(ptr, target)
-    SegmentStore.retire(root)
-    val expected = IncrementalKnn.edges(spark, target, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-
-    // every later healthy batch re-runs the pv>0 branch; it must never
-    // touch the live root (prev != cur guard), twice for idempotence
-    for (b <- 2 to 3) {
-      val resolved = SegmentStore.recoverRoot(ptr, root, s"batch_$b")(
-        IncrementalKnn.version, IncrementalKnn.committedHasTag)
-      assert(resolved == target)
-      assert(dirExists(target), s"live root retired on healthy batch $b")
-      assert(IncrementalKnn.version(target) == 1)
-    }
-    val after = IncrementalKnn.edges(spark, target, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    assert(after == expected && expected.nonEmpty)
-  }
-
-  test("recoverRoot window 3: uncommitted partial compaction target is swept") {
-    import graft.index.{IncrementalKnn, SegmentStore}
-    val (root, ptr, expected) = grownGraph("graft-rr4")
-    // crash DURING compact: the deterministic target directory exists
-    // with partial artifacts but NO committed version — unadoptable by
-    // construction, and (pre-sweep) never reclaimed either, because the
-    // caller's tag check skips the whole step on redelivery and the next
-    // compaction targets a higher version
-    val target = s"$root-c${IncrementalKnn.version(root)}"
-    val partial = new java.io.File(s"$target/centroids")
-    assert(partial.mkdirs())
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$target/centroids/part-00000.parquet"),
-      Array[Byte](0, 1, 2, 3))
-    assert(IncrementalKnn.version(target) == 0) // uncommitted — the crash state
-
-    val resolved = SegmentStore.recoverRoot(ptr, root, "batch_1")(
-      IncrementalKnn.version, IncrementalKnn.committedHasTag)
-    assert(resolved == root)
-    assert(!dirExists(target), "partial compaction target must be swept")
-    assert(dirExists(root) && IncrementalKnn.version(root) == 2,
-      "live root must be untouched")
-    val after = IncrementalKnn.edges(spark, root, 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    assert(after == expected && expected.nonEmpty)
   }
 
   test("IncrementalKnn.stats: clocks, tombstone backlog, and the stale-src health signal across a delete/repair cycle") {
@@ -1818,11 +1622,12 @@ class IndexSpec extends SparkSpec {
     IncrementalIvf.tailFold(spark, root, keep = 1, tag = Some("tf3"))
     assert(!junk.exists())
 
-    // the deep clean still composes: compact a manifest root into a fresh
-    // positional root, reads identical
-    val compacted = Files.createTempDirectory("graft-ivf-tf-cp").toString + "/idx"
-    IncrementalIvf.compact(spark, root, compacted)
-    assert(reads(compacted) == reads(root) && top(compacted) == top(root))
+    // the folded manifest root serves exactly a fresh positional root
+    // built over its surviving rows
+    val fresh = Files.createTempDirectory("graft-ivf-tf-fr").toString + "/idx"
+    IncrementalIvf.init(IncrementalIvf.readAssigned(spark, root)
+      .select(col("vec_id"), col("embedding")), centroids, fresh)
+    assert(reads(fresh) == reads(root) && top(fresh) == top(root))
   }
 
   test("SegmentStore.tieredFoldStart: similar-size runs fold together; a dominant base is left alone until the fan-in bound forces it") {
@@ -1936,12 +1741,10 @@ class IndexSpec extends SparkSpec {
       && !new java.io.File(s"$folded/edges/2").exists()
       && !new java.io.File(s"$folded/edges/3").exists())
 
-    // the deep clean composes: both compact to the same served graph
-    val cf = Files.createTempDirectory("graft-knn-tf-cf").toString + "/g"
-    val ct = Files.createTempDirectory("graft-knn-tf-ct").toString + "/g"
-    IncrementalKnn.compact(spark, folded, cf, 5)
-    IncrementalKnn.compact(spark, twin, ct, 5)
-    assert(rows(cf) == rows(ct) && rows(cf).nonEmpty)
+    // the deep clean composes: both reclaiming full folds serve the same
+    // graph
+    both(r => IncrementalKnn.reclaimFold(spark, r, 5, tag = Some("ktf_rf")))
+    assert(rows(folded) == rows(twin) && rows(folded).nonEmpty)
 
     // snapshot/restore of a MANIFEST root: the manifest payload is data
     // inside the commit version dir, so it copies before its marker and
@@ -2029,13 +1832,18 @@ class IndexSpec extends SparkSpec {
     assert(!top(root).exists(_._1 == victim))
 
     // FULL fold == the merge moment: stats recompute from survivors and
-    // the result equals a fresh-root compact of the same state
-    val compacted = Files.createTempDirectory("graft-bm25-tf-cp").toString + "/i"
-    IncrementalBm25.compact(spark, root, compacted, "doc_id")
+    // the result equals a fresh index built over the current documents
     IncrementalBm25.tailFold(spark, root, "doc_id", keep = 0, tag = Some("btf2"))
     assert(IncrementalBm25.fanIn(root) == 1)
-    assert(top(root) == top(compacted))
-    assert(stats(root) == stats(compacted))
+    val fresh = Files.createTempDirectory("graft-bm25-tf-fr").toString + "/i"
+    // (the demo deletes predate `extra`, whose ids they do not kill)
+    IncrementalBm25.init(all.select(col("doc_id"), col("text"))
+      .where(pmod(col("doc_id"), lit(7)) =!= 3)
+      .join(updated.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .unionByName(updated).unionByName(extra)
+      .where(col("doc_id") =!= victim), "doc_id", "text", fresh)
+    assert(top(root) == top(fresh))
+    assert(stats(root) == stats(fresh))
     val m = SegmentStore.currentManifest(s"$root/stats").get
     assert(m.tombRebase == SegmentStore.tombVersion(s"$root/tombs"))
     assert(SegmentStore.tombIds(spark, s"$root/tombs", m.tombRebase).isEmpty)
@@ -2161,7 +1969,7 @@ class IndexSpec extends SparkSpec {
     // (a) a fold that legitimately outlives staleMs is NOT breakable:
     // the heartbeat (staleMs/3) keeps the on-disk stamp fresh for the
     // whole run, so a second writer is still refused — before r14 the
-    // 30-min default made every O(corpus) reclaimFold/compact evictable
+    // 30-min default made every O(corpus) reclaimFold/full fold evictable
     // mid-run (r13 verdict #1)
     val entered = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
@@ -2576,10 +2384,10 @@ class IndexSpec extends SparkSpec {
     IncrementalKnn.reclaimFold(spark, folded, 5, tag = Some("krf_f2"))
     assert(rows(folded) == rows(twin) && IncrementalKnn.fanIn(folded) == 1)
 
-    // and the deep clean still composes
-    val cf = Files.createTempDirectory("graft-knn-rf-cf").toString + "/g"
-    IncrementalKnn.compact(spark, folded, cf, 5)
-    assert(rows(cf) == rows(folded))
+    // and one reclaiming fold of the never-folded twin lands on the same
+    // served graph
+    IncrementalKnn.reclaimFold(spark, twin, 5, tag = Some("krf_tw"))
+    assert(rows(twin) == rows(folded))
   }
 
   test("reclaimed root degraded window (a34 fixture): delete without repair serves the frozen top-k minus kills — holes visible, never promotion") {

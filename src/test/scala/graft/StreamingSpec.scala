@@ -225,7 +225,7 @@ class StreamingSpec extends SparkSpec {
     // and never fold, so segment fan-in (and the tombstone ledger) grow
     // without bound
     implicit val sqlCtx = spark.sqlContext
-    import graft.index.{IncrementalBm25, SegmentStore}
+    import graft.index.IncrementalBm25
     import spark.implicits._
     val all = graft.tables.Tables.documents(spark, Sf0001)
       .select(col("doc_id"), col("text"))
@@ -242,19 +242,44 @@ class StreamingSpec extends SparkSpec {
     try {
       input.addData(seed.toSeq); q.processAllAvailable()
       // three UPDATE-ONLY triggers: each appends one upsert segment; the
-      // third crosses maxSegments=2 and must compact + swap the pointer
+      // second and third cross maxSegments=2 and must fold in place
       input.addData(("U", 3L, "zzucompact one")); q.processAllAvailable()
       input.addData(("U", 5L, "zzucompact two")); q.processAllAvailable()
       input.addData(("U", 7L, "zzucompact three")); q.processAllAvailable()
     } finally q.stop()
-    val cur = SegmentStore.getPointer(s"$root.current").getOrElse(root)
-    assert(cur != root, "pure-U triggers never swapped the pointer — " +
-      "compaction still gated on inserts")
-    assert(IncrementalBm25.version(cur) <= 2,
-      s"fold never ran: ${IncrementalBm25.version(cur)} segments")
-    val hits = IncrementalBm25.topK(spark, cur, "doc_id",
+    assert(IncrementalBm25.version(root) > 4, "pure-U triggers never " +
+      "folded — the fold is still gated on inserts")
+    assert(IncrementalBm25.fanIn(root) <= 2,
+      s"fold never ran: ${IncrementalBm25.fanIn(root)} segments")
+    val hits = IncrementalBm25.topK(spark, root, "doc_id",
       Seq("zzucompact"), 10).collect().map(_.getLong(0)).toSet
     assert(hits == Set(3L, 5L, 7L))
+  }
+
+  test("maintenance streams refuse maxSegments < 2 before any trigger (the fold after a committed batch could never succeed)") {
+    // the trigger's fold keeps the first segment and runs AFTER the
+    // batch's rows commit: with maxSegments = 1 every trigger would commit
+    // and then fail its fold, and every restart would skip the committed
+    // half and fail again — a stream that never progresses
+    implicit val sqlCtx = spark.sqlContext
+    import graft.index.IncrementalBm25
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bmcdc-ms1").toString + "/i"
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-bmcdc-ms1-ck").toString
+    val input = MemoryStream[(String, Long, String)]
+    val e = intercept[IllegalArgumentException] {
+      DeltaStream.indexCdcIngest(input.toDF().toDF("op", "doc_id", "text"),
+        root, ckpt, maxSegments = 1)
+    }
+    assert(e.getMessage.contains("maxSegments"), e.getMessage)
+    assert(IncrementalBm25.version(root) == 0)
+    // the removed compact-and-swap mode is refused by name, too
+    val e2 = intercept[IllegalArgumentException] {
+      DeltaStream.textGraphCdcIngest(input.toDF().toDF("op", "doc_id", "text"),
+        Sf0001, root, ckpt, 3, 5, tailFoldCompaction = false)
+    }
+    assert(e2.getMessage.contains("compact-and-swap"), e2.getMessage)
   }
 
   test("textGraphCdcIngest convergence property: random interleaved I/U/D changelog == fresh build over the net document set (r10 VERDICT #6)") {
@@ -402,7 +427,7 @@ class StreamingSpec extends SparkSpec {
 
     // the root folded in place: manifest committed, pointer never moved,
     // fan-in bounded by the trigger
-    assert(SegmentStore.getPointer(s"$root.current").isEmpty)
+    assert(!new java.io.File(s"$root.current").exists())
     assert(SegmentStore.currentManifest(s"$root/commit").nonEmpty)
     assert(IncrementalKnn.fanIn(root) <= 3,
       s"fan-in ${IncrementalKnn.fanIn(root)} not bounded")
@@ -419,9 +444,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("indexCdcIngest convergence property: random interleaved I/U/D changelog, then compact == fresh BM25 build over the net document set") {
-    // the BM25 member of the family sweep: pre-compaction stats are
-    // stale by design (Lucene deleted-doc semantics), so the family's
-    // convergence statement is compact(root) == init(net docs) — the
+    // the BM25 member of the family sweep: pre-fold stats are stale by
+    // design (Lucene deleted-doc semantics), so the family's convergence
+    // statement is full-fold(root) == init(net docs) — the
     // same contract the example-based upsert test pins, swept over a
     // seeded random changelog with multi-op keys inside triggers.
     implicit val sqlCtx = spark.sqlContext
@@ -474,16 +499,14 @@ class StreamingSpec extends SparkSpec {
           q.processAllAvailable()
           // fold in the random op alphabet (r12 VERDICT #5) — partial
           // folds preserve the family's stale-stats interim by contract,
-          // so the compact==fresh convergence statement is unchanged
+          // so the full-fold==fresh convergence statement is unchanged
           if (rnd.nextBoolean())
             IncrementalBm25.tailFold(spark, root, "doc_id", keep = 1,
               tag = Some(s"prop_fold_${seedVal}_$seq"))
         }
       } finally q.stop()
 
-      val compacted = java.nio.file.Files
-        .createTempDirectory(s"graft-bmprop-cp$seedVal").toString + "/i"
-      IncrementalBm25.compact(spark, root, compacted, "doc_id")
+      IncrementalBm25.tailFold(spark, root, "doc_id", keep = 0)
       val fresh = java.nio.file.Files
         .createTempDirectory(s"graft-bmprop-fr$seedVal").toString + "/i"
       IncrementalBm25.init(model.toSeq.toDF("doc_id", "text"),
@@ -493,10 +516,10 @@ class StreamingSpec extends SparkSpec {
         .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
       for (terms <- Seq(Seq("data", "query"), Seq("merge", "walk"),
           Seq("stream"))) {
-        val (c, f) = (hits(compacted, terms), hits(fresh, terms))
+        val (c, f) = (hits(root, terms), hits(fresh, terms))
         assert(c == f, s"seed $seedVal terms $terms: ${c.size} vs ${f.size}")
       }
-      assert(hits(compacted, Seq("data", "query")).nonEmpty)
+      assert(hits(root, Seq("data", "query")).nonEmpty)
     }
   }
 
@@ -525,7 +548,7 @@ class StreamingSpec extends SparkSpec {
     val q = DeltaStream.indexCdcIngest(
       input.toDF().toDF("op", "doc_id", "text"), root, ckpt,
       maxSegments = 64, // fan-in alone would never trigger a fold here
-      tailFoldCompaction = true, driftFoldShare = 0.25)
+      driftFoldShare = 0.25)
     try {
       input.addData(delIds.toSeq.map(id => ("D", id, "")))
       q.processAllAvailable()
@@ -579,8 +602,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(String, Long, String, Long)]
     val q = DeltaStream.indexCdcIngest(
       input.toDF().toDF("op", "doc_id", "text", "seq"),
-      root, ckpt, maxSegments = 2, seqCol = Some("seq"),
-      tailFoldCompaction = true)
+      root, ckpt, maxSegments = 2, seqCol = Some("seq"))
     try {
       var seq = 0L
       for (_ <- 0 until 3) {
@@ -608,7 +630,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
 
     // folded in place throughout: pointer never set, fan-in bounded
-    assert(SegmentStore.getPointer(s"$root.current").isEmpty)
+    assert(!new java.io.File(s"$root.current").exists())
     assert(SegmentStore.currentManifest(s"$root/stats").nonEmpty)
     assert(IncrementalBm25.fanIn(root) <= 3,
       s"fan-in ${IncrementalBm25.fanIn(root)} not bounded")
@@ -739,8 +761,7 @@ class StreamingSpec extends SparkSpec {
       input.toDF().toDF("op", "vec_id", "embedding", "seq")
         .select(col("op"), col("vec_id"),
           col("embedding").cast("array<float>").as("embedding"), col("seq")),
-      root, ckpt, maxSegments = 2, seqCol = Some("seq"),
-      tailFoldCompaction = true)
+      root, ckpt, maxSegments = 2, seqCol = Some("seq"))
     try {
       var seq = 0L
       for (_ <- 0 until 4) {
@@ -769,7 +790,7 @@ class StreamingSpec extends SparkSpec {
 
     // the root folded in place: a manifest is committed, the pointer
     // never moved, and read fan-in is bounded by the trigger
-    assert(SegmentStore.getPointer(s"$root.current").isEmpty)
+    assert(!new java.io.File(s"$root.current").exists())
     assert(SegmentStore.currentManifest(s"$root/commit").nonEmpty)
     assert(IncrementalIvf.fanIn(root) <= 3,
       s"fan-in ${IncrementalIvf.fanIn(root)} not bounded")
@@ -1129,17 +1150,16 @@ class StreamingSpec extends SparkSpec {
     val lastTag = s"batch_${vBefore - 1}"
     assert(graft.index.IncrementalBm25.committedHasTag(root, lastTag))
 
-    // compaction folds the tail into one segment, scores unchanged
-    val compacted = java.nio.file.Files.createTempDirectory("graft-inc-cp").toString + "/idx"
-    graft.index.IncrementalBm25.compact(spark, root, compacted, "doc_id")
-    val afterCompact = graft.index.IncrementalBm25
-      .topK(spark, compacted, "doc_id", terms, 20)
+    // the full fold leaves one segment, scores unchanged
+    graft.index.IncrementalBm25.tailFold(spark, root, "doc_id", keep = 0)
+    assert(graft.index.IncrementalBm25.fanIn(root) == 1)
+    val afterFold = graft.index.IncrementalBm25
+      .topK(spark, root, "doc_id", terms, 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(afterCompact == rebuilt)
-    assert(graft.index.IncrementalBm25.version(root) == vBefore) // old root untouched
+    assert(afterFold == rebuilt)
   }
 
-  test("indexIngest with maxSegments: auto-compaction swaps the pointer, retires the old root, serves identically") {
+  test("indexIngest with maxSegments: the root folds in place, fan-in stays bounded, serves identically") {
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.tables.Tables.documents(spark, Sf0001)
       .select("doc_id", "text").collect()
@@ -1153,12 +1173,12 @@ class StreamingSpec extends SparkSpec {
       docs.grouped(100).foreach { g => input.addData(g.toSeq); q.processAllAvailable() }
     } finally q.stop()
 
-    // ≥5 batches over maxSegments=2 ⇒ compaction fired at least once:
-    // the durable pointer moved off the initial root, which was retired
-    val cur = graft.index.SegmentStore.getPointer(s"$root.current")
-    assert(cur.nonEmpty && cur.get != root, s"pointer=$cur")
-    assert(graft.index.IncrementalBm25.version(root) == 0) // retired
-    assert(graft.index.IncrementalBm25.version(cur.get) <= 3) // bounded segments
+    // ≥5 batches over maxSegments=2 ⇒ the fold fired: the root path is
+    // the only tree (no sibling root, no `.current` pointer) and its
+    // fan-in is bounded
+    assert(new java.io.File(root).getParentFile.list().toSet == Set("idx"))
+    assert(!new java.io.File(s"$root.current").exists())
+    assert(graft.index.IncrementalBm25.fanIn(root) <= 2)
 
     // the maintained index serves hash-identical bm25 to a full rebuild
     val full = java.nio.file.Files.createTempDirectory("graft-lc-full").toString
@@ -1166,31 +1186,17 @@ class StreamingSpec extends SparkSpec {
       graft.tables.Tables.documents(spark, Sf0001), "doc_id", "text", full)
     val terms = Seq("spark", "join", "filter")
     val streamed = graft.index.IncrementalBm25
-      .topK(spark, cur.get, "doc_id", terms, 20)
+      .topK(spark, root, "doc_id", terms, 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val rebuilt = graft.index.Bm25Index.topK(spark, full, "doc_id", terms, 20)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(streamed == rebuilt && rebuilt.nonEmpty)
 
-    // the compacting batch's idempotence tag rode into the new root:
-    // redelivery of the one uncommitted batch is a no-op, not a dup
+    // every batch's idempotence tag stays on the one root: redelivery
+    // of the one uncommitted batch is a no-op, not a dup
     val nBatches = (docs.length + 99) / 100
-    assert((0 until nBatches).exists(b =>
-      graft.index.IncrementalBm25.committedHasTag(cur.get, s"batch_$b")))
-
-    // snapshotCurrent resolves the pointer before copying: the ORIGINAL
-    // path is a retired husk after compaction, and a plain snapshot of
-    // it would back up the wrong tree (it has no committed version at
-    // all here — snapshot(root) would even refuse); the managed form
-    // backs up the live sibling and the copy serves identically
-    val snap = java.nio.file.Files
-      .createTempDirectory("graft-lc-snap").toString + "/backup"
-    val resolved = graft.index.SegmentStore.snapshotCurrent(root, snap)
-    assert(resolved == cur.get && resolved != root, resolved)
-    val restoredHits = graft.index.IncrementalBm25
-      .topK(spark, snap, "doc_id", terms, 20)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(restoredHits == streamed)
+    assert((0 until nBatches).forall(b =>
+      graft.index.IncrementalBm25.committedHasTag(root, s"batch_$b")))
   }
 
   test("indexIngest defers its trigger while an admin snapshot quiesces the root: LeaseHeldException retried in-loop, stream survives") {
@@ -1260,42 +1266,6 @@ class StreamingSpec extends SparkSpec {
       holder.join()
       assert(IncrementalBm25.version(root) == 2,
         "the trigger must defer past the old 5 s budget and still commit")
-    } finally q.stop()
-  }
-
-  test("pointer-swap retention: a frame planned against the pre-swap root collects after the swap trigger; the husk is reclaimed by the trigger after that") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.index.{IncrementalBm25, SegmentStore}
-    val docs = graft.tables.Tables.documents(spark, Sf0001)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val root = java.nio.file.Files.createTempDirectory("graft-ret").toString + "/idx"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ret-ck").toString
-    val input = MemoryStream[(Long, String)]
-    val q = DeltaStream.indexIngest(input.toDF().toDF("doc_id", "text"),
-      root, ckpt, maxSegments = 2)
-    try {
-      // two triggers: v2, still below the compaction threshold
-      input.addData(docs.take(100).toSeq); q.processAllAvailable()
-      input.addData(docs.slice(100, 200).toSeq); q.processAllAvailable()
-      assert(SegmentStore.getPointer(s"$root.current").isEmpty)
-      // a serving frame planned against the live (initial) root NOW —
-      // the reader a pointer-resolving tier would have in flight
-      val frame = IncrementalBm25.topK(spark, root, "doc_id",
-        Seq("spark", "join", "filter"), 10)
-      // the next trigger crosses maxSegments: compact + pointer swap.
-      // r13's inline retire would delete the frame's files right here.
-      input.addData(docs.slice(200, 300).toSeq); q.processAllAvailable()
-      val cur = SegmentStore.getPointer(s"$root.current")
-      assert(cur.nonEmpty && cur.get != root, s"pointer=$cur")
-      assert(IncrementalBm25.version(root) > 0,
-        "superseded root must survive its swap trigger (reader grace)")
-      assert(frame.collect().nonEmpty,
-        "pre-swap frame must collect after the swap")
-      // the NEXT trigger's recoverRoot sweep reclaims the husk
-      input.addData(docs.slice(300, 320).toSeq); q.processAllAvailable()
-      assert(IncrementalBm25.version(root) == 0,
-        "husk must be reclaimed by the trigger after the swap")
     } finally q.stop()
   }
 
@@ -1369,9 +1339,9 @@ class StreamingSpec extends SparkSpec {
       IncrementalKnn.committedHasTag(root, s"batch_$b")))
   }
 
-  test("knnIngest with maxSegments: pointer swap + retire mid-stream, graph stays rebuild-exact") {
+  test("knnIngest with maxSegments: the graph root folds in place mid-stream, graph stays rebuild-exact") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.index.{IncrementalKnn, SegmentStore}
+    import graft.index.IncrementalKnn
     val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
     val centroids = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1390,16 +1360,16 @@ class StreamingSpec extends SparkSpec {
       rest.grouped(60).foreach { g => input.addData(g.toSeq); q.processAllAvailable() }
     } finally q.stop()
 
-    // compaction fired: pointer moved, initial root retired, fan-in bounded
-    val cur = SegmentStore.getPointer(s"$root.current")
-    assert(cur.nonEmpty && cur.get != root, s"pointer=$cur")
-    assert(IncrementalKnn.version(root) == 0)
-    assert(IncrementalKnn.version(cur.get) <= 3)
+    // the fold fired in place: no sibling root, no `.current` pointer,
+    // fan-in bounded
+    assert(new java.io.File(root).getParentFile.list().toSet == Set("g"))
+    assert(!new java.io.File(s"$root.current").exists())
+    assert(IncrementalKnn.fanIn(root) <= 2)
 
     // the maintained graph is hash-exact to a whole-corpus rebuild
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    val maintained = rows(IncrementalKnn.edges(spark, cur.get, 5))
+    val maintained = rows(IncrementalKnn.edges(spark, root, 5))
     val rebuilt = rows(graft.search.Ann.knnGraph(emb, centroids, 3, 5))
     assert(maintained == rebuilt && rebuilt.nonEmpty)
   }
@@ -1591,17 +1561,15 @@ class StreamingSpec extends SparkSpec {
       // pushed into EVERY committed segment scan, not just the first
       val nScans = "PushedFilters: \\[In\\(src".r
         .findAllIn(hopPlan).length
-      assert(nScans >= IncrementalKnn.version(graphRoot),
-        s"$label: $nScans pushed scans < ${IncrementalKnn.version(graphRoot)} segments")
+      assert(nScans >= IncrementalKnn.fanIn(graphRoot),
+        s"$label: $nScans pushed scans < ${IncrementalKnn.fanIn(graphRoot)} segments")
     }
     assertSeekContract(root, "grown")
 
-    // compact and re-assert: the fold must re-establish the sorted layout
-    val compacted = java.nio.file.Files
-      .createTempDirectory("graft-knn-seek-cp").toString + "/g"
-    IncrementalKnn.compact(spark, root, compacted, 5)
-    assert(IncrementalKnn.version(compacted) == 1)
-    assertSeekContract(compacted, "compacted")
+    // full-fold and re-assert: the fold must re-establish the sorted layout
+    IncrementalKnn.reclaimFold(spark, root, 5)
+    assert(IncrementalKnn.fanIn(root) == 1)
+    assertSeekContract(root, "full-folded")
   }
 
   test("streaming vector ingest keeps the IVF index fresh via foreachBatch appendAssign") {
