@@ -55,7 +55,7 @@ object Bench {
     }
 
     // Warm path: persist base tables once. Spark's CacheManager matches by
-    // canonicalized plan, so every query's fresh `read.parquet` of the
+    // canonicalized plan, so every query's fresh `Tables` read of the
     // same path hits this cache.
     Tables.names.foreach { n =>
       Tables(spark, sfDir, n).persist(StorageLevel.MEMORY_AND_DISK).count()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 import graft.ingest.Store
 import graft.search.Bm25
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Prebuilt BM25 inverted index — the build/query split for sparse search.
   *
@@ -89,7 +89,7 @@ object Bm25Index {
     * with the same operations) — hash-exact same results. */
   def topK(spark: SparkSession, indexDir: String, idCol: String,
            terms: Seq[String], k: Int): DataFrame =
-    spark.read.parquet(s"$indexDir/postings")
+    ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(terms: _*)) // pushed: In(term, ...) + bloom
       .groupBy(col(idCol))
       .agg(round(sum(col("w")), 6).as("score"))
@@ -111,7 +111,7 @@ object Bm25Index {
   def topKAfter(spark: SparkSession, indexDir: String, idCol: String,
                 terms: Seq[String], k: Int,
                 afterScore: Double, afterId: Long): DataFrame =
-    spark.read.parquet(s"$indexDir/postings")
+    ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(terms: _*)) // pushed: In(term, ...) + bloom
       .groupBy(col(idCol))
       .agg(round(sum(col("w")), 6).as("score"))
@@ -142,13 +142,13 @@ object Bm25Index {
     val terms = queries.select(col(termCol)).distinct()
       .collect().map(_.getString(0)).toSeq
     if (terms.isEmpty)
-      return spark.read.parquet(s"$indexDir/postings").where(lit(false))
+      return ServedParquet.read(spark, s"$indexDir/postings").where(lit(false))
         .select(col(idCol)).crossJoin(queries.select(col(qidCol)).limit(0))
         .select(col(qidCol), col(idCol), lit(0.0).as("score"))
     val rank = org.apache.spark.sql.expressions.Window
       .partitionBy(col(qidCol))
       .orderBy(col("score").desc, col(idCol).asc)
-    spark.read.parquet(s"$indexDir/postings")
+    ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(terms: _*)) // pushed: In(term, ...) + bloom
       // distinct: a duplicated (qid, term) input row must not make the
       // join fan out and double-count that term's weight in sum(w)
@@ -200,11 +200,11 @@ object Bm25Index {
     * exactly [[topK]]'s. */
   def topKMaxScore(spark: SparkSession, indexDir: String, idCol: String,
                    terms: Seq[String], k: Int): DataFrame = {
-    val posts = spark.read.parquet(s"$indexDir/postings")
+    val posts = ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(terms: _*)) // pushed: In(term, ...) + bloom
     // per-term upper bounds: a point read of the termstats artifact
     // (query-literal-sized, like the query terms themselves)
-    val ubs = spark.read.parquet(s"$indexDir/termstats")
+    val ubs = ServedParquet.read(spark, s"$indexDir/termstats")
       .where(col("term").isin(terms: _*))
       .select(col("term"), col("maxw"))
       .collect().map(r => (r.getString(0), r.getDouble(1)))
@@ -273,13 +273,13 @@ object Bm25Index {
     }
     val allTerms = perQid.flatMap(_._2).distinct
     if (allTerms.isEmpty)
-      return spark.read.parquet(s"$indexDir/postings").where(lit(false))
+      return ServedParquet.read(spark, s"$indexDir/postings").where(lit(false))
         .select(col(idCol)).crossJoin(Seq.empty[Long].toDF("qid").limit(0))
         .select(col("qid"), col(idCol), lit(0.0).as("score"))
-    val posts = spark.read.parquet(s"$indexDir/postings")
+    val posts = ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(allTerms: _*)) // pushed: In(term, ...) + bloom
     // collect 1: per-term upper bounds for the whole batch
-    val ub = spark.read.parquet(s"$indexDir/termstats")
+    val ub = ServedParquet.read(spark, s"$indexDir/termstats")
       .where(col("term").isin(allTerms: _*))
       .select(col("term"), col("maxw"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -363,7 +363,7 @@ object Bm25Index {
       if (fbTerms.isEmpty) Seq.empty[String]
       else {
         import spark.implicits._
-        spark.read.parquet(s"$indexDir/postings")
+        ServedParquet.read(spark, s"$indexDir/postings")
           .where(col("term").isin(fbTerms: _*)) // pushed In(term) + bloom
           .join(broadcast(fbIds.toDF(idCol)), Seq(idCol))
           .groupBy(col("term"))
@@ -395,7 +395,7 @@ object Bm25Index {
                  idCol: String, textCol: String, phrase: Seq[String],
                  k: Int): DataFrame = {
     val terms = phrase.distinct
-    val cand = spark.read.parquet(s"$indexDir/postings")
+    val cand = ServedParquet.read(spark, s"$indexDir/postings")
       .where(col("term").isin(terms: _*)) // pushed: In(term, ...) + bloom
       .groupBy(col(idCol))
       // postings are distinct on (term, id): count(1) counts matched terms

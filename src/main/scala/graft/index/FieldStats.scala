@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Per-field value-count statistics, persisted at index-build time — the
   * catalog-stats artifact the filtered-ANN selectivity router reads
@@ -56,7 +56,7 @@ object FieldStats {
   def probe(spark: SparkSession, dataDir: String,
             field: String, value: String): Option[DataFrame] =
     if (!ProfiledFields.contains(field)) None
-    else Some(spark.read.parquet(s"${ensure(spark, dataDir)}/stats")
+    else Some(ServedParquet.read(spark, s"${ensure(spark, dataDir)}/stats")
       .where((col("field") === field && col("value") === value) ||
         col("field") === TotalField)
       .select(col("field"), col("cnt")))

@@ -121,12 +121,14 @@ object IndexCatalog {
 
   /** Drop the memo (tests that rewrite a fixture dir in place). Also
     * clears driver-side caches derived from this index (the TF-IDF idf
-    * table) — a rebuilt index must never be queried with stale cached
-    * corpus statistics. */
+    * table, the memoized parquet schemas of its files) — a rebuilt index
+    * must never be queried with stale cached corpus statistics or read
+    * with its old column set. */
   def invalidate(dataDir: String, name: String): Unit = {
     val p = Paths.get(path(dataDir, name))
     built.remove(p.toString)
     TfIdfIndex.invalidateIdfCacheUnder(p.toString)
+    graft.tables.ServedParquet.invalidateUnder(p.toString)
     // RAM-resident serving frames derived from this artifact must not
     // outlive the rebuild (their clock is a constant for build-once
     // artifacts — invalidation IS their only staleness signal)

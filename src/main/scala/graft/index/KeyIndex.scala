@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Store
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Exact-match key index: the documents table rewritten with ingest-time
   * NORMALIZED lookup columns, range-sorted by the primary key and with
@@ -44,5 +44,5 @@ object KeyIndex {
 
   /** The indexed documents table (builds on first use). */
   def read(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.parquet(ensure(spark, dataDir))
+    ServedParquet.read(spark, ensure(spark, dataDir))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.search.Ann
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Persisted corpus kNN edge list — the build/query split applied to the
   * a18 graph (reference analogue: Qdrant builds its HNSW neighbor lists
@@ -79,12 +79,12 @@ object KnnGraphIndex {
 
   def edges(spark: SparkSession, dataDir: String,
             nprobe: Int = 3, k: Int = 5): DataFrame =
-    spark.read.parquet(s"${ensureDir(spark, dataDir, nprobe, k)}/edges")
+    ServedParquet.read(spark, s"${ensureDir(spark, dataDir, nprobe, k)}/edges")
 
   /** The prebuilt coarse entry layer (vec_id % CoarseMod == 0 subset of
     * the embeddings table) — 1/CoarseMod of the corpus as I/O for every
     * walk's entry selection ([[Ann.hierEntriesFrom]] scaladoc). */
   def coarse(spark: SparkSession, dataDir: String,
              nprobe: Int = 3, k: Int = 5): DataFrame =
-    spark.read.parquet(s"${ensureDir(spark, dataDir, nprobe, k)}/coarse")
+    ServedParquet.read(spark, s"${ensureDir(spark, dataDir, nprobe, k)}/coarse")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.search.Ann
+import graft.tables.ServedParquet
 
 /** kNN graph over the engine's TEXT embedding space — the artifact behind
   * `mode=graph` on `/api/query`. The reference serves every text query
@@ -112,15 +113,15 @@ object TfIdfGraphIndex {
 
   /** Dense tfidf doc vectors (vec_id, embedding). */
   def vectors(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.parquet(s"${ensureDir(spark, dataDir)}/vectors")
+    ServedParquet.read(spark, s"${ensureDir(spark, dataDir)}/vectors")
 
   /** The kNN edge artifact over those vectors (src, dst, score, rank). */
   def edges(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.parquet(s"${ensureDir(spark, dataDir)}/edges")
+    ServedParquet.read(spark, s"${ensureDir(spark, dataDir)}/edges")
 
   /** The prebuilt coarse entry layer (vec_id % CoarseMod == 0 subset). */
   def coarse(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.parquet(s"${ensureDir(spark, dataDir)}/coarse")
+    ServedParquet.read(spark, s"${ensureDir(spark, dataDir)}/coarse")
 
   /** The query string embedded into the graph's space, as a 1-row (qvec)
     * frame — dense form of [[TfIdfIndex.queryWeights]] (driver-side: md5

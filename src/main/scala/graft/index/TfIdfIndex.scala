@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Store
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Prebuilt TF-IDF embedding index — build/query split for the dense-ish
   * text-search path (reference V1/V2: passages are embedded once at
@@ -63,7 +63,7 @@ object TfIdfIndex {
     idfCache.keySet.removeIf(_.startsWith(root))
   private def idfOf(spark: SparkSession, indexDir: String): Map[Int, Double] =
     idfCache.computeIfAbsent(indexDir, _ =>
-      spark.read.parquet(s"$indexDir/idf").collect()
+      ServedParquet.read(spark, s"$indexDir/idf").collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap)
 
   /** The query embedded driver-side: bucket -> L2-normalized tf·idf.
@@ -88,7 +88,7 @@ object TfIdfIndex {
   def searchText(spark: SparkSession, indexDir: String, idCol: String,
                  query: String, k: Int, dim: Int = Dim): DataFrame = {
     val qw = queryWeights(spark, indexDir, query, dim)
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
+    val vectors = ServedParquet.read(spark, s"$indexDir/vectors")
     if (qw.isEmpty) // no query token appears in the corpus -> empty result
       return vectors.where(lit(false))
         .groupBy(col(idCol)).agg(round(sum(col("w")), 6).as("score"))
@@ -111,7 +111,7 @@ object TfIdfIndex {
                       afterScore: Double, afterId: Long,
                       dim: Int = Dim): DataFrame = {
     val qw = queryWeights(spark, indexDir, query, dim)
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
+    val vectors = ServedParquet.read(spark, s"$indexDir/vectors")
     if (qw.isEmpty)
       return vectors.where(lit(false))
         .groupBy(col(idCol)).agg(round(sum(col("w")), 6).as("score"))
@@ -142,7 +142,7 @@ object TfIdfIndex {
       queryWeights(spark, indexDir, q, dim)
         .toSeq.map { case (b, w) => (qid, b, w) }
     }
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
+    val vectors = ServedParquet.read(spark, s"$indexDir/vectors")
     if (qw.isEmpty) // no query token appears in the corpus -> empty result
       return vectors.where(lit(false))
         .select(lit(0L).as("qid"), col(idCol), lit(0.0).as("score"))

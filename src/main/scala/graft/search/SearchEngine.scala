@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Query façade mirroring the reference's API surface (§2.11 Q1–Q9):
   * dense k-NN, BM25, hybrid RRF, exact match with field precedence,
@@ -148,7 +148,8 @@ object SearchEngine {
     val (assigned, centroids) = index.getOrElse {
       val (assignedPath, centroidsPath) =
         graft.index.IvfIndex.ensureTrained(spark, dir, k = 16)
-      (spark.read.parquet(assignedPath), spark.read.parquet(centroidsPath))
+      (ServedParquet.read(spark, assignedPath),
+        ServedParquet.read(spark, centroidsPath))
     }
     // query vectors fetched through the driver-side LRU (the reference's
     // own query-embed cache pattern) — joining the corpus table just to
@@ -563,10 +564,10 @@ object SearchEngine {
       .select(col("doc_id").as("vec_id"))
     if (pass <= crossover) {
       val info = graft.index.IvfIndex.ensure(spark, dir)
-      val assigned = spark.read.parquet(info.assignedPath)
+      val assigned = ServedParquet.read(spark, info.assignedPath)
         .join(allowed, Seq("vec_id"))
       ("prefilter_ivf", Ann.ivfTopKAssigned(assigned,
-        spark.read.parquet(info.centroidsPath), qv, 3, k))
+        ServedParquet.read(spark, info.centroidsPath), qv, 3, k))
     } else {
       // seek form of the walk (graphTopKSeek ≡ graphTopK, IndexSpec-pinned):
       // per-hop point lookups against the _srt artifact instead of the

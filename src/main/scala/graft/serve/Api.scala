@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 import graft.index.{Bm25Index, TfIdfIndex}
 import graft.search.{Fusion, SearchEngine, Stats}
-import graft.tables.Tables
+import graft.tables.{ServedParquet, Tables}
 
 /** Serving façade: the reference's HTTP surface (Q1–Q13;
   * `app/main.py:50-160`, `app/api/endpoints/search.py:46-545`,
@@ -212,11 +212,13 @@ object Api {
 
     case "/api/search/cache" =>
       // DELETE /api/search/cache (search.py:409-433): clear all embedding
-      // caches. Here that is the driver-side query-vector LRU plus the
-      // persisted grown-root serving frames (the reloadable state this
-      // engine keeps warm between requests).
+      // caches. Here that is the driver-side query-vector LRU, the
+      // persisted grown-root serving frames and the served tables'
+      // parquet schemas (the reloadable state this engine keeps warm
+      // between requests).
       SearchEngine.invalidateQueryVecCache()
       graft.search.GrownServing.clear()
+      ServedParquet.clear()
       ok("""{"status":"success","message":"All search caches cleared"}""")
 
     case "/api/search/compare" => // Q10 (search.py:293-349)
@@ -513,8 +515,8 @@ object Api {
         case _ =>
           val info = graft.index.IvfIndex.ensure(spark, dir)
           graft.search.Ann.ivfTopKBatched(
-            spark.read.parquet(info.assignedPath),
-            spark.read.parquet(info.centroidsPath), queries, 3, count + 1)
+            ServedParquet.read(spark, info.assignedPath),
+            ServedParquet.read(spark, info.centroidsPath), queries, 3, count + 1)
       })
       // ≤ 64·(count+1) rows by construction; drop each query's own point
       // and trim back to `count` driver-side. EWMA times the collect —
@@ -850,7 +852,7 @@ object Api {
     * frequencies identical to a full-corpus tokenize+aggregate, paid once
     * at index build. Serves /api/suggest and /api/spell. */
   private def termStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${Bm25Index.ensure(spark, dir)}/termstats")
+    ServedParquet.read(spark, s"${Bm25Index.ensure(spark, dir)}/termstats")
       // (term, df) projection: the v3 artifact also carries the MaxScore
       // `maxw` column, which these routes don't read — and whose presence
       // must not shift the routes' positional row access

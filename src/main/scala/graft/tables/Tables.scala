@@ -17,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ServedParquet.read(spark, s"$dir/$name.parquet")
 
   def documents(spark: SparkSession, dir: String): DataFrame =
     apply(spark, dir, "documents")

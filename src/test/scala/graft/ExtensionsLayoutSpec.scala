@@ -126,4 +126,29 @@ class ExtensionsLayoutSpec extends SparkSpec {
       "graft.tools.ProbeCores", "graft.tools.ProbeServingSlope",
       "graft.tools.ScaleSlope"), mains)
   }
+
+  test("served reads: search/ and serve/ read parquet only through ServedParquet, except mutable paths") {
+    // A raw `read.parquet` infers the schema with a footer-read Spark job
+    // on every call; per-request reads of immutable served paths go
+    // through graft.tables.ServedParquet instead. Only reads of paths
+    // whose schema can change in place stay raw, each named here.
+    val allowed = Map(
+      "serve/Api.scala" -> Seq("spark.read.parquet(target)")) // /api/load-data target
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), root.toAbsolutePath)
+    val raw = Seq("search", "serve").flatMap { sub =>
+      val files = Files.walk(root.resolve(sub))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap { f =>
+          val rel = root.relativize(f).toString
+          Files.readAllLines(f).asScala.zipWithIndex
+            .filter { case (line, _) => line.contains(".read.parquet(") }
+            .filterNot { case (line, _) =>
+              allowed.getOrElse(rel, Nil).exists(line.contains) }
+            .map { case (line, i) => s"$rel:${i + 1}: ${line.trim}" }
+        }
+      finally files.close()
+    }
+    assert(raw.isEmpty, raw.mkString("\n"))
+  }
 }

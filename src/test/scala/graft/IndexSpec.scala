@@ -541,7 +541,7 @@ class IndexSpec extends SparkSpec {
     assert(e.getMessage.contains("MaxMmrCandidates"), e.getMessage)
   }
 
-  test("incremental ivf: grown index == monolithic assignment, crash-safe, compacted == grown") {
+  test("incremental ivf: grown index == monolithic assignment, crash-safe, full-folded == grown") {
     import graft.index.IncrementalIvf
     import graft.search.Ann
     val emb = Tables.embeddings(spark, Sf0001)
@@ -720,7 +720,7 @@ class IndexSpec extends SparkSpec {
     assert(state() == once)
   }
 
-  test("incremental bm25 delete: survivors only, STALE stats until compact recomputes them (Lucene deleted-doc semantics)") {
+  test("incremental bm25 delete: survivors only, STALE stats until a full fold recomputes them (Lucene deleted-doc semantics)") {
     import graft.index.IncrementalBm25
     import spark.implicits._
     val all = Tables.documents(spark, Sf0001)
@@ -755,7 +755,7 @@ class IndexSpec extends SparkSpec {
     assert(hits(root).map(_._1).toSet == after.map(_._1).toSet)
   }
 
-  test("incremental ivf delete: filtered read == rebuild without deleted (exact), compact reclaims") {
+  test("incremental ivf delete: filtered read == rebuild without deleted (exact), full fold reclaims") {
     import graft.index.IncrementalIvf
     import graft.search.Ann
     import spark.implicits._
@@ -789,7 +789,7 @@ class IndexSpec extends SparkSpec {
       .where(col("vec_id").isin(dels: _*)).count() == 0)
   }
 
-  test("incremental knn delete: mark-and-filter reads with rank holes, idempotent replay, compact reclaims + clears the ledger") {
+  test("incremental knn delete: mark-and-filter reads with rank holes, idempotent replay, reclaimFold reclaims + clears the ledger") {
     import graft.index.IncrementalKnn
     import graft.search.Ann
     import spark.implicits._
@@ -908,7 +908,7 @@ class IndexSpec extends SparkSpec {
       .where(col("vec_id") === 9L).count() == 1)
   }
 
-  test("incremental bm25 upsert: new text serves immediately, old gone; compact catches the stats up to a fresh build over current") {
+  test("incremental bm25 upsert: new text serves immediately, old gone; a full fold catches the stats up to a fresh build over current") {
     import graft.index.IncrementalBm25
     import spark.implicits._
     val all = Tables.documents(spark, Sf0001).select(col("doc_id"), col("text"))
@@ -1148,7 +1148,7 @@ class IndexSpec extends SparkSpec {
     assert(rows(IncrementalKnn.edges(spark, root, 5)) == healed)
   }
 
-  test("incremental knn mutation-sequence property: random delete/upsert/append/repair/compact keeps the serving invariants") {
+  test("incremental knn mutation-sequence property: random delete/upsert/append/repair/reclaimFold keeps the serving invariants") {
     // the op space between the hand-built lifecycle tests: seeded random
     // sequences WITHOUT a repair after every delete (the CDC loop always
     // heals same-trigger; here the stale mid-states are exercised).
@@ -1266,7 +1266,7 @@ class IndexSpec extends SparkSpec {
     }
   }
 
-  test("incremental knn graph: grown == whole-corpus rebuild, compacted == grown") {
+  test("incremental knn graph: grown == whole-corpus rebuild, reclaimFold == grown") {
     import graft.index.IncrementalKnn
     import graft.search.Ann
     val emb = Tables.embeddings(spark, Sf0001)
@@ -1774,7 +1774,7 @@ class IndexSpec extends SparkSpec {
     assert(SegmentStore.danglingManifestRefs(snap).nonEmpty)
   }
 
-  test("incremental bm25 tail-fold: partial fold preserves reads + stale stats, full fold == compact's stats catch-up") {
+  test("incremental bm25 tail-fold: partial fold preserves reads + stale stats, full fold == a fresh build's stats") {
     import graft.index.{IncrementalBm25, SegmentStore}
     import spark.implicits._
     val all = Tables.documents(spark, Sf0001)

@@ -817,4 +817,44 @@ class ServeApiSpec extends SparkSpec {
     // fresh JVM) rebuilds virgin instead of reading a mutated corpus
     graft.index.IndexCatalog.invalidate(Sf0001, TfIdfGraphIndex.IncName)
   }
+
+  test("warm requests: dense/sparse/hybrid/fusion/filtered run 2/2/3/4/3 jobs, none a parquet schema inference") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "serve-api-warm-jobs"
+    // stage names of each job the tagged request started
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.add(e.stageInfos.map(_.name))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val q = "spark join filter"
+      val routes = Seq(
+        ("dense", "/api/query", Seq("mode" -> "dense"), 2),
+        ("sparse", "/api/query", Seq("mode" -> "sparse"), 2),
+        ("hybrid", "/api/query", Seq("mode" -> "hybrid"), 3),
+        ("fusion", "/api/search/fusion", Seq.empty, 4),
+        ("filtered", "/api/query",
+          Seq("mode" -> "dense", "filter_field" -> "lang", "filter_value" -> "en"), 3))
+      for ((name, path, extra, expected) <- routes) {
+        val params = Seq("q" -> q, "count" -> "10") ++ extra
+        assert(get(path, params: _*).status == 200, name) // untimed first call
+        org.apache.spark.TestBus.drain(sc)
+        jobs.clear()
+        sc.addJobTag(tag)
+        val r = try get(path, params: _*) finally sc.removeJobTag(tag)
+        assert(r.status == 200, s"$name: ${r.body}")
+        org.apache.spark.TestBus.drain(sc)
+        val seen = jobs.asScala.toSeq
+        assert(!seen.flatten.exists(_.startsWith("parquet at")),
+          s"$name ran a schema-inference job: $seen")
+        assert(seen.size == expected, s"$name: ${seen.size} jobs, want $expected: $seen")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -443,7 +443,7 @@ class StreamingSpec extends SparkSpec {
       s"tail-fold text-graph CDC diverged: served ${served.size} vs rebuilt ${rebuilt.size}")
   }
 
-  test("indexCdcIngest convergence property: random interleaved I/U/D changelog, then compact == fresh BM25 build over the net document set") {
+  test("indexCdcIngest convergence property: random interleaved I/U/D changelog, then full fold == fresh BM25 build over the net document set") {
     // the BM25 member of the family sweep: pre-fold stats are stale by
     // design (Lucene deleted-doc semantics), so the family's convergence
     // statement is full-fold(root) == init(net docs) — the
@@ -1513,7 +1513,7 @@ class StreamingSpec extends SparkSpec {
     assert(got11.length == 1 && got11.head == want11.head)
   }
 
-  test("knnIngest seek layout: graphTopKSeek == one-plan walk with pushed In(src) on a grown AND a compacted graph") {
+  test("knnIngest seek layout: graphTopKSeek == one-plan walk with pushed In(src) on a grown graph AND after reclaimFold") {
     implicit val sqlCtx = spark.sqlContext
     import graft.index.IncrementalKnn
     import graft.search.Ann
